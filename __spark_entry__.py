@@ -22,58 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from cloud_ocr_summarizer_spark.plans import oracles as _oracles
 from cloud_ocr_summarizer_spark.plans import queries as _queries
 
-_PKG_ZIP: str | None = None
-
-
-def _ship_package(spark: SparkSession) -> None:
-    """Make cloud_ocr_summarizer_spark importable in Python WORKERS.
-
-    Pandas/Arrow UDF closures reference module-level functions, which
-    cloudpickle serializes by module name — so workers must import the
-    package.  When the harness's driver process was not launched from the
-    repo root, worker PYTHONPATH doesn't include it and every
-    mapInPandas/mapInArrow stage dies with ModuleNotFoundError.  Shipping
-    a zip via addPyFile fixes this for any session, local or clustered
-    (the spark-submit jobs do the same thing with --py-files).
-    """
-    if getattr(spark, "_cos_pkg_shipped", False):
-        return
-    import shutil
-    import tempfile
-
-    try:
-        sc = spark.sparkContext
-    except Exception:
-        # Spark Connect sessions have no sparkContext; there the classic
-        # cwd/PYTHONPATH route is the only option — don't break the
-        # contract for the row-local queries that need no worker import.
-        spark._cos_pkg_shipped = True  # type: ignore[attr-defined]
-        return
-    try:
-        global _PKG_ZIP
-        if _PKG_ZIP is None:
-            # fresh private dir per process: never reuses a stale or
-            # half-written zip left by another (possibly pid-recycled)
-            # process in /tmp
-            base = os.path.join(tempfile.mkdtemp(prefix="cos_spark_pkg_"), "pkg")
-            _PKG_ZIP = shutil.make_archive(
-                base, "zip", root_dir=_REPO_ROOT, base_dir="cloud_ocr_summarizer_spark"
-            )
-        sc.addPyFile(_PKG_ZIP)
-    except Exception as exc:
-        # A real shipping failure (full/unwritable TMPDIR, addPyFile
-        # refusal) stays audible — a later worker ModuleNotFoundError
-        # needs this warning to point at the cause.
-        import warnings
-
-        warnings.warn(
-            "could not ship cloud_ocr_summarizer_spark to workers "
-            f"({type(exc).__name__}: {exc}); pandas/Arrow UDF stages "
-            "will require the package on worker PYTHONPATH",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    spark._cos_pkg_shipped = True  # type: ignore[attr-defined]
+# Pandas/Arrow UDF closures are pickled by module name, so WORKERS must
+# import the package: ship it via addPyFile (audible RuntimeWarning on
+# failure; no-op on Spark Connect).
+from cloud_ocr_summarizer_spark.session import _ship_package
 
 
 def entry(spark: SparkSession) -> DataFrame:

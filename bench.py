@@ -45,7 +45,12 @@ def main() -> int:
     cache_base = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/spark_graft_bench")
     os.makedirs(cache_base, exist_ok=True)
 
-    spark = get_spark(app_name="bench", cores=cpus)
+    # no console progress bars: the last stdout line must be the JSON
+    spark = get_spark(
+        app_name="bench",
+        cores=cpus,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
 
     from pyspark.sql import functions as F
 
@@ -115,8 +120,10 @@ def main() -> int:
     # q10-q15b measure the 120k-doc documents-shaped derived corpus
     # (VERDICT r3 item 6: the sf documents table is 5k rows — fixed
     # overhead dominated and scale-dishonest for composed jobs).  NOT
-    # comparable with BENCH_r03's q10-q15b, which measured 5k docs;
-    # see bench_docs_per_query in the output JSON.
+    # comparable with BENCH_r03's q10-q15b, which measured 5k docs.
+    # Corpus per row: q1-q2 and q10-q26 (except q16/q17) use the derived
+    # n_docs corpus; q6, q8, q9, q16, q17 the sf documents table (~5k
+    # rows at sf0.1); q3, q4, q5, q7 the sf relational tables.
     from tools.bench_html_layout import build_corpus
 
     from cloud_ocr_summarizer_spark.datagen import (
@@ -327,33 +334,6 @@ def main() -> int:
         "bench_docs": n_docs,
         "cpus": cpus,
         "docs_per_sec_extraction": docs_per_sec,
-        # scale-honesty: which corpus each row measured (the sf0.1
-        # documents table is only ~5k rows; composed rows use the
-        # derived 120k corpus as of round 4 — not comparable with
-        # BENCH_r03 q10-q15b)
-        "bench_docs_per_query": {
-            "derived_corpus_120k": [
-                "q18_pagerank", "q19_bow_classify", "q20_warc_extract",
-                "q21_crawl_frontier", "q22_html_tables", "q23_top_terms",
-                "q24_hits_scores", "q25_redirect_resolve", "q26_c4_lines",
-                "q1_extract_flagship", "q1b_extract_expression",
-                "q1c_extract_window", "q2_main_content_detailed",
-                "q10_html_main_content", "q11_layout_reading_order",
-                "q11b_layout_rowlocal", "q12_chunk_documents",
-                "q13_extract_web", "q13b_extract_web_fused",
-                "q14_pdf_text_spans", "q15_extract_web_classified",
-                "q15b_extract_web_classified_fused",
-            ],
-            "sf_documents_table": [
-                "q6_dedup_minhash", "q8_curation_pipeline",
-                "q9_language_id", "q16_curation_gates",
-                "q17_dedup_cross_doc",
-            ],
-            "sf_relational_tables": [
-                "q3_pricing_summary", "q4_revenue_by_nation",
-                "q5_events_sessionize", "q7_knn_bruteforce",
-            ],
-        },
     }
     # include the last recorded N->4N scaling run (tools/bench_scaling.py)
     scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -366,7 +346,8 @@ def main() -> int:
             "localN": s.get("localN"),
             "local4N": s.get("local4N"),
         }
-    print(json.dumps(out))
+    # compact separators: the line must fit a 2,000-char log tail
+    print(json.dumps(out, separators=(",", ":")))
     return 0
 
 

@@ -1,13 +1,13 @@
 """Per-partition lineage metrics (north_rule; FIXTURES.md §4).
 
 Schema: (run_id, snapshot_id, partition_id, doc_count, span_count, bytes,
-wall_time_s) — one row per input partition of the extraction job.
+wall_time_s) — one row per partition of the job's output.
 
-Cheap path: ``partition_metrics`` aggregates by spark_partition_id() —
-pure DataFrame, one extra agg over the same scan.  Timed path:
-``timed_partition_metrics`` measures wall time inside a mapInPandas pass
-(per-partition side-channel emitted as tagged rows — no driver accumulators,
-works at any executor count).
+``partition_metrics`` measures inside the tasks (a mapInPandas pass that
+emits one tagged row per partition — no driver accumulators, works at any
+executor count).  The production jobs run it as the FIRST action on their
+persisted output (``plans.flagship.commit_snapshot``), so the partition's
+compute is pipelined into the timed task and ``wall_time_s`` covers it.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ import time
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
 
 LINEAGE_SCHEMA = T.StructType(
@@ -33,65 +33,25 @@ LINEAGE_SCHEMA = T.StructType(
 
 
 def partition_metrics(
-    extracted: DataFrame, *, run_id: str, snapshot_id: int = 0
+    out: DataFrame,
+    *,
+    run_id: str,
+    span_count: Column,
+    span_bytes: Column,
 ) -> DataFrame:
-    """Lineage rows via groupBy(spark_partition_id()) over the extracted
-    output (doc_id, spans_out).  wall_time_s is null on this cheap path."""
-    span_bytes = F.aggregate(
-        F.col("spans_out"),
-        F.lit(0).cast("long"),
-        lambda acc, s: acc
-        + F.coalesce(F.octet_length(s["text"]), F.lit(0))
-        + F.coalesce(F.octet_length(s["media_ref"]), F.lit(0)),
-    )
-    return (
-        extracted.select(
-            F.spark_partition_id().alias("partition_id"),
-            F.size("spans_out").alias("n_spans"),
-            span_bytes.alias("n_bytes"),
-        )
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.sum("n_spans").cast("long").alias("span_count"),
-            F.sum("n_bytes").cast("long").alias("bytes"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(snapshot_id).cast("long").alias("snapshot_id"),
-            "partition_id",
-            "doc_count",
-            "span_count",
-            "bytes",
-            F.lit(None).cast("double").alias("wall_time_s"),
-        )
-    )
+    """Lineage rows (one per partition) over ``out`` (one row per
+    document), with real per-partition wall time.  ``snapshot_id`` is 0:
+    the committing job stamps it once the snapshot exists.
 
-
-def timed_partition_metrics(
-    extracted: DataFrame, *, run_id: str, snapshot_id: int = 0
-) -> DataFrame:
-    """Lineage rows measured inside the tasks (mapInPandas side-channel):
-    includes real per-partition wall time.
-
-    Span/byte counting runs JVM-side (the same codegen'd octet_length
-    aggregate as the cheap path) BEFORE the Python stage; the pandas task
-    only sums two int columns and stamps the clock.  Because Spark
-    pipelines the upstream computation into this task's iterator, the
-    measured wall time still covers the partition's full compute, but the
-    Python side never touches a span (the old version looped every span
-    of every row in Python — ~the whole job's cost a second time).
+    ``span_count`` / ``span_bytes`` are the caller's per-document
+    expressions; they are evaluated JVM-side BEFORE the Python stage, so
+    the pandas task only sums two int columns and stamps the clock.
+    Spark pipelines the upstream computation into this task's input
+    iterator, so the measured time covers the partition's full compute.
     """
-    span_bytes = F.aggregate(
-        F.col("spans_out"),
-        F.lit(0).cast("long"),
-        lambda acc, s: acc
-        + F.coalesce(F.octet_length(s["text"]), F.lit(0))
-        + F.coalesce(F.octet_length(s["media_ref"]), F.lit(0)),
-    )
-    pre = extracted.select(
-        F.size("spans_out").cast("long").alias("n_spans"),
-        span_bytes.alias("n_bytes"),
+    pre = out.select(
+        span_count.cast("long").alias("n_spans"),
+        span_bytes.cast("long").alias("n_bytes"),
     )
 
     def measure(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -109,7 +69,7 @@ def timed_partition_metrics(
         yield pd.DataFrame(
             {
                 "run_id": [run_id],
-                "snapshot_id": [snapshot_id],
+                "snapshot_id": [0],
                 "partition_id": [pid],
                 "doc_count": [docs],
                 "span_count": [spans],

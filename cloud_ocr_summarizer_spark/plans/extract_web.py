@@ -159,43 +159,6 @@ def extract_web_documents_classified_fused(docs: DataFrame) -> DataFrame:
     )
 
 
-def web_partition_metrics(
-    web: DataFrame, *, run_id: str, snapshot_id: int = 0
-) -> DataFrame:
-    """LINEAGE_SCHEMA-compatible rows for the composed output.
-
-    Same contract as ``lineage.partition_metrics`` (one row per
-    partition: run, snapshot, doc/span counts, bytes), computed over the
-    composed schema — span_count from the span branch, bytes from the
-    stripped main text.  wall_time_s is null on this cheap path, exactly
-    as on the flagship's.
-    """
-    return (
-        web.select(
-            F.spark_partition_id().alias("partition_id"),
-            F.col("n_spans").cast("long").alias("n_spans"),
-            F.coalesce(F.octet_length("main_text"), F.lit(0))
-            .cast("long")
-            .alias("n_bytes"),
-        )
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.sum("n_spans").cast("long").alias("span_count"),
-            F.sum("n_bytes").cast("long").alias("bytes"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(snapshot_id).cast("long").alias("snapshot_id"),
-            "partition_id",
-            "doc_count",
-            "span_count",
-            "bytes",
-            F.lit(None).cast("double").alias("wall_time_s"),
-        )
-    )
-
-
 def run_web(
     spark: SparkSession,
     docs: DataFrame,
@@ -216,11 +179,12 @@ def run_web(
     ``pipeline`` swaps the per-batch plan (default: the zero-shuffle
     fused twin; pass ``extract_web_documents_classified`` to run the
     full-Readability-classifier variant under the same resume/lineage
-    contract — any (docs)->DataFrame with doc_id/main_text/n_spans
-    columns works).  Returns a ``FlagshipResult``.
+    contract — any (docs)->DataFrame with doc_id/main_text columns
+    works; its n_spans column, if any, is the lineage span count).
+    Returns a ``FlagshipResult``.
     """
     from cloud_ocr_summarizer_spark.operators.skew import salted_repartition
-    from cloud_ocr_summarizer_spark.plans.flagship import FlagshipResult
+    from cloud_ocr_summarizer_spark.plans.flagship import commit_snapshot
     from cloud_ocr_summarizer_spark.sources.checkpoint import (
         SnapshotSink,
         pending_docs,
@@ -235,22 +199,15 @@ def run_web(
     # zero-shuffle plan (stats carried through the Arrow stage) is
     # strictly better here
     make_web = pipeline if pipeline is not None else extract_web_documents_fused
-    web = make_web(todo).persist()
-    try:
-        n = web.count()
-        if n == 0:
-            return FlagshipResult(run_id=run_id, snapshot_id=None, docs_written=0)
-        snapshot_id = sink.append(web, run_id=run_id)
-        if lineage_root or lineage_sink is not None:
-            lsink = (
-                lineage_sink
-                if lineage_sink is not None
-                else SnapshotSink(lineage_root)
-            )
-            lsink.append(
-                web_partition_metrics(web, run_id=run_id, snapshot_id=snapshot_id),
-                run_id=run_id,
-            )
-        return FlagshipResult(run_id=run_id, snapshot_id=snapshot_id, docs_written=n)
-    finally:
-        web.unpersist()
+    web = make_web(todo)
+    if lineage_sink is None and lineage_root:
+        lineage_sink = SnapshotSink(lineage_root)
+    return commit_snapshot(
+        web,
+        run_id=run_id,
+        sink=sink,
+        lineage_sink=lineage_sink,
+        # pipelines without a span branch (e.g. WARC ingest) count none
+        span_count=F.col("n_spans") if "n_spans" in web.columns else F.lit(0),
+        span_bytes=F.coalesce(F.octet_length("main_text"), F.lit(0)),
+    )

@@ -8,7 +8,8 @@ Physical shape (SURVEY.md §4.4):
     -> [salted repartition]             [only before batch-UDF stages]
     -> extract_spans (row-local)        [0 shuffles]
     -> [classify detailed via rows]     [Arrow batches]
-    -> sink.append(extracted)           [snapshot commit]
+    -> persist + partition_metrics      [first action: timed, the count]
+    -> sink.append(extracted)           [snapshot commit, from the cache]
     -> sink.append(lineage)             [metrics table]
 
 Run it twice and the second run writes nothing new (idempotent resume).
@@ -17,11 +18,13 @@ Run it twice and the second run writes nothing new (idempotent resume).
 from __future__ import annotations
 
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from cloud_ocr_summarizer_spark.lineage import timed_partition_metrics
+from cloud_ocr_summarizer_spark.lineage import LINEAGE_SCHEMA, partition_metrics
 from cloud_ocr_summarizer_spark.operators.extract import extract_spans
 from cloud_ocr_summarizer_spark.operators.skew import salted_repartition
 from cloud_ocr_summarizer_spark.sources.checkpoint import SnapshotSink, pending_docs
@@ -32,6 +35,61 @@ class FlagshipResult:
     run_id: str
     snapshot_id: int | None
     docs_written: int
+
+
+def span_octets() -> Column:
+    """Per-doc bytes of ``spans_out``: span text plus media_ref octets."""
+    return F.aggregate(
+        F.col("spans_out"),
+        F.lit(0).cast("long"),
+        lambda acc, s: acc
+        + F.coalesce(F.octet_length(s["text"]), F.lit(0))
+        + F.coalesce(F.octet_length(s["media_ref"]), F.lit(0)),
+    )
+
+
+def commit_snapshot(
+    out: DataFrame,
+    *,
+    run_id: str,
+    sink,
+    lineage_sink,
+    span_count: Column,
+    span_bytes: Column,
+    after_commit: Callable[[DataFrame], None] | None = None,
+) -> FlagshipResult:
+    """Commit one run's output as a snapshot plus its lineage rows.
+
+    The lineage measurement is the FIRST action on the persisted output:
+    it fills the cache inside the timed tasks (so ``wall_time_s`` covers
+    the partition's compute), and its doc counts are the run's count —
+    no separate ``count()`` pass.  Zero docs commit nothing.  The
+    snapshot is written from the cache; ``after_commit`` sees the cached
+    output before it is released (re-evaluating ``out`` after the commit
+    would re-run the resume filter against the new snapshot and find
+    nothing).  ``lineage_sink`` None skips the lineage write only.
+    """
+    cached = out.persist()
+    try:
+        metrics = partition_metrics(
+            cached, run_id=run_id, span_count=span_count, span_bytes=span_bytes
+        ).toPandas()
+        docs = int(metrics["doc_count"].sum())
+        if docs == 0:
+            return FlagshipResult(run_id=run_id, snapshot_id=None, docs_written=0)
+        snapshot_id = sink.append(cached, run_id=run_id)
+        if after_commit is not None:
+            after_commit(cached)
+        if lineage_sink is not None:
+            metrics["snapshot_id"] = snapshot_id
+            # from pandas: an Arrow-backed local relation, no Python tasks
+            lineage_sink.append(
+                out.sparkSession.createDataFrame(metrics, LINEAGE_SCHEMA),
+                run_id=run_id,
+            )
+        return FlagshipResult(run_id=run_id, snapshot_id=snapshot_id, docs_written=docs)
+    finally:
+        cached.unpersist()
 
 
 def run_flagship(
@@ -68,37 +126,28 @@ def run_flagship(
         todo = salted_repartition(todo, repartition_to)
     extracted = extract_spans(todo, min_confidence=min_confidence)
 
-    # Spark DataFrames recompute per action; persist so the count, the
-    # output write and the lineage pass share one execution.
-    extracted = extracted.persist()
-    docs = extracted.count()
-    if docs == 0:
-        extracted.unpersist()
-        return FlagshipResult(run_id=run_id, snapshot_id=None, docs_written=0)
+    rsink = raw_debug_sink
+    if rsink is None and raw_debug_root:
+        rsink = SnapshotSink(raw_debug_root)
 
-    snapshot_id = sink.append(extracted, run_id=run_id)
-    if raw_debug_root or raw_debug_sink is not None:
+    def capture_raw(cached: DataFrame) -> None:
         # debug capture of the raw input spans for THIS run's doc set
-        # (left_semi against the PERSISTED extracted ids keeps it exactly
-        # the processed docs even though `todo` re-executes lazily here).
-        # Deliberate trade: this re-scans the input once — only when the
-        # debug sink is enabled.  The alternative (carrying raw spans
-        # through extraction) would widen every row of every run to save
-        # a scan on the rare debug run.
-        raw = input_df.join(
-            extracted.select("doc_id"), on="doc_id", how="left_semi"
-        )
-        rsink = raw_debug_sink if raw_debug_sink is not None else SnapshotSink(
-            raw_debug_root
-        )
+        # (left_semi against the CACHED extracted ids).  Deliberate
+        # trade: this re-scans the input once — only when the debug sink
+        # is enabled.  The alternative (carrying raw spans through
+        # extraction) would widen every row of every run to save a scan
+        # on the rare debug run.
+        raw = input_df.join(cached.select("doc_id"), on="doc_id", how="left_semi")
         rsink.append(raw, run_id=run_id)
-    if lineage_root or lineage_sink is not None:
-        metrics = timed_partition_metrics(
-            extracted, run_id=run_id, snapshot_id=snapshot_id
-        )
-        lsink = lineage_sink if lineage_sink is not None else SnapshotSink(
-            lineage_root
-        )
-        lsink.append(metrics, run_id=run_id)
-    extracted.unpersist()
-    return FlagshipResult(run_id=run_id, snapshot_id=snapshot_id, docs_written=docs)
+
+    if lineage_sink is None and lineage_root:
+        lineage_sink = SnapshotSink(lineage_root)
+    return commit_snapshot(
+        extracted,
+        run_id=run_id,
+        sink=sink,
+        lineage_sink=lineage_sink,
+        span_count=F.size("spans_out"),
+        span_bytes=span_octets(),
+        after_commit=capture_raw if rsink is not None else None,
+    )

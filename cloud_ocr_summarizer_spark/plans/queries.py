@@ -616,12 +616,17 @@ def q_span_geometry_px(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1 lineage: per-partition metrics over a deterministic repartition
-    (rows-only check; totals pinned in tests/test_pipeline.py)."""
+    (rows-only check — wall time is measured in the tasks; totals pinned
+    in tests/test_pipeline.py)."""
     from cloud_ocr_summarizer_spark.lineage import partition_metrics
+    from cloud_ocr_summarizer_spark.plans.flagship import span_octets
 
     extracted = extract_spans(_documents_spans(spark, sf_dir), with_stats=False)
     return partition_metrics(
-        extracted.repartition(8, "doc_id"), run_id="driver-check", snapshot_id=0
+        extracted.repartition(8, "doc_id"),
+        run_id="driver-check",
+        span_count=F.size("spans_out"),
+        span_bytes=span_octets(),
     )
 
 

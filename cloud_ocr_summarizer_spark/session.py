@@ -72,8 +72,8 @@ def _ship_package(spark: SparkSession) -> None:
     someone runs bench.py (or any entry point using this factory) from
     another directory and every mapInPandas/mapInArrow stage dies with
     ModuleNotFoundError.  Ship a zip via addPyFile once per session —
-    the same mechanism as ``__spark_entry__`` and the spark-submit
-    jobs' ``--py-files``."""
+    ``__spark_entry__`` calls this for sessions it did not build; the
+    spark-submit jobs use ``--py-files`` for the same effect."""
     if getattr(spark, "_cos_pkg_shipped", False):
         return
     import shutil

@@ -97,10 +97,16 @@ def test_run_web_idempotent_resume(spark, tmp_path):
 
     r2 = run_web(spark, docs, output_root=out, lineage_root=lin)
     assert r2.docs_written == 0 and r2.snapshot_id is None
+    # the no-op rerun commits no lineage snapshot either
+    assert [s["run_id"] for s in SnapshotSink(lin).snapshots()] == [r1.run_id]
 
     committed = SnapshotSink(out).read_committed(spark)
     assert committed.count() == 60
     metrics = SnapshotSink(lin).read_committed(spark)
+    rows = metrics.collect()
+    assert {r["snapshot_id"] for r in rows} == {r1.snapshot_id}
+    # wall time is measured in the task that computes each partition
+    assert all(r["wall_time_s"] is not None and r["wall_time_s"] >= 0 for r in rows)
     agg = metrics.agg(
         F.sum("doc_count").alias("d"), F.sum("span_count").alias("s")
     ).first()
