@@ -5,9 +5,10 @@ wall_time_s) — one row per partition of the job's output.
 
 ``partition_metrics`` measures inside the tasks (a mapInPandas pass that
 emits one tagged row per partition — no driver accumulators, works at any
-executor count).  The production jobs run it as the FIRST action on their
-persisted output (``plans.flagship.commit_snapshot``), so the partition's
-compute is pipelined into the timed task and ``wall_time_s`` covers it.
+executor count).  The production jobs run it, when they have a lineage
+sink, as the FIRST action on their persisted output
+(``plans.flagship.commit_snapshot``), so the partition's compute is
+pipelined into the timed task and ``wall_time_s`` covers it.
 """
 
 from __future__ import annotations

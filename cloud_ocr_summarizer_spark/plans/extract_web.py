@@ -180,7 +180,7 @@ def run_web(
     fused twin; pass ``extract_web_documents_classified`` to run the
     full-Readability-classifier variant under the same resume/lineage
     contract — any (docs)->DataFrame with doc_id/main_text columns
-    works; its n_spans column, if any, is the lineage span count).
+    works; lineage needs an n_spans column, the lineage span count).
     Returns a ``FlagshipResult``.
     """
     from cloud_ocr_summarizer_spark.operators.skew import salted_repartition
@@ -207,7 +207,6 @@ def run_web(
         run_id=run_id,
         sink=sink,
         lineage_sink=lineage_sink,
-        # pipelines without a span branch (e.g. WARC ingest) count none
-        span_count=F.col("n_spans") if "n_spans" in web.columns else F.lit(0),
+        span_count=F.col("n_spans"),
         span_bytes=F.coalesce(F.octet_length("main_text"), F.lit(0)),
     )

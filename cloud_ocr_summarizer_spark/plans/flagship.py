@@ -8,7 +8,8 @@ Physical shape (SURVEY.md §4.4):
     -> [salted repartition]             [only before batch-UDF stages]
     -> extract_spans (row-local)        [0 shuffles]
     -> [classify detailed via rows]     [Arrow batches]
-    -> persist + partition_metrics      [first action: timed, the count]
+    -> persist + partition_metrics      [first action: timed, the count;
+                                         count() when lineage is off]
     -> sink.append(extracted)           [snapshot commit, from the cache]
     -> sink.append(lineage)             [metrics table]
 
@@ -60,27 +61,32 @@ def commit_snapshot(
 ) -> FlagshipResult:
     """Commit one run's output as a snapshot plus its lineage rows.
 
-    The lineage measurement is the FIRST action on the persisted output:
-    it fills the cache inside the timed tasks (so ``wall_time_s`` covers
-    the partition's compute), and its doc counts are the run's count —
-    no separate ``count()`` pass.  Zero docs commit nothing.  The
-    snapshot is written from the cache; ``after_commit`` sees the cached
-    output before it is released (re-evaluating ``out`` after the commit
-    would re-run the resume filter against the new snapshot and find
-    nothing).  ``lineage_sink`` None skips the lineage write only.
+    With a ``lineage_sink``, the lineage measurement is the FIRST action
+    on the persisted output: it fills the cache inside the timed tasks
+    (so ``wall_time_s`` covers the partition's compute), and its doc
+    counts are the run's count — no separate ``count()`` pass.  Without
+    one, a JVM ``count()`` fills the cache and no Python task runs.
+    Zero docs commit nothing.  The snapshot is written from the cache;
+    ``after_commit`` sees the cached output before it is released
+    (re-evaluating ``out`` after the commit would re-run the resume
+    filter against the new snapshot and find nothing).
     """
     cached = out.persist()
     try:
-        metrics = partition_metrics(
-            cached, run_id=run_id, span_count=span_count, span_bytes=span_bytes
-        ).toPandas()
-        docs = int(metrics["doc_count"].sum())
+        if lineage_sink is None:
+            metrics = None
+            docs = cached.count()
+        else:
+            metrics = partition_metrics(
+                cached, run_id=run_id, span_count=span_count, span_bytes=span_bytes
+            ).toPandas()
+            docs = int(metrics["doc_count"].sum())
         if docs == 0:
             return FlagshipResult(run_id=run_id, snapshot_id=None, docs_written=0)
         snapshot_id = sink.append(cached, run_id=run_id)
         if after_commit is not None:
             after_commit(cached)
-        if lineage_sink is not None:
+        if metrics is not None:
             metrics["snapshot_id"] = snapshot_id
             # from pandas: an Arrow-backed local relation, no Python tasks
             lineage_sink.append(
