@@ -14,11 +14,15 @@ Plan shape at scale: two branches over the same documents scan —
 
 * the SPAN branch is entirely row-local (extract_spans + the layout
   fold + media counting never shuffle; one codegen stage per doc), and
-* the DOM branch is one Arrow-batched map stage —
+* the DOM branch is one ``mapInArrow`` stage running the shared
+  Arrow-native DOM kernel (``operators.dom``) —
 
 joined 1:1 on doc_id: a single O(docs) equi-join is the only shuffle in
-the whole pipeline.  Nothing per-row Python outside the DOM tokenizer's
-Arrow batches.
+the whole pipeline.  The ``_fused`` twins carry the span branch's
+row-local stats through that Arrow stage instead: one scan, zero
+Exchanges, and the MapInArrow is the plan's only Python stage.  No
+Python runs per row or per token anywhere: the DOM kernel does
+O(batches) numpy / pyarrow.compute calls.
 """
 
 from __future__ import annotations

@@ -434,3 +434,194 @@ def test_warc_garbage_numeric_headers_null_not_crash(spark):
     assert row.content_length is None
     assert row.http_status is None
     assert row.html == "<html>g</html>"
+
+
+# ---- the Arrow-native kernel: parity fuzz vs a per-doc Python model ----
+
+import random  # noqa: E402
+import re  # noqa: E402
+from collections import Counter  # noqa: E402
+
+import pyarrow as pa  # noqa: E402
+
+from cloud_ocr_summarizer_spark.operators.dom import (  # noqa: E402
+    BOILER_CONTAINERS,
+    _dom_batch,
+    _rule_readability,
+    _utf8_buffers,
+)
+
+# the tokenizer grammar the kernel implements, as a Python regex
+TOKEN_RE = r"(?s)<(/?)([a-zA-Z][a-zA-Z0-9]*)[^>]*>|([^<]+)"
+COMMENT_RE = r"(?s)<!--.*?-->"
+
+
+def _td_sparse(wc, lwc, tc):
+    nc = tc + max(wc - 1, 0)
+    return wc < 7 * max((nc + 79) // 80, 1)
+
+
+MODEL_RULES = {
+    "link": lambda wc, lwc, tc: 2 * lwc > wc,
+    "density": _td_sparse,
+    "readability": lambda wc, lwc, tc: 2 * lwc > wc or _td_sparse(wc, lwc, tc),
+}
+
+
+def _model(html, rule):
+    """One document through re.finditer(TOKEN_RE) and explicit open/close
+    bookkeeping.  ``depth[name]`` is the height of ``name`` on the open
+    stack; an unmatched close takes it below zero (a close is counted,
+    never matched against a specific open), so a later open of that
+    name is balanced by it.  <p> tags inside boilerplate open no block.
+    ``rule`` None is the strip: every non-boilerplate word survives."""
+    depth = Counter()
+    blocks, words_out = [], []  # block: [wc, lwc, tc, words]
+    for m in re.finditer(TOKEN_RE, re.sub(COMMENT_RE, " ", html or "")):
+        slash, name, text = m.groups()
+        boiler = any(depth[c] > 0 for c in BOILER_CONTAINERS)
+        if name is not None:
+            name = name.lower()
+            if name == "p" and boiler:
+                continue
+            depth[name] += -1 if slash else 1
+            if name == "p" and not slash:
+                blocks.append([0, 0, 0, []])
+            continue
+        words = text.split()
+        if boiler:
+            continue
+        if rule is None:
+            words_out += words
+        elif depth["p"] > 0:
+            b = blocks[-1]
+            b[0] += len(words)
+            b[1] += len(words) if depth["a"] > 0 else 0
+            b[2] += sum(map(len, words))
+            b[3] += words
+    if rule is None:
+        return (" ".join(words_out), len(words_out))
+    dropped = [MODEL_RULES[rule](wc, lwc, tc) for wc, lwc, tc, _ in blocks]
+    kept = [w for b, d in zip(blocks, dropped) if not d for w in b[3]]
+    return (" ".join(kept), len(kept), len(blocks), sum(dropped))
+
+
+HOSTILE_ATOMS = [
+    "<p>", "</p>", "<P class=x>", "<p/>", "<a href='#'>", "</a>", "<A>", "</A >",
+    "<nav>", "</nav>", "<NaV>", "<header>", "</header>", "<head>", "</head>",
+    "<aside>", "</Aside>", "<script>", "</script>", "<style>", "</style>",
+    "<footer>", "<Footer id=1>", "</footer>", "<headerx>", "<p1>", "<pre>",
+    "<!-- c -->", "<!--", "-->", "<!---->", "<", ">", "< p>", "</ p>", "</",
+    "<a <b>", "<<p>>", "<1>", "<br/>", "<é>", "x>y", "a<b",
+    " ", "  ", "\n", "\t", "\xa0", "\x1c", "\x85", "　", "​", " ",
+    "word", "alpha beta", "supercalifragilistic", "é", "日本語", "😀", "naïve",
+    "one two three four five six seven eight",
+]
+
+
+def _hostile_rows(seed, n):
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        r = rng.random()
+        html = None if r < 0.03 else "" if r < 0.06 else "".join(
+            rng.choices(HOSTILE_ATOMS, k=rng.randrange(0, 60))
+        )
+        rows.append((i, html))
+    return rows
+
+
+def test_kernel_parity_fuzz_vs_python_model(spark):
+    """All four canonical operators vs the per-doc model on a seeded
+    hostile corpus: stray '<', unterminated comments, swallowed tags,
+    spaced closes, mixed case, unmatched closes, Unicode whitespace
+    (\\xa0, \\x1c, \\x85, U+3000 split words; U+200B does not),
+    multi-byte UTF-8, null and empty documents."""
+    rows = _hostile_rows(20261017, 800)
+    df = spark.createDataFrame(rows, SCHEMA).repartition(3)
+    ops = {
+        None: extract_html_main,
+        "link": extract_html_dense,
+        "density": extract_html_density,
+        "readability": extract_html_classified,
+    }
+    for rule, fn in ops.items():
+        got = {r["doc_id"]: tuple(r)[1:] for r in fn(df).collect()}
+        want = {i: _model(h, rule) for i, h in rows}
+        assert got == want, fn.__name__
+    # the corpus reaches every branch of the model
+    outcomes = [_model(h, "readability") for _, h in rows]
+    assert any(o[3] for o in outcomes) and any(o[1] for o in outcomes)
+    assert any(o[2] > o[3] for o in outcomes)
+
+
+# ---- the kernel's input shapes (no Spark: _dom_batch called directly) --
+
+
+def _batch(ids, html, typ=pa.string()):
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ids, pa.int64()), pa.array(html, typ)], names=["doc_id", "html"]
+    )
+
+
+def _rows(rb, rule=_rule_readability):
+    return [tuple(r.values()) for r in _dom_batch(rb, rule).to_pylist()]
+
+
+def test_kernel_null_and_empty_batches():
+    for html in ([None, None, None], ["", "", ""], [None, "", None]):
+        assert _rows(_batch([7, 3, 5], html)) == [
+            (7, "", 0, 0, 0), (3, "", 0, 0, 0), (5, "", 0, 0, 0),
+        ]
+        assert _rows(_batch([7, 3, 5], html), None) == [(7, "", 0), (3, "", 0), (5, "", 0)]
+
+
+def test_kernel_batch_without_tokens():
+    # a stray '<' is skipped: no tag and no text token in the batch
+    rb = _batch([4, 2, 9, 1], ["<", "<<", "<<<", None])
+    assert _rows(rb) == [
+        (4, "", 0, 0, 0), (2, "", 0, 0, 0), (9, "", 0, 0, 0), (1, "", 0, 0, 0),
+    ]
+    assert _rows(rb, None) == [(4, "", 0), (2, "", 0), (9, "", 0), (1, "", 0)]
+    # tags but no words: blocks exist, every one is dropped
+    assert _rows(_batch([1, 2], ["<p></p><p> </p>", "<nav><p>x</p></nav>"])) == [
+        (1, "", 0, 2, 2), (2, "", 0, 0, 0),
+    ]
+
+
+SHAPE_HTML = [
+    "<p>one two three four five six seven</p>",
+    None,
+    "<nav>skip</nav><p>é ü ï ö ä ß ç</p><p>(c)</p>",
+    "",
+    "<header><p>x</p></header>free <p>a b c d e f g</p>",
+]
+SHAPE_WANT = [
+    (10, "one two three four five six seven", 7, 1, 0),
+    (11, "", 0, 0, 0),
+    (12, "é ü ï ö ä ß ç", 7, 2, 1),
+    (13, "", 0, 0, 0),
+    (14, "a b c d e f g", 7, 1, 0),
+]
+
+
+def test_kernel_sliced_batch_keeps_row_alignment():
+    rb = _batch(list(range(10, 15)), SHAPE_HTML)
+    assert _rows(rb) == SHAPE_WANT
+    for start in range(1, 5):
+        sliced = rb.slice(start, 5 - start)
+        assert sliced.column("html").offset == start
+        assert _rows(sliced) == SHAPE_WANT[start:]
+    # the buffer view itself honours the slice offset
+    offsets, data = _utf8_buffers(rb.column("html").slice(2, 2))
+    assert data[offsets[0] : offsets[1]].tobytes().decode() == SHAPE_HTML[2]
+    assert offsets[2] == offsets[1]
+
+
+def test_kernel_large_string_html():
+    rb = _batch(list(range(10, 15)), SHAPE_HTML, pa.large_string())
+    assert _rows(rb) == SHAPE_WANT
+    assert _rows(rb.slice(2, 3)) == SHAPE_WANT[2:]
+    out = _dom_batch(rb, None)
+    assert out.schema.field("main_text").type == pa.string()
+    assert out.column("doc_id").to_pylist() == list(range(10, 15))

@@ -232,3 +232,22 @@ def test_classified_fused_zero_shuffle_and_equal(spark):
     a = sorted(map(tuple, fused.collect()))
     b = sorted(map(tuple, extract_web_documents_classified(docs).collect()))
     assert a == b and len(a) == 500
+
+
+def test_fused_plans_have_one_arrow_python_stage(spark):
+    """Both fused pipelines: zero Exchanges, and the DOM kernel's
+    MapInArrow is the plan's only Python stage (no MapInPandas, no
+    Python UDF evaluation anywhere)."""
+    import re
+
+    from cloud_ocr_summarizer_spark.plans.extract_web import (
+        extract_web_documents_classified_fused,
+        extract_web_documents_fused,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    for make in (extract_web_documents_fused, extract_web_documents_classified_fused):
+        p = make(docs)._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in p, make.__name__
+        python_stages = re.findall(r"\b(?:MapIn\w+|\w*EvalPython\w*|\w*InPandas\w*)\b", p)
+        assert python_stages == ["MapInArrow"], (make.__name__, python_stages)

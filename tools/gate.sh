@@ -9,6 +9,9 @@ REPO="$PWD"
 echo "== pytest =="
 python -m pytest tests/ -q
 
+echo "== benchmark self-tests =="
+python -m pytest perfbench/tests -q
+
 echo "== oracle sweep, vanilla session from /tmp (driver parity) =="
 (cd /tmp && SPARK_GRAFT_VANILLA=1 python "$REPO/tools/check_oracles.py" /root/testdata/sf0.01)
 
