@@ -3,21 +3,30 @@
 Schema: (run_id, snapshot_id, partition_id, doc_count, span_count, bytes,
 wall_time_s) — one row per partition of the job's output.
 
-``partition_metrics`` measures inside the tasks (a mapInPandas pass that
-emits one tagged row per partition — no driver accumulators, works at any
-executor count).  The production jobs run it, when they have a lineage
-sink, as the FIRST action on their persisted output
-(``plans.flagship.commit_snapshot``), so the partition's compute is
-pipelined into the timed task and ``wall_time_s`` covers it.
+The clock is a per-row JVM column (``System.nanoTime`` through
+``reflect``), so no Python stage runs and the time is read where the
+rows are computed, below the job's persist:
+
+* ``stamp_start`` — the job stamps a START clock on its pending rows at
+  the start of its output stage, and its row-local operators carry the
+  column through (``carried`` names it for ``keep``/``carry`` tuples).
+* ``stamp_end`` — the END clock plus the per-doc span count and bytes,
+  as long columns on the output.
+* ``aggregate`` — one JVM ``groupBy(spark_partition_id())`` over those
+  longs: count, sums, and ``max(end) - min(start)``.
+
+Both clocks must be stamped in the same stage — after the last Exchange
+— because ``nanoTime`` is only comparable within one JVM and only the
+task that computes a partition sees all of its rows.  A pipeline that
+does not carry the start column is measured from its first output row
+(``min(end)``), which misses the time before that row.
 """
 
 from __future__ import annotations
 
-import time
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 LINEAGE_SCHEMA = T.StructType(
@@ -32,6 +41,67 @@ LINEAGE_SCHEMA = T.StructType(
     ]
 )
 
+START = "_lineage_start_ns"
+_END = "_lineage_end_ns"
+_SPANS = "_lineage_spans"
+_BYTES = "_lineage_bytes"
+
+
+def _clock() -> Column:
+    """Per-row monotonic JVM clock in ns.  ``reflect`` is nondeterministic,
+    so Catalyst evaluates it once per row: never constant-folded, never
+    inlined into a consumer."""
+    return F.reflect(F.lit("java.lang.System"), F.lit("nanoTime")).cast("long")
+
+
+def stamp_start(df: DataFrame) -> DataFrame:
+    """``df`` plus the START clock; stamp it after the last Exchange."""
+    return df.withColumn(START, _clock())
+
+
+def carried(df: DataFrame) -> tuple[str, ...]:
+    """The START column if ``df`` has one, for a ``keep``/``carry`` tuple."""
+    return (START,) if START in df.columns else ()
+
+
+def stamp_end(out: DataFrame, *, span_count: Column, span_bytes: Column) -> DataFrame:
+    """``out`` plus the END clock and the per-doc ``span_count`` /
+    ``span_bytes`` as longs.  ``reflect`` keeps this projection out of
+    whole-stage codegen, so its columns are evaluated in order and the
+    clock, the last one, is read after the row's other columns."""
+    return out.select(
+        "*",
+        span_count.cast("long").alias(_SPANS),
+        span_bytes.cast("long").alias(_BYTES),
+        _clock().alias(_END),
+    )
+
+
+def strip(stamped: DataFrame) -> DataFrame:
+    """``stamped`` without the lineage helper columns."""
+    return stamped.drop(START, _END, _SPANS, _BYTES)
+
+
+def aggregate(stamped: DataFrame, *, run_id: str) -> DataFrame:
+    """Lineage rows over a :func:`stamp_end` output, one per NON-EMPTY
+    partition.  ``snapshot_id`` is 0: the committing job stamps it once
+    the snapshot exists (:func:`committed_rows`)."""
+    start = F.col(START) if START in stamped.columns else F.col(_END)
+    return stamped.groupBy(F.spark_partition_id().alias("partition_id")).agg(
+        F.count(F.lit(1)).alias("doc_count"),
+        F.sum(_SPANS).alias("span_count"),
+        F.sum(_BYTES).alias("bytes"),
+        ((F.max(_END) - F.min(start)) / F.lit(1e9)).alias("wall_time_s"),
+    ).select(
+        F.lit(run_id).alias("run_id"),
+        F.lit(0).cast("long").alias("snapshot_id"),
+        "partition_id",
+        "doc_count",
+        "span_count",
+        "bytes",
+        "wall_time_s",
+    )
+
 
 def partition_metrics(
     out: DataFrame,
@@ -40,43 +110,31 @@ def partition_metrics(
     span_count: Column,
     span_bytes: Column,
 ) -> DataFrame:
-    """Lineage rows (one per partition) over ``out`` (one row per
-    document), with real per-partition wall time.  ``snapshot_id`` is 0:
-    the committing job stamps it once the snapshot exists.
-
-    ``span_count`` / ``span_bytes`` are the caller's per-document
-    expressions; they are evaluated JVM-side BEFORE the Python stage, so
-    the pandas task only sums two int columns and stamps the clock.
-    Spark pipelines the upstream computation into this task's input
-    iterator, so the measured time covers the partition's full compute.
-    """
-    pre = out.select(
-        span_count.cast("long").alias("n_spans"),
-        span_bytes.cast("long").alias("n_bytes"),
+    """:func:`aggregate` over ``out`` (one row per document) with its
+    end clock and span columns stamped in one step."""
+    return aggregate(
+        stamp_end(out, span_count=span_count, span_bytes=span_bytes), run_id=run_id
     )
 
-    def measure(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
 
-        t0 = time.monotonic()
-        docs = 0
-        spans = 0
-        nbytes = 0
-        for pdf in batches:
-            docs += len(pdf)
-            spans += int(pdf["n_spans"].sum())
-            nbytes += int(pdf["n_bytes"].sum())
-        pid = TaskContext.get().partitionId()
-        yield pd.DataFrame(
-            {
-                "run_id": [run_id],
-                "snapshot_id": [0],
-                "partition_id": [pid],
-                "doc_count": [docs],
-                "span_count": [spans],
-                "bytes": [nbytes],
-                "wall_time_s": [time.monotonic() - t0],
-            }
-        )
-
-    return pre.mapInPandas(measure, schema=LINEAGE_SCHEMA)
+def committed_rows(
+    spark: SparkSession,
+    rows: list,
+    *,
+    run_id: str,
+    snapshot_id: int,
+    partitions: int,
+) -> DataFrame:
+    """The lineage table for one commit: the collected :func:`aggregate`
+    ``rows`` stamped with ``snapshot_id``, plus a 0-doc, 0.0 s row for
+    every id in ``range(partitions)`` the groupBy did not return, so
+    empty partitions keep their row.  A pyarrow local relation: no
+    Python tasks."""
+    got = {r["partition_id"]: r.asDict() for r in rows}
+    empty = dict(run_id=run_id, doc_count=0, span_count=0, bytes=0, wall_time_s=0.0)
+    table = [
+        {**got.get(pid, empty), "partition_id": pid, "snapshot_id": snapshot_id}
+        for pid in range(partitions)
+    ]
+    columns = {name: [row[name] for row in table] for name in LINEAGE_SCHEMA.names}
+    return spark.createDataFrame(pa.table(columns), schema=LINEAGE_SCHEMA)

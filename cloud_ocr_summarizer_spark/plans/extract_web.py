@@ -32,6 +32,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloud_ocr_summarizer_spark import lineage
 from cloud_ocr_summarizer_spark.datagen import (
     derive_html_from_documents,
     derive_spans_from_documents,
@@ -120,10 +121,12 @@ def extract_web_documents_fused(docs: DataFrame) -> DataFrame:
     pruned documents scan, one codegen stage, one Arrow map stage, zero
     Exchanges.  At 100 TB this halves the input IO and removes the only
     shuffle of the flat plan; keep the flat variant for inputs whose
-    branches genuinely come from different tables.
+    branches genuinely come from different tables.  A lineage start
+    clock on ``docs`` is carried through too.
     """
-    stats = _span_stats_branch(docs, keep=("text", "source"))
-    carried = ("n_spans", "n_media", "n_blocks", "first_block")
+    clock = lineage.carried(docs)
+    stats = _span_stats_branch(docs, keep=("text", "source", *clock))
+    carried = ("n_spans", "n_media", "n_blocks", "first_block", *clock)
     return extract_html_main(
         derive_html_from_documents(stats, keep=carried), carry=carried
     )
@@ -134,7 +137,8 @@ def extract_web_documents_classified_fused(docs: DataFrame) -> DataFrame:
     same output contract and oracle.  The row-local span/layout stats
     are computed first and CARRIED through the classifier's Arrow stage
     (``extract_html_classified(carry=...)``): one pruned documents
-    scan, zero Exchanges."""
+    scan, zero Exchanges.  A lineage start clock on ``docs`` is carried
+    through too."""
     from cloud_ocr_summarizer_spark.datagen import (
         derive_classified_html_from_documents,
     )
@@ -142,10 +146,11 @@ def extract_web_documents_classified_fused(docs: DataFrame) -> DataFrame:
 
     # layout count carried under a distinct name: the classifier's own
     # output already has an n_blocks column (its HTML block count)
+    clock = lineage.carried(docs)
     stats = _span_stats_branch(
-        docs, keep=("text", "source"), layout_blocks_alias="n_layout_blocks"
+        docs, keep=("text", "source", *clock), layout_blocks_alias="n_layout_blocks"
     )
-    carried = ("n_spans", "n_media", "n_layout_blocks", "first_block")
+    carried = ("n_spans", "n_media", "n_layout_blocks", "first_block", *clock)
     out = extract_html_classified(
         derive_classified_html_from_documents(stats, keep=carried), carry=carried
     )
@@ -160,6 +165,7 @@ def extract_web_documents_classified_fused(docs: DataFrame) -> DataFrame:
         "n_media",
         F.col("n_layout_blocks").alias("n_blocks"),
         "first_block",
+        *clock,
     )
 
 
@@ -185,7 +191,9 @@ def run_web(
     full-Readability-classifier variant under the same resume/lineage
     contract — any (docs)->DataFrame with doc_id/main_text columns
     works; lineage needs an n_spans column, the lineage span count).
-    Returns a ``FlagshipResult``.
+    With lineage on, ``todo`` gets the lineage start clock; the fused
+    twins carry it, other pipelines are timed from their first output
+    row.  Returns a ``FlagshipResult``.
     """
     from cloud_ocr_summarizer_spark.operators.skew import salted_repartition
     from cloud_ocr_summarizer_spark.plans.flagship import commit_snapshot
@@ -196,16 +204,18 @@ def run_web(
 
     run_id = uuid.uuid4().hex
     sink = sink if sink is not None else SnapshotSink(output_root)
+    if lineage_sink is None and lineage_root:
+        lineage_sink = SnapshotSink(lineage_root)
     todo = pending_docs(docs, sink, spark)
     if repartition_to:
         todo = salted_repartition(todo, repartition_to)
+    if lineage_sink is not None:
+        todo = lineage.stamp_start(todo)
     # fused twin by default: the job reads one table, so the
     # zero-shuffle plan (stats carried through the Arrow stage) is
     # strictly better here
     make_web = pipeline if pipeline is not None else extract_web_documents_fused
     web = make_web(todo)
-    if lineage_sink is None and lineage_root:
-        lineage_sink = SnapshotSink(lineage_root)
     return commit_snapshot(
         web,
         run_id=run_id,

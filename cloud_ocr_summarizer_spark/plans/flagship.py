@@ -5,13 +5,19 @@ Physical shape (SURVEY.md §4.4):
     scan(docs)                          [column-pruned, filters pushed]
     -> pending_docs (left_anti)         [resume; no-op on first run]
     -> size gate                        [10 MB analogue]
-    -> [salted repartition]             [only before batch-UDF stages]
-    -> extract_spans (row-local)        [0 shuffles]
-    -> [classify detailed via rows]     [Arrow batches]
-    -> persist + partition_metrics      [first action: timed, the count;
+    -> [salted repartition]             [the last Exchange]
+    -> [lineage start clock]            [per-row JVM nanoTime]
+    -> extract_spans (row-local)        [0 shuffles; carries the clock]
+    -> [lineage end clock + span longs]
+    -> persist + lineage aggregate      [first action: one JVM groupBy by
+                                         partition id, the count;
                                          count() when lineage is off]
     -> sink.append(extracted)           [snapshot commit, from the cache]
-    -> sink.append(lineage)             [metrics table]
+    -> sink.append(lineage)             [metrics table, one row per
+                                         output partition]
+
+No Python runs anywhere in the job: the lineage clocks are JVM columns
+stamped after the last Exchange, in the stage that computes the rows.
 
 Run it twice and the second run writes nothing new (idempotent resume).
 """
@@ -25,7 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cloud_ocr_summarizer_spark.lineage import LINEAGE_SCHEMA, partition_metrics
+from cloud_ocr_summarizer_spark import lineage
 from cloud_ocr_summarizer_spark.operators.extract import extract_spans
 from cloud_ocr_summarizer_spark.operators.skew import salted_repartition
 from cloud_ocr_summarizer_spark.sources.checkpoint import SnapshotSink, pending_docs
@@ -61,36 +67,46 @@ def commit_snapshot(
 ) -> FlagshipResult:
     """Commit one run's output as a snapshot plus its lineage rows.
 
-    With a ``lineage_sink``, the lineage measurement is the FIRST action
-    on the persisted output: it fills the cache inside the timed tasks
-    (so ``wall_time_s`` covers the partition's compute), and its doc
-    counts are the run's count — no separate ``count()`` pass.  Without
-    one, a JVM ``count()`` fills the cache and no Python task runs.
-    Zero docs commit nothing.  The snapshot is written from the cache;
-    ``after_commit`` sees the cached output before it is released
+    With a ``lineage_sink``, the end clock and per-doc ``span_count`` /
+    ``span_bytes`` are stamped on ``out`` below the persist
+    (``lineage.stamp_end``), and the FIRST action is the lineage
+    aggregate: one JVM ``groupBy(spark_partition_id())`` that fills the
+    cache, and whose doc counts are the run's count — no separate
+    ``count()`` pass.  ``wall_time_s`` runs from the partition's first
+    start clock (stamped by the job after its last Exchange and carried
+    in ``out``; without it, from the first output row) to its last end
+    clock, so it covers the partition's compute.  Without a lineage
+    sink, a JVM ``count()`` fills the cache.  Zero docs commit nothing.
+    The snapshot is written from the cache without the helper columns;
+    ``after_commit`` sees that cached output before it is released
     (re-evaluating ``out`` after the commit would re-run the resume
     filter against the new snapshot and find nothing).
     """
+    if lineage_sink is not None:
+        out = lineage.stamp_end(out, span_count=span_count, span_bytes=span_bytes)
     cached = out.persist()
     try:
         if lineage_sink is None:
             metrics = None
             docs = cached.count()
         else:
-            metrics = partition_metrics(
-                cached, run_id=run_id, span_count=span_count, span_bytes=span_bytes
-            ).toPandas()
-            docs = int(metrics["doc_count"].sum())
+            metrics = lineage.aggregate(cached, run_id=run_id).collect()
+            docs = sum(r["doc_count"] for r in metrics)
         if docs == 0:
             return FlagshipResult(run_id=run_id, snapshot_id=None, docs_written=0)
-        snapshot_id = sink.append(cached, run_id=run_id)
+        committed = lineage.strip(cached)
+        snapshot_id = sink.append(committed, run_id=run_id)
         if after_commit is not None:
-            after_commit(cached)
+            after_commit(committed)
         if metrics is not None:
-            metrics["snapshot_id"] = snapshot_id
-            # from pandas: an Arrow-backed local relation, no Python tasks
             lineage_sink.append(
-                out.sparkSession.createDataFrame(metrics, LINEAGE_SCHEMA),
+                lineage.committed_rows(
+                    out.sparkSession,
+                    metrics,
+                    run_id=run_id,
+                    snapshot_id=snapshot_id,
+                    partitions=cached.rdd.getNumPartitions(),
+                ),
                 run_id=run_id,
             )
         return FlagshipResult(run_id=run_id, snapshot_id=snapshot_id, docs_written=docs)
@@ -127,10 +143,16 @@ def run_flagship(
     """
     run_id = uuid.uuid4().hex
     sink = sink if sink is not None else SnapshotSink(output_root)
+    if lineage_sink is None and lineage_root:
+        lineage_sink = SnapshotSink(lineage_root)
     todo = pending_docs(input_df, sink, spark)
     if repartition_to:
         todo = salted_repartition(todo, repartition_to)
-    extracted = extract_spans(todo, min_confidence=min_confidence)
+    if lineage_sink is not None:
+        todo = lineage.stamp_start(todo)
+    extracted = extract_spans(
+        todo, min_confidence=min_confidence, keep=lineage.carried(todo)
+    )
 
     rsink = raw_debug_sink
     if rsink is None and raw_debug_root:
@@ -146,8 +168,6 @@ def run_flagship(
         raw = input_df.join(cached.select("doc_id"), on="doc_id", how="left_semi")
         rsink.append(raw, run_id=run_id)
 
-    if lineage_sink is None and lineage_root:
-        lineage_sink = SnapshotSink(lineage_root)
     return commit_snapshot(
         extracted,
         run_id=run_id,

@@ -616,8 +616,10 @@ def q_span_geometry_px(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1 lineage: per-partition metrics over a deterministic repartition
-    (rows-only check — wall time is measured in the tasks; totals pinned
-    in tests/test_pipeline.py)."""
+    (rows-only check — one row per non-empty partition from one JVM
+    aggregate; wall time is read from per-row JVM clocks, from each
+    partition's first output row to its last, since no start clock is
+    carried here; totals pinned in tests/test_pipeline.py)."""
     from cloud_ocr_summarizer_spark.lineage import partition_metrics
     from cloud_ocr_summarizer_spark.plans.flagship import span_octets
 

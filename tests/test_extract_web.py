@@ -133,6 +133,22 @@ def test_fused_twin_zero_shuffle_and_equal(spark):
     assert a == b and len(a) == docs.count()
 
 
+def test_fused_twins_carry_the_lineage_start_clock(spark):
+    """A start clock stamped on the docs rides through both fused twins
+    to the output, in the same stage: still no Exchange."""
+    from cloud_ocr_summarizer_spark import lineage
+    from cloud_ocr_summarizer_spark.plans.extract_web import (
+        extract_web_documents_classified_fused,
+        extract_web_documents_fused,
+    )
+
+    docs = lineage.stamp_start(spark.read.parquet(f"{SF}/documents.parquet"))
+    for make in (extract_web_documents_fused, extract_web_documents_classified_fused):
+        out = make(docs)
+        assert out.columns[-1] == lineage.START
+        assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+
+
 def test_extract_web_single_join_is_only_shuffle(spark):
     """Both branches are map stages; the 1:1 doc_id equi-join is the
     pipeline's only shuffle boundary (one Exchange per join side), and

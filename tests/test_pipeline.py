@@ -73,6 +73,79 @@ def test_lineage_covers_all_docs_and_spans(spark, tmp_path):
     assert sum(r["bytes"] for r in rows) > 0
 
 
+@pytest.mark.parametrize("with_start", [False, True])
+def test_lineage_wall_time_covers_compute(spark, tmp_path, with_start):
+    """wall_time_s covers compute below the cache: each partition runs
+    10 rows x 20 ms of JVM sleep before its end clock, timed from the
+    carried start clock or, without one, from its first output row."""
+    from cloud_ocr_summarizer_spark import lineage
+    from cloud_ocr_summarizer_spark.plans.flagship import commit_snapshot
+
+    rows = spark.range(0, 40, 1, 4).withColumnRenamed("id", "doc_id")
+    if with_start:
+        rows = lineage.stamp_start(rows)
+    out = rows.withColumn(
+        "slept",
+        F.reflect(F.lit("java.lang.Thread"), F.lit("sleep"), F.lit(20).cast("long")),
+    )
+    sink, lin = SnapshotSink(str(tmp_path / "out")), SnapshotSink(str(tmp_path / "lin"))
+    r = commit_snapshot(
+        out,
+        run_id="sleep",
+        sink=sink,
+        lineage_sink=lin,
+        span_count=F.lit(1),
+        span_bytes=F.lit(0),
+    )
+    assert r.docs_written == 40
+    got = lin.read_committed(spark).collect()
+    assert len(got) == 4
+    assert all(g["wall_time_s"] >= 0.15 for g in got), [g["wall_time_s"] for g in got]
+    # the snapshot is written without the lineage helper columns
+    assert sink.read_committed(spark).columns == ["doc_id", "slept"]
+
+
+def test_lineage_has_a_row_for_every_output_partition(spark, tmp_path):
+    """One lineage row per output partition, empty ones included: the
+    JVM groupBy only returns non-empty partitions, the commit fills in
+    the rest as 0-doc, 0.0 s rows."""
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    docs = interleaved_docs(spark, 5, seed=42)
+    r = run_flagship(spark, docs, output_root=out, lineage_root=lin, repartition_to=12)
+
+    rows = SnapshotSink(lin).read_committed(spark).collect()
+    assert sorted(x["partition_id"] for x in rows) == list(range(12))
+    stamps = {(x["run_id"], x["snapshot_id"]) for x in rows}
+    assert stamps == {(r.run_id, r.snapshot_id)}
+    assert sum(x["doc_count"] for x in rows) == 5
+    empty = [x for x in rows if x["doc_count"] == 0]
+    assert len(empty) >= 7
+    assert all(
+        (x["span_count"], x["bytes"], x["wall_time_s"]) == (0, 0, 0.0) for x in empty
+    )
+
+
+def test_lineage_aggregate_runs_no_python(spark):
+    """The lineage pass over the flagship's output is a JVM aggregate:
+    no Python node anywhere in its executed plan."""
+    from cloud_ocr_summarizer_spark.lineage import partition_metrics
+    from cloud_ocr_summarizer_spark.operators.skew import salted_repartition
+    from cloud_ocr_summarizer_spark.plans.flagship import span_octets
+
+    docs = salted_repartition(interleaved_docs(spark, 40, seed=42), 6)
+    metrics = partition_metrics(
+        extract_spans(docs, with_stats=False),
+        run_id="plan",
+        span_count=F.size("spans_out"),
+        span_bytes=span_octets(),
+    )
+    plan = metrics._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, node
+    assert "HashAggregate" in plan
+    assert sum(x["doc_count"] for x in metrics.collect()) == 40
+
+
 def test_split_heavy_docs_round_trip(spark):
     docs = interleaved_docs(spark, 20, seed=7).filter(F.size("spans") > 0)
     chunked = split_heavy_docs(docs, max_spans_per_chunk=3)
