@@ -22,7 +22,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloud_ocr_summarizer_spark import config
-from cloud_ocr_summarizer_spark.functions.text import let_col, whitespace_tokens_col
+from cloud_ocr_summarizer_spark.functions.text import (
+    let_col,
+    memo_col,
+    whitespace_tokens_col,
+)
 
 # Small fixed vocabulary; some entries carry nasty whitespace to exercise
 # the assembly semantics (trim points, vision_processor.py:176,325,363).
@@ -177,6 +181,12 @@ def derive_spans_from_documents(docs: DataFrame, keep: tuple[str, ...] = ()) -> 
     operators that need doc metadata alongside spans never pay a doc_id
     re-join shuffle.
     """
+    return docs.select(*_spans_cols(), *[F.col(c) for c in keep])
+
+
+@memo_col
+def _spans_cols() -> tuple[Column, Column]:
+    """The (doc_id, spans) columns of :func:`derive_spans_from_documents`."""
     k = config.SPAN_WORDS_PER_CHUNK
     d = F.col("doc_id")
 
@@ -227,9 +237,7 @@ def derive_spans_from_documents(docs: DataFrame, keep: tuple[str, ...] = ()) -> 
         )).otherwise(empty)
 
     spans = let_col(whitespace_tokens_col(F.col("text")), spans_of)
-    return docs.select(
-        d.alias("doc_id"), spans.alias("spans"), *[F.col(c) for c in keep]
-    )
+    return d.alias("doc_id"), spans.alias("spans")
 
 
 def derive_html_from_documents(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
@@ -245,6 +253,12 @@ def derive_html_from_documents(docs: DataFrame, keep: tuple[str, ...] = ()) -> D
     output from documents.text directly: the value check is a full
     synthesize->tokenize->strip->reassemble round trip.
     """
+    return docs.select(*_html_cols(), *[F.col(c) for c in keep])
+
+
+@memo_col
+def _html_cols() -> tuple[Column, Column]:
+    """The (doc_id, html) columns of :func:`derive_html_from_documents`."""
     d = F.col("doc_id")
     src = F.coalesce(F.col("source"), F.lit("unknown"))
 
@@ -275,9 +289,7 @@ def derive_html_from_documents(docs: DataFrame, keep: tuple[str, ...] = ()) -> D
         )
 
     html = let_col(whitespace_tokens_col(F.col("text")), html_of)
-    return docs.select(
-        d.alias("doc_id"), html.alias("html"), *[F.col(c) for c in keep]
-    )
+    return d.alias("doc_id"), html.alias("html")
 
 
 def derive_linked_html_from_documents(docs: DataFrame) -> DataFrame:
@@ -498,6 +510,13 @@ def derive_classified_html_from_documents(
     every block's content, wc and link-wc from documents.text with the
     same integer arithmetic — keep in lockstep.
     """
+    return docs.select(*_classified_html_cols(), *[F.col(c) for c in keep])
+
+
+@memo_col
+def _classified_html_cols() -> tuple[Column, Column]:
+    """The (doc_id, html) columns of
+    :func:`derive_classified_html_from_documents`."""
     d = F.col("doc_id")
     k = config.SPAN_WORDS_PER_CHUNK
 
@@ -554,9 +573,7 @@ def derive_classified_html_from_documents(
         body,
         F.lit("<footer>(c) 2026</footer></body></html>"),
     )
-    return docs.select(
-        d.alias("doc_id"), html.alias("html"), *[F.col(c) for c in keep]
-    )
+    return d.alias("doc_id"), html.alias("html")
 
 
 def derive_media_pdf_payloads(docs: DataFrame) -> DataFrame:

@@ -11,6 +11,9 @@ engine's contract (and the fixtures) use ASCII whitespace only.
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -40,6 +43,39 @@ def normalize_block_text_col(text: Column) -> Column:
     return F.regexp_replace(joined, r"^\s+|\s+$", "")
 
 
+def memo_col(builder):
+    """Build a pure Column builder's expression once per driver JVM.
+
+    Every Column built in Python costs py4j round trips, and a pipeline
+    that rebuilds the same expression trees on every call (or every
+    streaming micro-batch) pays them again each time.  A decorated
+    builder is called once per distinct argument tuple; later calls
+    return the SAME Column object.  That is only correct under three
+    rules:
+
+    * every argument is a plain hashable value (str/int/float/bool or a
+      tuple of them) — it is part of the memo key (typed, so ``0`` and
+      ``0.0`` build apart);
+    * the output depends on nothing else: never on a DataFrame, a
+      Column, a schema or a session conf (read those in the caller and
+      pass the plain value in);
+    * the memo is keyed on the JVM gateway (``SparkContext._gateway``).
+      A cached Column is an unresolved expression, so it stays valid
+      when a session is stopped and restarted in the same JVM; a new
+      gateway (a new JVM) builds afresh.
+    """
+    @functools.lru_cache(maxsize=None, typed=True)
+    def build(gateway, *args, **kwargs):
+        return builder(*args, **kwargs)
+
+    @functools.wraps(builder)
+    def cached(*args, **kwargs):
+        return build(SparkContext._gateway, *args, **kwargs)
+
+    return cached
+
+
+@memo_col
 def _kind_map_lit() -> Column:
     mapping: dict[str, str] = {}
     for k, v in config.BLOCK_TYPES.items():
@@ -55,9 +91,6 @@ def _kind_map_lit() -> Column:
     return F.create_map(*flat)
 
 
-_KIND_MAP = None
-
-
 def classify_kind_col(kind: Column) -> Column:
     """Raw kind tag -> canonical vocabulary with UNKNOWN default.
 
@@ -65,13 +98,11 @@ def classify_kind_col(kind: Column) -> Column:
     strings, and raw ingest-format strings via lowercase fallback
     (extension map analogue, config/settings.py:84-89).
     """
-    global _KIND_MAP
-    if _KIND_MAP is None:
-        _KIND_MAP = _kind_map_lit()
+    kind_map = _kind_map_lit()
     c = kind.cast("string")
     return F.coalesce(
-        F.element_at(_KIND_MAP, c),
-        F.element_at(_KIND_MAP, F.lower(c)),
+        F.element_at(kind_map, c),
+        F.element_at(kind_map, F.lower(c)),
         F.lit(config.KIND_UNKNOWN),
     )
 

@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cloud_ocr_summarizer_spark.functions.text import memo_col
+
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType()),
@@ -47,6 +49,7 @@ _SPANS = "_lineage_spans"
 _BYTES = "_lineage_bytes"
 
 
+@memo_col
 def _clock() -> Column:
     """Per-row monotonic JVM clock in ns.  ``reflect`` is nondeterministic,
     so Catalyst evaluates it once per row: never constant-folded, never
@@ -86,21 +89,29 @@ def aggregate(stamped: DataFrame, *, run_id: str) -> DataFrame:
     """Lineage rows over a :func:`stamp_end` output, one per NON-EMPTY
     partition.  ``snapshot_id`` is 0: the committing job stamps it once
     the snapshot exists (:func:`committed_rows`)."""
-    start = F.col(START) if START in stamped.columns else F.col(_END)
-    return stamped.groupBy(F.spark_partition_id().alias("partition_id")).agg(
+    key, aggs, cols = _aggregate_cols(START in stamped.columns)
+    return stamped.groupBy(key).agg(*aggs).select(F.lit(run_id).alias("run_id"), *cols)
+
+
+@memo_col
+def _aggregate_cols(has_start: bool):
+    """:func:`aggregate`'s groupBy key, aggregates and output columns
+    after ``run_id``.  ``has_start``: the stamped output carries the
+    START column."""
+    start = F.col(START) if has_start else F.col(_END)
+    aggs = (
         F.count(F.lit(1)).alias("doc_count"),
         F.sum(_SPANS).alias("span_count"),
         F.sum(_BYTES).alias("bytes"),
         ((F.max(_END) - F.min(start)) / F.lit(1e9)).alias("wall_time_s"),
-    ).select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(0).cast("long").alias("snapshot_id"),
-        "partition_id",
-        "doc_count",
-        "span_count",
-        "bytes",
-        "wall_time_s",
     )
+    cols = (
+        F.lit(0).cast("long").alias("snapshot_id"),
+        *map(
+            F.col, ("partition_id", "doc_count", "span_count", "bytes", "wall_time_s")
+        ),
+    )
+    return F.spark_partition_id().alias("partition_id"), aggs, cols
 
 
 def partition_metrics(

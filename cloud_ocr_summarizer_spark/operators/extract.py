@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from cloud_ocr_summarizer_spark import config
 from cloud_ocr_summarizer_spark.functions.text import (
     classify_kind_col,
+    memo_col,
     normalize_block_text_col,
     token_count_col,
 )
@@ -78,9 +79,11 @@ def _project_out(s: Column) -> Column:
     )
 
 
-def _confidence_filtered(df: DataFrame, spans_col: str, min_confidence: float) -> Column:
+def _confidence_filtered(
+    spans_col: str, min_confidence: float, has_confidence: bool
+) -> Column:
     spans = F.col(spans_col)
-    if _has_confidence(df, spans_col):
+    if has_confidence:
         # detailed-mode gate, vision_processor.py:261-264; null passes
         # (simple mode carries confidence=None, :177)
         spans = F.filter(
@@ -91,13 +94,41 @@ def _confidence_filtered(df: DataFrame, spans_col: str, min_confidence: float) -
     return spans
 
 
-def _doc_text_bytes(spans_col: str) -> Column:
-    """Total raw text bytes per doc — size-gate input (settings.py:66)."""
-    return F.aggregate(
+@memo_col
+def _size_gate(spans_col: str, max_text_bytes: int) -> Column:
+    """A doc's raw text bytes are at most ``max_text_bytes`` (settings.py:66)."""
+    text_bytes = F.aggregate(
         F.col(spans_col),
         F.lit(0).cast("long"),
         lambda acc, s: acc + F.coalesce(F.octet_length(s["text"]), F.lit(0)),
     )
+    return text_bytes <= F.lit(max_text_bytes)
+
+
+@memo_col
+def _spans_out(spans_col: str, min_confidence: float, has_confidence: bool) -> Column:
+    """The ordered canonical ``spans_out`` array.  ``has_confidence``
+    (whether the span struct has a confidence field) comes from the
+    caller's schema."""
+    spans = _confidence_filtered(spans_col, min_confidence, has_confidence)
+    ordered = F.sort_array(F.transform(spans, _canonical_struct))
+    return F.transform(ordered, _project_out)
+
+
+@memo_col
+def _extracted_cols(with_stats: bool) -> tuple[Column, ...]:
+    """doc_id, spans_out [+ n_spans, n_tokens]: :func:`extract_spans`'s output."""
+    cols = (F.col("doc_id"), F.col("spans_out"))
+    if with_stats:
+        cols += (
+            F.size("spans_out").alias("n_spans"),
+            F.aggregate(
+                F.filter(F.col("spans_out"), lambda s: s["text"].isNotNull()),
+                F.lit(0),
+                lambda acc, s: acc + token_count_col(s["text"]),
+            ).alias("n_tokens"),
+        )
+    return cols
 
 
 def extract_spans(
@@ -119,21 +150,11 @@ def extract_spans(
     convention as datagen.derive_spans_from_documents) so downstream
     row-local stages never pay a doc_id re-join shuffle.
     """
-    gated = df.filter(_doc_text_bytes(spans_col) <= F.lit(max_text_bytes))
-    spans = _confidence_filtered(gated, spans_col, min_confidence)
-    ordered = F.sort_array(F.transform(spans, _canonical_struct))
-    out = gated.withColumn("spans_out", F.transform(ordered, _project_out))
-    cols = [F.col("doc_id"), F.col("spans_out")]
-    if with_stats:
-        cols += [
-            F.size("spans_out").alias("n_spans"),
-            F.aggregate(
-                F.filter(F.col("spans_out"), lambda s: s["text"].isNotNull()),
-                F.lit(0),
-                lambda acc, s: acc + token_count_col(s["text"]),
-            ).alias("n_tokens"),
-        ]
-    return out.select(*cols, *[F.col(c) for c in keep])
+    spans_out = _spans_out(spans_col, min_confidence, _has_confidence(df, spans_col))
+    out = df.filter(_size_gate(spans_col, max_text_bytes)).withColumn(
+        "spans_out", spans_out
+    )
+    return out.select(*_extracted_cols(with_stats), *[F.col(c) for c in keep])
 
 
 def extract_spans_exploded(
@@ -157,8 +178,10 @@ def extract_spans_exploded(
     filtered — and empty docs — still emit a row with an empty spans_out
     (explode_outer + collect_list dropping nulls keep them).
     """
-    gated = df.filter(_doc_text_bytes(spans_col) <= F.lit(max_text_bytes))
-    spans = _confidence_filtered(gated, spans_col, min_confidence)
+    gated = df.filter(_size_gate(spans_col, max_text_bytes))
+    spans = _confidence_filtered(
+        spans_col, min_confidence, _has_confidence(df, spans_col)
+    )
     exploded = gated.select(
         "doc_id", F.explode_outer(F.transform(spans, _canonical_struct)).alias("s")
     )

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cloud_ocr_summarizer_spark.functions.text import let_col
+from cloud_ocr_summarizer_spark.functions.text import let_col, memo_col
 
 # Two-column page model (integer milli-units).  Span k (0-based pos) of a
 # doc sits in column k % 2 at row k // 2; each page holds PAGE_ROWS rows
@@ -142,6 +142,7 @@ _BLOCK_ACC_TYPE = (
 )
 
 
+@memo_col
 def blocks_rowlocal_col(
     spans_col: str = "spans_out", *, gap_threshold: int = GAP_THRESHOLD
 ) -> Column:

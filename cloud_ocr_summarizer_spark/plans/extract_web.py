@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloud_ocr_summarizer_spark import lineage
@@ -37,6 +37,7 @@ from cloud_ocr_summarizer_spark.datagen import (
     derive_html_from_documents,
     derive_spans_from_documents,
 )
+from cloud_ocr_summarizer_spark.functions.text import memo_col
 from cloud_ocr_summarizer_spark.operators.dom import extract_html_main
 from cloud_ocr_summarizer_spark.operators.extract import extract_spans
 from cloud_ocr_summarizer_spark.operators.layout import blocks_rowlocal_col
@@ -54,12 +55,18 @@ def _span_stats_branch(
     variants that still need text/source downstream);
     ``layout_blocks_alias`` renames the layout block count when the
     carrying stage has its own n_blocks column."""
-    blocks = blocks_rowlocal_col("spans_out")
+    doc_id, *stats = _span_stats_cols(layout_blocks_alias)
     return extract_spans(
         derive_spans_from_documents(docs, keep=keep), with_stats=False, keep=keep
-    ).select(
+    ).select(doc_id, *[F.col(c) for c in keep], *stats)
+
+
+@memo_col
+def _span_stats_cols(layout_blocks_alias: str) -> tuple[Column, ...]:
+    """doc_id then the stat columns of :func:`_span_stats_branch`."""
+    blocks = blocks_rowlocal_col("spans_out")
+    return (
         F.col("doc_id").cast("long").alias("doc_id"),
-        *[F.col(c) for c in keep],
         F.size("spans_out").cast("int").alias("n_spans"),
         F.size(
             F.filter(F.col("spans_out"), lambda s: s["media_ref"].isNotNull())

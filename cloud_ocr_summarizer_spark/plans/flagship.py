@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloud_ocr_summarizer_spark import lineage
+from cloud_ocr_summarizer_spark.functions.text import memo_col
 from cloud_ocr_summarizer_spark.operators.extract import extract_spans
 from cloud_ocr_summarizer_spark.operators.skew import salted_repartition
 from cloud_ocr_summarizer_spark.sources.checkpoint import SnapshotSink, pending_docs
@@ -44,6 +45,7 @@ class FlagshipResult:
     docs_written: int
 
 
+@memo_col
 def span_octets() -> Column:
     """Per-doc bytes of ``spans_out``: span text plus media_ref octets."""
     return F.aggregate(

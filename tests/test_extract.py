@@ -281,3 +281,28 @@ def test_bbox_bands_tile_unit_interval(spark):
         assert spans[-1][2] == 1.0
         for (_, _, y1_prev), (_, y0_next, _) in zip(spans, spans[1:]):
             assert y1_prev == y0_next  # no gap, no overlap
+
+
+def test_memoized_builder_is_per_jvm(spark, monkeypatch):
+    """A ``memo_col`` builder returns the SAME Column on a second call in
+    one JVM, and builds a new one under another gateway."""
+    from pyspark import SparkContext
+
+    from cloud_ocr_summarizer_spark.operators.layout import blocks_rowlocal_col
+
+    first = blocks_rowlocal_col("spans_out")
+    assert blocks_rowlocal_col("spans_out") is first
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert blocks_rowlocal_col("spans_out") is not first
+    monkeypatch.undo()
+    assert blocks_rowlocal_col("spans_out") is first
+
+
+def test_memoized_columns_shared_by_two_branches_match_oracle(spark):
+    """Both ``extract_spans`` calls build from the same cached Columns;
+    one plan holding both branches still matches the oracle."""
+    a = spark.createDataFrame(to_rows(EDGE_DOCS[:5]), docs_schema(SPAN_SCHEMA))
+    b = spark.createDataFrame(to_rows(EDGE_DOCS[5:]), docs_schema(SPAN_SCHEMA))
+    out = extract_spans(a).unionByName(extract_spans(b))
+    got = {r["doc_id"]: spans_out_as_tuples(r["spans_out"]) for r in out.collect()}
+    assert got == expected_by_oracle(EDGE_DOCS)

@@ -267,3 +267,38 @@ def test_fused_plans_have_one_arrow_python_stage(spark):
         assert "Exchange" not in p, make.__name__
         python_stages = re.findall(r"\b(?:MapIn\w+|\w*EvalPython\w*|\w*InPandas\w*)\b", p)
         assert python_stages == ["MapInArrow"], (make.__name__, python_stages)
+
+
+def test_warm_pipeline_build_py4j_commands(spark):
+    """A second build of the north-rule pipeline reuses the memoized
+    Column trees (``functions.text.memo_col``): it sends at most 800
+    py4j commands, not counting GC detach messages (first line ``m``),
+    whose number varies run to run.  Rebuilding every tree costs
+    ~3.4k."""
+    import py4j.java_gateway as jg
+
+    from cloud_ocr_summarizer_spark import lineage
+    from cloud_ocr_summarizer_spark.plans.extract_web import (
+        extract_web_documents_classified_fused,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+
+    def build():
+        return extract_web_documents_classified_fused(lineage.stamp_start(docs))
+
+    build()
+    send = jg.GatewayClient.send_command
+    commands = []
+
+    def counting(self, command, *args, **kwargs):
+        if command.split("\n", 1)[0] != "m":
+            commands.append(command)
+        return send(self, command, *args, **kwargs)
+
+    jg.GatewayClient.send_command = counting
+    try:
+        build()
+    finally:
+        jg.GatewayClient.send_command = send
+    assert len(commands) <= 800
