@@ -146,8 +146,6 @@ def main() -> int:
     from cloud_ocr_summarizer_spark.operators.pdfstream import parse_pdf_text_spans
     from cloud_ocr_summarizer_spark.operators.sampling import chunk_documents
     from cloud_ocr_summarizer_spark.plans.extract_web import (
-        extract_web_documents,
-        extract_web_documents_classified,
         extract_web_documents_classified_fused,
         extract_web_documents_fused,
     )
@@ -188,12 +186,12 @@ def main() -> int:
     )
     # q12: context-window chunking (64/48 overlapping training windows)
     timed("q12_chunk_documents", lambda: _force(chunk_documents(docs120)))
-    # q13: the north-rule pipeline composed as ONE job — DOM strip +
-    # span extraction + layout parse joined per document (the only
-    # shuffle is the 1:1 doc_id join)
-    timed("q13_extract_web", lambda: _force(extract_web_documents(docs120)))
-    # q13b: zero-shuffle fused twin — span/layout stats carried through
-    # the DOM Arrow stage (one documents scan, no join)
+    # q13b: the north-rule pipeline composed as ONE job — DOM strip +
+    # span extraction + layout parse, the span/layout stats carried
+    # through the DOM Arrow stage (one documents scan, zero Exchanges).
+    # q13 and q15 timed the retired flat doc_id-join plans: suite
+    # totals that include them (BENCH_r05.json and earlier) are not
+    # comparable with later ones.
     timed(
         "q13b_extract_web_fused",
         lambda: _force(extract_web_documents_fused(docs120)),
@@ -205,13 +203,8 @@ def main() -> int:
             parse_pdf_text_spans(derive_pdf_streams_from_documents(docs120))
         ),
     )
-    # q15: composed job with the FULL Readability classifier pair
-    timed(
-        "q15_extract_web_classified",
-        lambda: _force(extract_web_documents_classified(docs120)),
-    )
-    # q15b: its zero-shuffle fused twin (stats carried through the
-    # classifier's Arrow stage)
+    # q15b: composed job with the FULL Readability classifier pair,
+    # stats carried through the classifier's Arrow stage
     timed(
         "q15b_extract_web_classified_fused",
         lambda: _force(extract_web_documents_classified_fused(docs120)),

@@ -10,33 +10,23 @@ text node whether it sits inside a boilerplate container (head, nav,
 header, footer, aside, script, style), and reassemble the surviving
 text in document order.
 
-Two physical strategies, golden-equal on non-nested containers
-(the repo's simple/detailed duality):
+One physical path: the four operators (``extract_html_main``,
+``_dense``, ``_density``, ``_classified``) share ONE Arrow-native
+kernel (:func:`_dom_batch`) run through ``mapInArrow``.  Per batch it
+works on the flat UTF-8 byte buffer of the html column: numpy finds the
+tag spans and text runs, per-container open/close depth counters are
+cumulative sums that restart at each document (a stack machine's depth
+counter, computed column-wise), ``utf8_split_whitespace`` yields the
+words, ``np.bincount`` the per-<p>-block counts and ``binary_join`` the
+reassembled text.  Python runs O(batches) operations, never one per row
+or per token.  Handles arbitrarily nested containers correctly.  The
+four operators differ only in the drop rule: none for the strip, an
+integer predicate over the per-block counts for each of the three block
+classifiers.
 
-* ``*_simple`` — pure JVM column expressions: comment strip, one
-  non-greedy regexp_replace per container type, tag strip, whitespace
-  normalize.  WholeStageCodegen end to end, zero Python.
-  LIMITATION (documented, tested): a container nested inside the same
-  container type ends at the FIRST closing tag — the regex cannot
-  count.  Real-world nav-inside-nav is rare; when it matters, use the
-  canonical path.
-* the canonical operators (``extract_html_main``, ``_dense``,
-  ``_density``, ``_classified``) — ONE Arrow-native kernel
-  (:func:`_dom_batch`) run through ``mapInArrow``.  Per batch it works
-  on the flat UTF-8 byte buffer of the html column: numpy finds the tag
-  spans and text runs, per-container open/close depth counters are
-  cumulative sums that restart at each document (a stack machine's
-  depth counter, computed column-wise), ``utf8_split_whitespace``
-  yields the words, ``np.bincount`` the per-<p>-block counts and
-  ``binary_join`` the reassembled text.  Python runs O(batches)
-  operations, never one per row or per token.  Handles arbitrarily
-  nested containers correctly.  The four operators differ only in the
-  drop rule: none for the strip, an integer predicate over the
-  per-block counts for each of the three block classifiers.
-
-Scale shape: both are one shuffle-free map stage over whatever
-partitioning the input already has — the same plan class as the
-flagship extractor; a 1000-executor scan parallelizes embarrassingly.
+Scale shape: one shuffle-free map stage over whatever partitioning the
+input already has — the same plan class as the flagship extractor; a
+1000-executor scan parallelizes embarrassingly.
 
 Input HTML contract (matches datagen.derive_html_from_documents and any
 tag-soup within it): tags ``<name ...>``/``</name>``, attribute values
@@ -50,10 +40,8 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
-
-from cloud_ocr_summarizer_spark.functions.text import whitespace_tokens_col
 
 # containers whose entire subtree is boilerplate (Readability's
 # unlikelyCandidates, reduced to the structural tags)
@@ -331,25 +319,6 @@ def extract_html_main(
     return _map_dom(df, html_col, carry, None)
 
 
-def extract_html_main_simple(
-    df: DataFrame, *, html_col: str = "html", keep: tuple[str, ...] = ()
-) -> DataFrame:
-    """JVM-regex twin: same output on non-nested boilerplate containers.
-    ``keep`` carries extra input columns through (projection, no join —
-    the datagen convention)."""
-    x: Column = F.regexp_replace(F.coalesce(F.col(html_col), F.lit("")), _COMMENT_RE, " ")
-    for name in BOILER_CONTAINERS:
-        x = F.regexp_replace(x, rf"(?is)<{name}\b[^>]*>.*?</{name}\s*>", " ")
-    stripped = F.regexp_replace(x, r"(?s)<[^>]*>", " ")
-    words = whitespace_tokens_col(stripped)
-    return df.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.array_join(words, " ").alias("main_text"),
-        F.size(words).cast("int").alias("n_tokens"),
-        *[F.col(c) for c in keep],
-    )
-
-
 def extract_html_dense(df: DataFrame, *, html_col: str = "html") -> DataFrame:
     """Readability-style link-density block classification, canonical
     Arrow path: tokenize -> strip boilerplate containers -> segment into
@@ -363,47 +332,6 @@ def extract_html_dense(df: DataFrame, *, html_col: str = "html") -> DataFrame:
     density), mirroring the repo's integer-cents convention.
     """
     return _map_dom(df, html_col, (), _rule_link_dense)
-
-
-def extract_html_dense_simple(df: DataFrame, *, html_col: str = "html") -> DataFrame:
-    """JVM-expression twin of :func:`extract_html_dense` (same non-nested
-    container limitation as ``extract_html_main_simple``): block bodies
-    via regexp_extract_all, per-block token / anchor-token counts and the
-    2x density rule inside HOF lambdas — WholeStageCodegen, zero Python."""
-    x: Column = F.regexp_replace(F.coalesce(F.col(html_col), F.lit("")), _COMMENT_RE, " ")
-    for name in BOILER_CONTAINERS:
-        x = F.regexp_replace(x, rf"(?is)<{name}\b[^>]*>.*?</{name}\s*>", " ")
-    blocks = F.regexp_extract_all(x, F.lit(r"(?is)<p\b[^>]*>(.*?)</p\s*>"), 1)
-
-    def tokens(c: Column) -> Column:
-        return whitespace_tokens_col(F.regexp_replace(c, r"(?s)<[^>]*>", " "))
-
-    def link_tokens(c: Column) -> Column:
-        return F.size(
-            tokens(
-                F.array_join(
-                    F.regexp_extract_all(
-                        c, F.lit(r"(?is)<a\b[^>]*>(.*?)</a\s*>"), 1
-                    ),
-                    " ",
-                )
-            )
-        )
-
-    kept = F.filter(blocks, lambda b: 2 * link_tokens(b) <= F.size(tokens(b)))
-    # empty kept blocks would inject stray separators into the join; the
-    # canonical path whitespace-normalizes them away, so drop them here
-    nonempty = F.filter(kept, lambda b: F.size(tokens(b)) > 0)
-    main = F.array_join(
-        F.transform(nonempty, lambda b: F.array_join(tokens(b), " ")), " "
-    )
-    return df.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        main.alias("main_text"),
-        F.size(whitespace_tokens_col(main)).cast("int").alias("n_tokens"),
-        F.size(blocks).cast("int").alias("n_blocks"),
-        (F.size(blocks) - F.size(kept)).cast("int").alias("n_dropped"),
-    )
 
 
 # ---- text-density block classification (Kohlschütter et al., WSDM'10:
@@ -433,41 +361,6 @@ def extract_html_density(df: DataFrame, *, html_col: str = "html") -> DataFrame:
     return _map_dom(df, html_col, (), _rule_text_sparse)
 
 
-def extract_html_density_simple(df: DataFrame, *, html_col: str = "html") -> DataFrame:
-    """JVM-expression twin of :func:`extract_html_density` (same
-    non-nested container limitation as the other ``_simple`` paths):
-    blocks via regexp_extract_all, the words-per-wrapped-line rule
-    inside HOF lambdas — WholeStageCodegen, zero Python.  The integer
-    ceil is floor((nc+79)/80): exact for any realistic block size."""
-    x: Column = F.regexp_replace(F.coalesce(F.col(html_col), F.lit("")), _COMMENT_RE, " ")
-    for name in BOILER_CONTAINERS:
-        x = F.regexp_replace(x, rf"(?is)<{name}\b[^>]*>.*?</{name}\s*>", " ")
-    blocks = F.regexp_extract_all(x, F.lit(r"(?is)<p\b[^>]*>(.*?)</p\s*>"), 1)
-
-    def tokens(c: Column) -> Column:
-        return whitespace_tokens_col(F.regexp_replace(c, r"(?s)<[^>]*>", " "))
-
-    def is_kept(b: Column) -> Column:
-        w = tokens(b)
-        wc = F.size(w)
-        nc = F.length(F.array_join(w, " "))
-        lines = F.greatest(
-            F.floor((nc + F.lit(TD_WRAP_COLS - 1)) / F.lit(TD_WRAP_COLS)).cast("int"),
-            F.lit(1),
-        )
-        return wc >= F.lit(TD_MIN_WPL) * lines
-
-    kept = F.filter(blocks, is_kept)
-    main = F.array_join(F.transform(kept, lambda b: F.array_join(tokens(b), " ")), " ")
-    return df.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        main.alias("main_text"),
-        F.size(whitespace_tokens_col(main)).cast("int").alias("n_tokens"),
-        F.size(blocks).cast("int").alias("n_blocks"),
-        (F.size(blocks) - F.size(kept)).cast("int").alias("n_dropped"),
-    )
-
-
 def extract_html_classified(
     df: DataFrame, *, html_col: str = "html", carry: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -489,60 +382,11 @@ def extract_html_classified(
     return _map_dom(df, html_col, carry, _rule_readability)
 
 
-def extract_html_classified_simple(
-    df: DataFrame, *, html_col: str = "html"
-) -> DataFrame:
-    """JVM-expression twin of :func:`extract_html_classified` (same
-    non-nested container limitation as the other ``_simple`` paths):
-    both integer rules inside one HOF filter — WholeStageCodegen."""
-    x: Column = F.regexp_replace(F.coalesce(F.col(html_col), F.lit("")), _COMMENT_RE, " ")
-    for name in BOILER_CONTAINERS:
-        x = F.regexp_replace(x, rf"(?is)<{name}\b[^>]*>.*?</{name}\s*>", " ")
-    blocks = F.regexp_extract_all(x, F.lit(r"(?is)<p\b[^>]*>(.*?)</p\s*>"), 1)
-
-    def tokens(c: Column) -> Column:
-        return whitespace_tokens_col(F.regexp_replace(c, r"(?s)<[^>]*>", " "))
-
-    def is_kept(b: Column) -> Column:
-        w = tokens(b)
-        wc = F.size(w)
-        link_wc = F.size(
-            tokens(
-                F.array_join(
-                    F.regexp_extract_all(
-                        b, F.lit(r"(?is)<a\b[^>]*>(.*?)</a\s*>"), 1
-                    ),
-                    " ",
-                )
-            )
-        )
-        nc = F.length(F.array_join(w, " "))
-        lines = F.greatest(
-            F.floor((nc + F.lit(TD_WRAP_COLS - 1)) / F.lit(TD_WRAP_COLS)).cast("int"),
-            F.lit(1),
-        )
-        return (2 * link_wc <= wc) & (wc >= F.lit(TD_MIN_WPL) * lines)
-
-    kept = F.filter(blocks, is_kept)
-    main = F.array_join(F.transform(kept, lambda b: F.array_join(tokens(b), " ")), " ")
-    return df.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        main.alias("main_text"),
-        F.size(whitespace_tokens_col(main)).cast("int").alias("n_tokens"),
-        F.size(blocks).cast("int").alias("n_blocks"),
-        (F.size(blocks) - F.size(kept)).cast("int").alias("n_dropped"),
-    )
-
-
 __all__ = [
     "extract_html_main",
-    "extract_html_main_simple",
     "extract_html_dense",
-    "extract_html_dense_simple",
     "extract_html_density",
-    "extract_html_density_simple",
     "extract_html_classified",
-    "extract_html_classified_simple",
     "BOILER_CONTAINERS",
     "TD_WRAP_COLS",
     "TD_MIN_WPL",

@@ -5,9 +5,10 @@ records wrapping an HTTP response wrapping the HTML.  The engine
 already parses the inner layers (operators/dom.py, pdfstream.py); this
 module adds the envelope so the full chain
 ``record bytes -> WARC headers -> HTTP status -> HTML -> main text``
-runs as ONE Spark job, all row-local (binary decode + regexp header
-extraction + locate/substr envelope splits; zero Python, zero
-shuffles).
+runs as ONE Spark job, all row-local and shuffle-free: the envelope is
+JVM expressions (binary decode + regexp header extraction +
+locate/substr splits), the strip is the DOM kernel's one Arrow map
+stage (``operators.dom.extract_html_main``).
 
 Synthesis (``derive_warc_records_from_documents``) builds one
 spec-shaped record per document over the SAME deterministic HTML as the
@@ -164,14 +165,12 @@ def _main_text_from_records(records: DataFrame) -> DataFrame:
     """The ONE composed chain (parse -> HTTP-200 filter -> DOM strip ->
     projection) shared by the plain and gzip-member round trips, so the
     'oracle byte-identical' claim between them cannot de-sync."""
-    from cloud_ocr_summarizer_spark.operators.dom import (
-        extract_html_main_simple,
-    )
+    from cloud_ocr_summarizer_spark.operators.dom import extract_html_main
 
     parsed = parse_warc_records(records)
     ok = parsed.where(F.col("http_status") == 200)
-    return extract_html_main_simple(
-        ok, keep=("target_uri", "content_length")
+    return extract_html_main(
+        ok, carry=("target_uri", "content_length")
     ).select("doc_id", "target_uri", "content_length", "main_text", "n_tokens")
 
 
@@ -181,8 +180,7 @@ def gzip_payloads(
     """Gzip each record payload (real WARC shards are per-record gzip
     members).  Deterministic bytes: fixed mtime=0 and compresslevel so
     the same input always produces the same member.  Arrow-batched
-    stdlib gzip — the only Python in the WARC layer, and it is the part
-    a JVM expression genuinely cannot do.
+    stdlib gzip — the part a JVM expression genuinely cannot do.
     """
     import pandas as pd
 

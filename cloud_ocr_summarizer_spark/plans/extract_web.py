@@ -10,19 +10,19 @@ way a user runs them — one call, one output row per document:
   n_spans, n_media                     (span extraction + kind tagging)
   n_blocks, first_block                (layout parse, reading order)
 
-Plan shape at scale: two branches over the same documents scan —
-
-* the SPAN branch is entirely row-local (extract_spans + the layout
-  fold + media counting never shuffle; one codegen stage per doc), and
-* the DOM branch is one ``mapInArrow`` stage running the shared
-  Arrow-native DOM kernel (``operators.dom``) —
-
-joined 1:1 on doc_id: a single O(docs) equi-join is the only shuffle in
-the whole pipeline.  The ``_fused`` twins carry the span branch's
-row-local stats through that Arrow stage instead: one scan, zero
-Exchanges, and the MapInArrow is the plan's only Python stage.  No
-Python runs per row or per token anywhere: the DOM kernel does
-O(batches) numpy / pyarrow.compute calls.
+Plan shape at scale: one pruned documents scan, zero Exchanges.  The
+span stats are entirely row-local (extract_spans + the layout fold +
+media counting never shuffle; one codegen stage per doc), so they are
+computed first and CARRIED through the one ``mapInArrow`` stage that
+runs the shared Arrow-native DOM kernel (``operators.dom``) — no second
+scan and no doc_id re-join.  The MapInArrow is the plan's only Python
+stage, and no Python runs per row or per token: the DOM kernel does
+O(batches) numpy / pyarrow.compute calls.  Two pipelines share this
+shape: the container strip (:func:`extract_web_documents_fused`) and the
+full Readability classifier
+(:func:`extract_web_documents_classified_fused`).  The registered queries
+``extract_web`` / ``extract_web_fused`` run the former and
+``extract_web_classified`` / ``extract_web_classified_fused`` the latter.
 """
 
 from __future__ import annotations
@@ -34,11 +34,15 @@ from pyspark.sql import functions as F
 
 from cloud_ocr_summarizer_spark import lineage
 from cloud_ocr_summarizer_spark.datagen import (
+    derive_classified_html_from_documents,
     derive_html_from_documents,
     derive_spans_from_documents,
 )
 from cloud_ocr_summarizer_spark.functions.text import memo_col
-from cloud_ocr_summarizer_spark.operators.dom import extract_html_main
+from cloud_ocr_summarizer_spark.operators.dom import (
+    extract_html_classified,
+    extract_html_main,
+)
 from cloud_ocr_summarizer_spark.operators.extract import extract_spans
 from cloud_ocr_summarizer_spark.operators.layout import blocks_rowlocal_col
 
@@ -46,13 +50,13 @@ from cloud_ocr_summarizer_spark.operators.layout import blocks_rowlocal_col
 def _span_stats_branch(
     docs: DataFrame,
     *,
-    keep: tuple[str, ...] = (),
+    keep: tuple[str, ...],
     layout_blocks_alias: str = "n_blocks",
 ) -> DataFrame:
     """Row-local span extraction + kind tagging + layout fold, reduced
-    to the per-doc stat columns every composed variant joins on or
-    carries.  ``keep`` passes document columns through (for fused
-    variants that still need text/source downstream);
+    to the per-doc stat columns the composed pipelines carry.  ``keep``
+    passes document columns through (text/source for the HTML deriver
+    downstream, and a lineage start clock);
     ``layout_blocks_alias`` renames the layout block count when the
     carrying stage has its own n_blocks column."""
     doc_id, *stats = _span_stats_cols(layout_blocks_alias)
@@ -79,57 +83,17 @@ def _span_stats_cols(layout_blocks_alias: str) -> tuple[Column, ...]:
     )
 
 
-def extract_web_documents(docs: DataFrame) -> DataFrame:
-    """One row per document combining DOM strip, span stats, and layout.
+def extract_web_documents_fused(docs: DataFrame) -> DataFrame:
+    """One row per document: DOM container strip, span stats and layout.
 
     ``docs`` is the documents table (doc_id, text, source, ...); the
     deterministic HTML/spans derivers stand in for raw crawl payloads,
-    exactly as in the single-operator queries (so each branch keeps its
-    independent oracle coverage).
-    """
-    dom = extract_html_main(derive_html_from_documents(docs))
-    return dom.join(_span_stats_branch(docs), "doc_id")
-
-
-def extract_web_documents_classified(docs: DataFrame) -> DataFrame:
-    """:func:`extract_web_documents` with the FULL Readability
-    classifier in the DOM branch: instead of the container strip alone,
-    every <p> block passes both integer heuristics (link density AND
-    text density — ``operators.dom.extract_html_classified``) before
-    reassembly.  Same plan shape: two branches over the documents scan,
-    one O(docs) equi-join as the only shuffle.
-
-    Output adds the classifier's counts (renamed ``n_html_blocks`` /
-    ``n_html_dropped`` — ``n_blocks`` stays the LAYOUT block count)."""
-    from cloud_ocr_summarizer_spark.datagen import (
-        derive_classified_html_from_documents,
-    )
-    from cloud_ocr_summarizer_spark.operators.dom import extract_html_classified
-
-    dom = extract_html_classified(
-        derive_classified_html_from_documents(docs)
-    ).select(
-        "doc_id",
-        "main_text",
-        "n_tokens",
-        F.col("n_blocks").alias("n_html_blocks"),
-        F.col("n_dropped").alias("n_html_dropped"),
-    )
-    return dom.join(_span_stats_branch(docs), "doc_id")
-
-
-def extract_web_documents_fused(docs: DataFrame) -> DataFrame:
-    """Zero-shuffle twin of :func:`extract_web_documents` — same output
-    contract and oracle, better plan at scale.
-
-    Every span-branch column is row-local, so instead of a second scan
-    plus a 1:1 join, the stats are computed first and CARRIED through
-    the DOM strip's Arrow stage (``extract_html_main(carry=...)``): ONE
-    pruned documents scan, one codegen stage, one Arrow map stage, zero
-    Exchanges.  At 100 TB this halves the input IO and removes the only
-    shuffle of the flat plan; keep the flat variant for inputs whose
-    branches genuinely come from different tables.  A lineage start
-    clock on ``docs`` is carried through too.
+    exactly as in the single-operator queries.  Every span-branch
+    column is row-local, so the stats are computed first and CARRIED
+    through the DOM strip's Arrow stage (``extract_html_main(carry=...)``):
+    ONE pruned documents scan, one codegen stage, one Arrow map stage,
+    zero Exchanges.  A lineage start clock on ``docs`` is carried
+    through too.
     """
     clock = lineage.carried(docs)
     stats = _span_stats_branch(docs, keep=("text", "source", *clock))
@@ -140,17 +104,17 @@ def extract_web_documents_fused(docs: DataFrame) -> DataFrame:
 
 
 def extract_web_documents_classified_fused(docs: DataFrame) -> DataFrame:
-    """Zero-shuffle twin of :func:`extract_web_documents_classified` —
-    same output contract and oracle.  The row-local span/layout stats
-    are computed first and CARRIED through the classifier's Arrow stage
-    (``extract_html_classified(carry=...)``): one pruned documents
-    scan, zero Exchanges.  A lineage start clock on ``docs`` is carried
-    through too."""
-    from cloud_ocr_summarizer_spark.datagen import (
-        derive_classified_html_from_documents,
-    )
-    from cloud_ocr_summarizer_spark.operators.dom import extract_html_classified
+    """:func:`extract_web_documents_fused` with the FULL Readability
+    classifier in place of the container strip: every <p> block passes
+    both integer heuristics (link density AND text density —
+    ``operators.dom.extract_html_classified``) before reassembly.  The
+    row-local span/layout stats are CARRIED through the classifier's
+    Arrow stage (``extract_html_classified(carry=...)``): one pruned
+    documents scan, zero Exchanges.  A lineage start clock on ``docs``
+    is carried through too.
 
+    Output adds the classifier's counts (renamed ``n_html_blocks`` /
+    ``n_html_dropped`` — ``n_blocks`` stays the LAYOUT block count)."""
     # layout count carried under a distinct name: the classifier's own
     # output already has an n_blocks column (its HTML block count)
     clock = lineage.carried(docs)
@@ -161,7 +125,8 @@ def extract_web_documents_classified_fused(docs: DataFrame) -> DataFrame:
     out = extract_html_classified(
         derive_classified_html_from_documents(stats, keep=carried), carry=carried
     )
-    # match the flat variant's column names/order exactly (same oracle)
+    # the classified output contract: classifier counts renamed, the
+    # layout count back under n_blocks
     return out.select(
         "doc_id",
         "main_text",
@@ -193,14 +158,15 @@ def run_web(
     Pending docs are the anti-join against the committed output
     (idempotent rerun); an optional salted repartition balances
     media-heavy documents across the Arrow workers of the DOM branch.
-    ``pipeline`` swaps the per-batch plan (default: the zero-shuffle
-    fused twin; pass ``extract_web_documents_classified`` to run the
-    full-Readability-classifier variant under the same resume/lineage
+    ``pipeline`` swaps the per-batch plan (default: the container-strip
+    pipeline :func:`extract_web_documents_fused`; pass
+    ``extract_web_documents_classified_fused`` to run the
+    full-Readability-classifier pipeline under the same resume/lineage
     contract — any (docs)->DataFrame with doc_id/main_text columns
     works; lineage needs an n_spans column, the lineage span count).
-    With lineage on, ``todo`` gets the lineage start clock; the fused
-    twins carry it, other pipelines are timed from their first output
-    row.  Returns a ``FlagshipResult``.
+    With lineage on, ``todo`` gets the lineage start clock; both
+    composed pipelines carry it, other pipelines are timed from their
+    first output row.  Returns a ``FlagshipResult``.
     """
     from cloud_ocr_summarizer_spark.operators.skew import salted_repartition
     from cloud_ocr_summarizer_spark.plans.flagship import commit_snapshot
@@ -218,9 +184,6 @@ def run_web(
         todo = salted_repartition(todo, repartition_to)
     if lineage_sink is not None:
         todo = lineage.stamp_start(todo)
-    # fused twin by default: the job reads one table, so the
-    # zero-shuffle plan (stats carried through the Arrow stage) is
-    # strictly better here
     make_web = pipeline if pipeline is not None else extract_web_documents_fused
     web = make_web(todo)
     return commit_snapshot(

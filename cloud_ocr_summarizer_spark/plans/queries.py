@@ -2247,18 +2247,8 @@ def q_html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
 BATCH_7["html_main_content"] = q_html_main_content
 
 
-def q_html_main_content_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-regex twin of html_main_content (zero Python, WholeStageCodegen
-    end to end); golden-equal on non-nested containers — same oracle."""
-    from cloud_ocr_summarizer_spark.datagen import derive_html_from_documents
-    from cloud_ocr_summarizer_spark.operators.dom import extract_html_main_simple
-
-    return extract_html_main_simple(
-        derive_html_from_documents(_read(spark, sf_dir, "documents"))
-    )
-
-
-BATCH_7["html_main_content_simple"] = q_html_main_content_simple
+# alias: keeps the registered name and its banked CORRECTNESS rows
+BATCH_7["html_main_content_simple"] = q_html_main_content
 
 
 def _layout_blocks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2346,18 +2336,21 @@ def q_layout_reading_order_rowlocal(spark: SparkSession, sf_dir: str) -> DataFra
 BATCH_7["layout_reading_order_rowlocal"] = q_layout_reading_order_rowlocal
 
 
-def q_extract_web(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_extract_web_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north-rule pipeline composed as ONE job
-    (plans/extract_web.py): DOM boilerplate strip (Arrow branch) +
-    row-local span extraction / kind tagging / layout parse (JVM
-    branch), joined 1:1 on doc_id — the equi-join is the only shuffle.
-    One output row per document."""
-    from cloud_ocr_summarizer_spark.plans.extract_web import extract_web_documents
+    (plans/extract_web.extract_web_documents_fused): DOM boilerplate
+    strip + row-local span extraction / kind tagging / layout parse,
+    the span stats carried THROUGH the DOM strip's Arrow stage — one
+    documents scan, zero Exchanges.  One output row per document."""
+    from cloud_ocr_summarizer_spark.plans.extract_web import (
+        extract_web_documents_fused,
+    )
 
-    return extract_web_documents(_read(spark, sf_dir, "documents"))
+    return extract_web_documents_fused(_read(spark, sf_dir, "documents"))
 
 
-BATCH_7["extract_web"] = q_extract_web
+# alias: keeps the registered name and its banked CORRECTNESS rows
+BATCH_7["extract_web"] = q_extract_web_fused
 
 
 def q_html_main_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2377,32 +2370,8 @@ def q_html_main_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
 BATCH_7["html_main_dense"] = q_html_main_dense
 
 
-def q_html_main_dense_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-expression twin of html_main_dense (regexp_extract_all blocks
-    + HOF density filter; WholeStageCodegen, zero Python)."""
-    from cloud_ocr_summarizer_spark.datagen import derive_linked_html_from_documents
-    from cloud_ocr_summarizer_spark.operators.dom import extract_html_dense_simple
-
-    return extract_html_dense_simple(
-        derive_linked_html_from_documents(_read(spark, sf_dir, "documents"))
-    )
-
-
-BATCH_7["html_main_dense_simple"] = q_html_main_dense_simple
-
-
-def q_extract_web_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-shuffle twin of extract_web (plans/extract_web.py): the
-    row-local span/layout stats are carried THROUGH the DOM strip's
-    Arrow stage instead of joined back — one documents scan, zero
-    Exchanges.  Same oracle as extract_web."""
-    from cloud_ocr_summarizer_spark.plans.extract_web import (
-        extract_web_documents_fused,
-    )
-
-    return extract_web_documents_fused(_read(spark, sf_dir, "documents"))
-
-
+# alias: keeps the registered name and its banked CORRECTNESS rows
+BATCH_7["html_main_dense_simple"] = q_html_main_dense
 BATCH_7["extract_web_fused"] = q_extract_web_fused
 
 
@@ -2425,18 +2394,8 @@ def q_html_main_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 BATCH_7["html_main_density"] = q_html_main_density
 
 
-def q_html_main_density_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-expression twin of html_main_density (regexp_extract_all
-    blocks + HOF words-per-wrapped-line rule; WholeStageCodegen)."""
-    from cloud_ocr_summarizer_spark.datagen import derive_density_html_from_documents
-    from cloud_ocr_summarizer_spark.operators.dom import extract_html_density_simple
-
-    return extract_html_density_simple(
-        derive_density_html_from_documents(_read(spark, sf_dir, "documents"))
-    )
-
-
-BATCH_7["html_main_density_simple"] = q_html_main_density_simple
+# alias: keeps the registered name and its banked CORRECTNESS rows
+BATCH_7["html_main_density_simple"] = q_html_main_density
 
 
 def q_pdf_text_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2573,37 +2532,25 @@ def q_html_main_classified(spark: SparkSession, sf_dir: str) -> DataFrame:
 BATCH_7["html_main_classified"] = q_html_main_classified
 
 
-def q_html_main_classified_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-expression twin of html_main_classified (both integer rules
-    in one HOF filter; WholeStageCodegen, zero Python)."""
-    from cloud_ocr_summarizer_spark.datagen import (
-        derive_classified_html_from_documents,
-    )
-    from cloud_ocr_summarizer_spark.operators.dom import (
-        extract_html_classified_simple,
-    )
-
-    return extract_html_classified_simple(
-        derive_classified_html_from_documents(_read(spark, sf_dir, "documents"))
-    )
+# alias: keeps the registered name and its banked CORRECTNESS rows
+BATCH_7["html_main_classified_simple"] = q_html_main_classified
 
 
-BATCH_7["html_main_classified_simple"] = q_html_main_classified_simple
-
-
-def q_extract_web_classified(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_extract_web_classified_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed north-rule job with the FULL Readability classifier
-    in the DOM branch (plans/extract_web.extract_web_documents_
-    classified): both integer heuristics per block + span stats +
-    layout, one equi-join as the only shuffle."""
+    (plans/extract_web.extract_web_documents_classified_fused): both
+    integer heuristics per block + span stats + layout, the stats
+    carried through the classifier's Arrow stage — one documents scan,
+    zero Exchanges."""
     from cloud_ocr_summarizer_spark.plans.extract_web import (
-        extract_web_documents_classified,
+        extract_web_documents_classified_fused,
     )
 
-    return extract_web_documents_classified(_read(spark, sf_dir, "documents"))
+    return extract_web_documents_classified_fused(_read(spark, sf_dir, "documents"))
 
 
-BATCH_7["extract_web_classified"] = q_extract_web_classified
+# alias: keeps the registered name and its banked CORRECTNESS rows
+BATCH_7["extract_web_classified"] = q_extract_web_classified_fused
 
 
 def q_media_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2650,17 +2597,6 @@ def q_media_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BATCH_7["media_pdf_layout"] = q_media_pdf_layout
-
-
-def q_extract_web_classified_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-shuffle fused twin of extract_web_classified: span/layout
-    stats carried through the classifier's Arrow stage — one documents
-    scan, zero Exchanges.  Same oracle as the flat variant."""
-    from cloud_ocr_summarizer_spark.plans.extract_web import (
-        extract_web_documents_classified_fused,
-    )
-
-    return extract_web_documents_classified_fused(_read(spark, sf_dir, "documents"))
 
 
 BATCH_7["extract_web_classified_fused"] = q_extract_web_classified_fused
@@ -3488,7 +3424,7 @@ def q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept set from doc_id arithmetic."""
     from cloud_ocr_summarizer_spark.datagen import derive_html_from_documents
     from cloud_ocr_summarizer_spark.operators.dom import (
-        extract_html_main_simple,
+        extract_html_main,
         inject_robots_noindex,
         meta_robots_gate,
     )
@@ -3496,7 +3432,7 @@ def q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     html = inject_robots_noindex(
         derive_html_from_documents(_read(spark, sf_dir, "documents"))
     )
-    return extract_html_main_simple(meta_robots_gate(html))
+    return extract_html_main(meta_robots_gate(html))
 
 
 BATCH_8["robots_gate"] = q_robots_gate

@@ -92,14 +92,11 @@ def start_incremental_extract_web(
 ) -> StreamingQuery:
     """AvailableNow streaming twin of the composed web-extraction job.
 
-    ``pipeline`` passes through to ``run_web`` (default: the fused
-    zero-shuffle plan; e.g. ``extract_web_documents_classified`` runs
-    the full-Readability-classifier variant incrementally).
+    ``pipeline`` passes through to ``run_web`` (default: the
+    container-strip pipeline; e.g. ``extract_web_documents_classified_fused``
+    runs the full-Readability-classifier pipeline incrementally).
 
-    The composed pipeline joins its DOM and span branches 1:1 on doc_id;
-    as a native stream-stream self-join that would need join state and
-    watermarks for a join that is logically per-row.  Instead each
-    micro-batch runs the BATCH pipeline via ``foreachBatch`` +
+    Each micro-batch runs the BATCH pipeline via ``foreachBatch`` +
     ``plans.extract_web.run_web``: the snapshot sink's anti-join pending
     filter makes a retried batch a no-op, so source offsets (stream
     checkpoint) + manifest commits give exactly-once end-to-end without

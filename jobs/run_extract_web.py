@@ -11,9 +11,12 @@ Packaging (north_rule: ships via --py-files):
         --repartition 4096
 
 One job runs the whole north-rule surface per document — DOM boilerplate
-strip + span extraction/kind tagging + layout parse — joined 1:1 on
-doc_id (the only shuffle).  Re-running after a failure resumes from the
-committed snapshots (left_anti on doc_id) — idempotent.
+strip + span extraction/kind tagging + layout parse — in one pass over
+the input: the row-local span stats ride through the DOM strip's Arrow
+stage, so the pipeline itself has no shuffle.  ``--repartition`` adds
+one (the salted rebalance before it), and so does the resume filter once
+snapshots exist: re-running after a failure resumes from the committed
+snapshots (left_anti on doc_id) — idempotent.
 """
 
 from __future__ import annotations

@@ -2,10 +2,9 @@
 
 from pyspark.sql import types as T
 
-from cloud_ocr_summarizer_spark.operators.dom import (
-    extract_html_main,
-    extract_html_main_simple,
-)
+from cloud_ocr_summarizer_spark.operators.dom import extract_html_main
+
+SF = "/root/testdata/sf0.001"
 
 SCHEMA = T.StructType(
     [
@@ -31,63 +30,61 @@ BASIC = (
 
 def test_strip_basic_both_paths(spark):
     rows = [(1, BASIC), (2, None), (3, ""), (4, "plain text, no tags")]
-    for fn in (extract_html_main, extract_html_main_simple):
-        out = _run(spark, fn, rows)
-        assert out[1] == ("hello brave new world", 4), fn.__name__
-        assert out[2] == ("", 0) and out[3] == ("", 0)
-        assert out[4] == ("plain text, no tags", 4)
+    out = _run(spark, extract_html_main, rows)
+    assert out[1] == ("hello brave new world", 4)
+    assert out[2] == ("", 0) and out[3] == ("", 0)
+    assert out[4] == ("plain text, no tags", 4)
 
 
 def test_stray_lt_inside_script(spark):
-    # the '<' in '1 < 2' is inside <script>: dropped by containment on the
-    # token path and by the container regex on the JVM path
+    # the '<' in '1 < 2' is inside <script>: dropped by containment
     html = "<body><script>if (a < b) {}</script><p>kept</p></body>"
-    for fn in (extract_html_main, extract_html_main_simple):
-        assert _run(spark, fn, [(1, html)])[1] == ("kept", 1), fn.__name__
+    assert _run(spark, extract_html_main, [(1, html)])[1] == ("kept", 1)
 
 
 def test_nested_container_canonical_only(spark):
-    # <aside> inside <aside>: the depth counter keeps counting; the
-    # non-greedy regex stops at the FIRST </aside> (documented limitation)
+    # <aside> inside <aside>: the depth counter keeps counting, so the
+    # text after the inner </aside> is still boilerplate (a non-greedy
+    # regex would stop at the FIRST </aside> and leak "trailing")
     html = (
         "<body><p>before</p>"
         "<aside>outer <aside>inner</aside> trailing</aside>"
         "<p>after</p></body>"
     )
     assert _run(spark, extract_html_main, [(1, html)])[1] == ("before after", 2)
-    leaked, _ = _run(spark, extract_html_main_simple, [(1, html)])[1]
-    assert "trailing" in leaked  # the honest divergence, pinned
 
 
 def test_header_regex_does_not_eat_head_close(spark):
     # '<head...' must not match the 'header' strip nor vice versa
     html = "<head><title>t</title></head><body><header>h</header><p>ok</p></body>"
-    for fn in (extract_html_main, extract_html_main_simple):
-        assert _run(spark, fn, [(1, html)])[1] == ("ok", 1), fn.__name__
+    assert _run(spark, extract_html_main, [(1, html)])[1] == ("ok", 1)
 
 
-def test_golden_equal_on_synthesized_corpus(spark):
+def test_golden_equal_on_synthesized_corpus(spark, oracle_equal):
     from cloud_ocr_summarizer_spark.datagen import derive_html_from_documents
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(200)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
     html = derive_html_from_documents(docs)
-    a = sorted(map(tuple, extract_html_main(html).collect()))
-    b = sorted(map(tuple, extract_html_main_simple(html).collect()))
-    assert a == b and len(a) == 200
+    res = oracle_equal(extract_html_main(html), "html_main_content", SF)
+    assert res["spark_rows"] == docs.count()
 
 
 def test_empty_input(spark):
     empty = spark.createDataFrame([], SCHEMA)
     assert extract_html_main(empty).count() == 0
-    assert extract_html_main_simple(empty).count() == 0
 
 
-# ---- link-density block classification (extract_html_dense twins) ----
+# ---- link-density block classification (extract_html_dense) ----
 
-from cloud_ocr_summarizer_spark.operators.dom import (  # noqa: E402
-    extract_html_dense,
-    extract_html_dense_simple,
-)
+from cloud_ocr_summarizer_spark.operators.dom import extract_html_dense  # noqa: E402
+
+
+def _block_totals(df):
+    """(dropped, blocks) summed over every document."""
+    from pyspark.sql import functions as F
+
+    row = df.agg(F.sum("n_dropped"), F.sum("n_blocks")).first()
+    return row[0], row[1]
 
 
 def _run_dense(spark, fn, rows):
@@ -113,59 +110,48 @@ def test_density_rule_boundaries_both_paths(spark):
     # block 1: 3/3 linked -> dropped; block 2: 2/5 linked -> kept;
     # block 3: 0/3 -> kept; block 4: empty (0/0) -> kept, no text.
     # nav anchors are inside a boilerplate container: never counted.
-    for fn in (extract_html_dense, extract_html_dense_simple):
-        out = _run_dense(spark, fn, [(1, DENSE)])
-        assert out[1] == ("half here and half plain plain prose block", 8, 4, 1), (
-            fn.__name__
-        )
+    out = _run_dense(spark, extract_html_dense, [(1, DENSE)])
+    assert out[1] == ("half here and half plain plain prose block", 8, 4, 1)
 
 
 def test_density_exactly_half_is_kept(spark):
     # 2 of 4 tokens linked: 2*2 <= 4 -> kept (the boundary is inclusive)
     html = '<body><p><a href="#">one two</a> three four</p></body>'
-    for fn in (extract_html_dense, extract_html_dense_simple):
-        assert _run_dense(spark, fn, [(1, html)])[1] == (
-            "one two three four", 4, 1, 0,
-        ), fn.__name__
+    assert _run_dense(spark, extract_html_dense, [(1, html)])[1] == (
+        "one two three four", 4, 1, 0,
+    )
 
 
 def test_density_majority_linked_is_dropped(spark):
     # 3 of 5 tokens linked: 2*3 > 5 -> dropped
     html = '<body><p><a href="#">one two three</a> four five</p></body>'
-    for fn in (extract_html_dense, extract_html_dense_simple):
-        assert _run_dense(spark, fn, [(1, html)])[1] == ("", 0, 1, 1), fn.__name__
+    assert _run_dense(spark, extract_html_dense, [(1, html)])[1] == ("", 0, 1, 1)
 
 
 def test_dense_null_and_blockless_input(spark):
     rows = [(1, None), (2, "no tags at all"), (3, "")]
-    for fn in (extract_html_dense, extract_html_dense_simple):
-        out = _run_dense(spark, fn, rows)
-        # text outside any <p> block is not part of any block's density
-        # decision and not emitted (the <p>-contents-only contract)
-        assert out[1] == ("", 0, 0, 0) and out[2] == ("", 0, 0, 0)
-        assert out[3] == ("", 0, 0, 0), fn.__name__
+    out = _run_dense(spark, extract_html_dense, rows)
+    # text outside any <p> block is not part of any block's density
+    # decision and not emitted (the <p>-contents-only contract)
+    assert out[1] == ("", 0, 0, 0) and out[2] == ("", 0, 0, 0)
+    assert out[3] == ("", 0, 0, 0)
 
 
-def test_dense_golden_equal_on_synthesized_corpus(spark):
+def test_dense_golden_equal_on_synthesized_corpus(spark, oracle_equal):
     from cloud_ocr_summarizer_spark.datagen import derive_linked_html_from_documents
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(200)
-    html = derive_linked_html_from_documents(docs)
-    a = sorted(map(tuple, extract_html_dense(html).collect()))
-    b = sorted(map(tuple, extract_html_dense_simple(html).collect()))
-    assert a == b and len(a) == 200
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    out = extract_html_dense(derive_linked_html_from_documents(docs))
+    res = oracle_equal(out, "html_main_dense", SF)
+    assert res["spark_rows"] == docs.count()
     # the deriver's class arithmetic guarantees some of each outcome
-    dropped = sum(r[4] for r in a)
-    blocks = sum(r[3] for r in a)
+    dropped, blocks = _block_totals(out)
     assert 0 < dropped < blocks
 
 
-# ---- text-density block classification (extract_html_density twins) ----
+# ---- text-density block classification (extract_html_density) ----
 
-from cloud_ocr_summarizer_spark.operators.dom import (  # noqa: E402
-    extract_html_density,
-    extract_html_density_simple,
-)
+from cloud_ocr_summarizer_spark.operators.dom import extract_html_density  # noqa: E402
 
 
 def test_textdensity_one_line_boundary_both_paths(spark):
@@ -174,9 +160,8 @@ def test_textdensity_one_line_boundary_both_paths(spark):
         "<body><p>one two three four five six seven</p>"
         "<p>one two three four five six</p></body>"
     )
-    for fn in (extract_html_density, extract_html_density_simple):
-        out = _run_dense(spark, fn, [(1, html)])
-        assert out[1] == ("one two three four five six seven", 7, 2, 1), fn.__name__
+    out = _run_dense(spark, extract_html_density, [(1, html)])
+    assert out[1] == ("one two three four five six seven", 7, 2, 1)
 
 
 def test_textdensity_wrapped_lines_raise_the_bar(spark):
@@ -185,9 +170,8 @@ def test_textdensity_wrapped_lines_raise_the_bar(spark):
     w = " ".join(["sixchr"] * 14)
     v = " ".join(["sixchr"] * 13)
     html = f"<body><p>{w}</p><p>{v}</p></body>"
-    for fn in (extract_html_density, extract_html_density_simple):
-        out = _run_dense(spark, fn, [(1, html)])
-        assert out[1] == (w, 14, 2, 1), fn.__name__
+    out = _run_dense(spark, extract_html_density, [(1, html)])
+    assert out[1] == (w, 14, 2, 1)
 
 
 def test_textdensity_exact_80_char_line(spark):
@@ -197,9 +181,8 @@ def test_textdensity_exact_80_char_line(spark):
     w80 = " ".join(["abcdefghijklmnop"] + base[1:])  # 16+8*7+8 = 80
     w81 = " ".join(["abcdefghijklmnopq"] + base[1:])  # 81
     html = f"<body><p>{w80}</p><p>{w81}</p></body>"
-    for fn in (extract_html_density, extract_html_density_simple):
-        out = _run_dense(spark, fn, [(1, html)])
-        assert out[1] == (w80, 9, 2, 1), fn.__name__
+    out = _run_dense(spark, extract_html_density, [(1, html)])
+    assert out[1] == (w80, 9, 2, 1)
 
 
 def test_textdensity_fragment_and_container_strip(spark):
@@ -210,40 +193,31 @@ def test_textdensity_fragment_and_container_strip(spark):
         "<p>(c) 2026</p><p></p>"
         "<p>real content sentence with exactly seven words</p></body>"
     )
-    for fn in (extract_html_density, extract_html_density_simple):
-        out = _run_dense(spark, fn, [(1, html)])
-        assert out[1] == (
-            "real content sentence with exactly seven words", 7, 3, 2,
-        ), fn.__name__
+    out = _run_dense(spark, extract_html_density, [(1, html)])
+    assert out[1] == ("real content sentence with exactly seven words", 7, 3, 2)
 
 
 def test_textdensity_null_and_blockless_input(spark):
     rows = [(1, None), (2, "free text outside blocks"), (3, "")]
-    for fn in (extract_html_density, extract_html_density_simple):
-        out = _run_dense(spark, fn, rows)
-        assert out[1] == ("", 0, 0, 0) and out[2] == ("", 0, 0, 0)
-        assert out[3] == ("", 0, 0, 0), fn.__name__
+    out = _run_dense(spark, extract_html_density, rows)
+    assert out[1] == ("", 0, 0, 0) and out[2] == ("", 0, 0, 0)
+    assert out[3] == ("", 0, 0, 0)
 
 
-def test_textdensity_golden_equal_on_synthesized_corpus(spark):
+def test_textdensity_golden_equal_on_synthesized_corpus(spark, oracle_equal):
     from cloud_ocr_summarizer_spark.datagen import derive_density_html_from_documents
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(200)
-    html = derive_density_html_from_documents(docs)
-    a = sorted(map(tuple, extract_html_density(html).collect()))
-    b = sorted(map(tuple, extract_html_density_simple(html).collect()))
-    assert a == b and len(a) == 200
-    dropped = sum(r[4] for r in a)
-    blocks = sum(r[3] for r in a)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    out = extract_html_density(derive_density_html_from_documents(docs))
+    res = oracle_equal(out, "html_main_density", SF)
+    assert res["spark_rows"] == docs.count()
+    dropped, blocks = _block_totals(out)
     assert 0 < dropped < blocks
 
 
-# ---- combined Readability classifier (extract_html_classified twins) ----
+# ---- combined Readability classifier (extract_html_classified) ----
 
-from cloud_ocr_summarizer_spark.operators.dom import (  # noqa: E402
-    extract_html_classified,
-    extract_html_classified_simple,
-)
+from cloud_ocr_summarizer_spark.operators.dom import extract_html_classified  # noqa: E402
 
 
 def test_classified_both_rules_fire_independently(spark):
@@ -259,27 +233,24 @@ def test_classified_both_rules_fire_independently(spark):
         '<p><a href="#">one two three four</a> five six seven eight</p>'
         "</body>"
     )
-    for fn in (extract_html_classified, extract_html_classified_simple):
-        out = _run_dense(spark, fn, [(1, html)])
-        assert out[1] == (
-            "one two three four five six seven "
-            "one two three four five six seven eight",
-            15, 4, 2,
-        ), fn.__name__
+    out = _run_dense(spark, extract_html_classified, [(1, html)])
+    assert out[1] == (
+        "one two three four five six seven "
+        "one two three four five six seven eight",
+        15, 4, 2,
+    )
 
 
-def test_classified_golden_equal_and_all_classes(spark):
+def test_classified_golden_equal_and_all_classes(spark, oracle_equal):
     from cloud_ocr_summarizer_spark.datagen import (
         derive_classified_html_from_documents,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(200)
-    html = derive_classified_html_from_documents(docs)
-    a = sorted(map(tuple, extract_html_classified(html).collect()))
-    b = sorted(map(tuple, extract_html_classified_simple(html).collect()))
-    assert a == b and len(a) == 200
-    dropped = sum(r[4] for r in a)
-    blocks = sum(r[3] for r in a)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    out = extract_html_classified(derive_classified_html_from_documents(docs))
+    res = oracle_equal(out, "html_main_classified", SF)
+    assert res["spark_rows"] == docs.count()
+    dropped, blocks = _block_totals(out)
     # classes 0 (link-dense) and 2 (fragment) both drop; >= 2/5 of
     # blocks must go, and plenty must survive
     assert blocks * 2 // 5 <= dropped < blocks

@@ -1,8 +1,9 @@
-"""Composed web-extraction pipeline (plans/extract_web.py): the
-north-rule job as one call — DOM strip + span extraction + layout parse
-joined per document.  The DuckDB oracle (plans/oracles.py
-``extract_web``) covers cross-engine values; these tests pin the
-composition against its own single-operator branches and the plan shape.
+"""Composed web-extraction pipelines (plans/extract_web.py): the
+north-rule job as one call — DOM strip + span extraction + layout parse,
+one row per document.  These tests pin each pipeline against its DuckDB
+oracle (plans/oracles.py ``extract_web`` / ``extract_web_classified``),
+against its own single-operator branches, and the zero-Exchange plan
+shape.
 """
 
 from pyspark.sql import functions as F
@@ -11,9 +12,9 @@ SF = "/root/testdata/sf0.001"
 
 
 def _web(spark):
-    from cloud_ocr_summarizer_spark.plans.extract_web import extract_web_documents
+    from cloud_ocr_summarizer_spark.plans.extract_web import extract_web_documents_fused
 
-    return extract_web_documents(
+    return extract_web_documents_fused(
         spark.read.parquet(f"{SF}/documents.parquet")
     )
 
@@ -63,9 +64,10 @@ def test_empty_document_survives_both_variants(spark):
     """A document with no words has zero blocks; element_at(…, 1) on the
     empty block array would kill the whole JOB under ANSI mode (found on
     the 1M bench corpus — the sf testdata has no empty docs).  Both
-    variants must emit the row with zero counts and a NULL first_block."""
+    pipelines (strip and classified) must emit the row with zero counts
+    and a NULL first_block."""
     from cloud_ocr_summarizer_spark.plans.extract_web import (
-        extract_web_documents,
+        extract_web_documents_classified_fused,
         extract_web_documents_fused,
     )
 
@@ -73,7 +75,7 @@ def test_empty_document_survives_both_variants(spark):
         [(1, "", "s0"), (2, "   ", "s0"), (3, "some real words here", "s1")],
         "doc_id long, text string, source string",
     )
-    for fn in (extract_web_documents, extract_web_documents_fused):
+    for fn in (extract_web_documents_fused, extract_web_documents_classified_fused):
         got = {r["doc_id"]: r for r in fn(docs).collect()}
         assert set(got) == {1, 2, 3}, fn.__name__
         for d in (1, 2):
@@ -114,10 +116,10 @@ def test_run_web_idempotent_resume(spark, tmp_path):
     assert agg["s"] == committed.agg(F.sum("n_spans")).first()[0]
 
 
-def test_fused_twin_zero_shuffle_and_equal(spark):
-    """The fused variant carries the row-local span/layout stats through
-    the DOM Arrow stage: ONE documents scan, ZERO Exchanges, and rows
-    identical to the flat join plan."""
+def test_fused_twin_zero_shuffle_and_equal(spark, oracle_equal):
+    """The pipeline carries the row-local span/layout stats through the
+    DOM Arrow stage: ONE documents scan, ZERO Exchanges, and rows equal
+    to the DuckDB oracle."""
     from cloud_ocr_summarizer_spark.plans.extract_web import (
         extract_web_documents_fused,
     )
@@ -128,9 +130,8 @@ def test_fused_twin_zero_shuffle_and_equal(spark):
     assert "Exchange" not in p
     assert p.count("Scan parquet") == 1
 
-    a = sorted(map(tuple, fused.collect()))
-    b = sorted(map(tuple, _web(spark).collect()))
-    assert a == b and len(a) == docs.count()
+    res = oracle_equal(fused, "extract_web", SF)
+    assert res["spark_rows"] == docs.count()
 
 
 def test_fused_twins_carry_the_lineage_start_clock(spark):
@@ -149,21 +150,12 @@ def test_fused_twins_carry_the_lineage_start_clock(spark):
         assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
 
 
-def test_extract_web_single_join_is_only_shuffle(spark):
-    """Both branches are map stages; the 1:1 doc_id equi-join is the
-    pipeline's only shuffle boundary (one Exchange per join side), and
-    nothing reintroduces a Window sort."""
-    p = _web(spark)._jdf.queryExecution().executedPlan().toString()
-    assert p.count("Exchange") <= 2
-    assert "Window" not in p
-
-
 def test_classified_variant_one_row_and_empty_docs(spark):
-    """The full-Readability-classifier composed variant: one row per
+    """The full-Readability-classifier composed pipeline: one row per
     document, classifier counts surface renamed (layout n_blocks is
     preserved), and zero-word docs survive under ANSI mode."""
     from cloud_ocr_summarizer_spark.plans.extract_web import (
-        extract_web_documents_classified,
+        extract_web_documents_classified_fused,
     )
 
     docs = spark.createDataFrame(
@@ -173,7 +165,9 @@ def test_classified_variant_one_row_and_empty_docs(spark):
         ],
         "doc_id long, text string, source string",
     )
-    got = {r["doc_id"]: r for r in extract_web_documents_classified(docs).collect()}
+    got = {
+        r["doc_id"]: r for r in extract_web_documents_classified_fused(docs).collect()
+    }
     assert set(got) == {1, 2}
     r1 = got[1]
     assert (r1["n_spans"], r1["n_media"], r1["n_blocks"]) == (0, 0, 0)
@@ -188,11 +182,11 @@ def test_classified_variant_one_row_and_empty_docs(spark):
 
 
 def test_run_web_classified_pipeline_resume(spark, tmp_path):
-    """The classified variant plugs into the same resume/lineage
+    """The classified pipeline plugs into the same resume/lineage
     contract via run_web(pipeline=...): first run commits, rerun is a
     no-op, classifier columns survive the snapshot round trip."""
     from cloud_ocr_summarizer_spark.plans.extract_web import (
-        extract_web_documents_classified,
+        extract_web_documents_classified_fused,
         run_web,
     )
     from cloud_ocr_summarizer_spark.sources.checkpoint import SnapshotSink
@@ -201,11 +195,11 @@ def test_run_web_classified_pipeline_resume(spark, tmp_path):
     out = str(tmp_path / "out")
 
     r1 = run_web(
-        spark, docs, output_root=out, pipeline=extract_web_documents_classified
+        spark, docs, output_root=out, pipeline=extract_web_documents_classified_fused
     )
     assert r1.docs_written == 40
     r2 = run_web(
-        spark, docs, output_root=out, pipeline=extract_web_documents_classified
+        spark, docs, output_root=out, pipeline=extract_web_documents_classified_fused
     )
     assert r2.docs_written == 0
 
@@ -215,29 +209,10 @@ def test_run_web_classified_pipeline_resume(spark, tmp_path):
     assert committed.agg(F.sum("n_html_dropped")).first()[0] > 0
 
 
-def test_classified_variant_single_join_is_only_shuffle(spark):
-    """The classified DOM branch is still one Arrow map stage — the
-    composed plan keeps the 1:1 equi-join as its only shuffle."""
+def test_classified_fused_zero_shuffle_and_equal(spark, oracle_equal):
+    """The classified pipeline: zero Exchanges, rows equal to the DuckDB
+    oracle, and the classifier both drops and keeps blocks."""
     from cloud_ocr_summarizer_spark.plans.extract_web import (
-        extract_web_documents_classified,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = (
-        extract_web_documents_classified(docs)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert p.count("Exchange") <= 2
-    assert "Window" not in p
-
-
-def test_classified_fused_zero_shuffle_and_equal(spark):
-    """The classified fused twin: zero Exchanges, rows identical to the
-    flat classified plan."""
-    from cloud_ocr_summarizer_spark.plans.extract_web import (
-        extract_web_documents_classified,
         extract_web_documents_classified_fused,
     )
 
@@ -245,9 +220,10 @@ def test_classified_fused_zero_shuffle_and_equal(spark):
     fused = extract_web_documents_classified_fused(docs)
     p = fused._jdf.queryExecution().executedPlan().toString()
     assert p.count("Exchange") == 0 and "Window" not in p
-    a = sorted(map(tuple, fused.collect()))
-    b = sorted(map(tuple, extract_web_documents_classified(docs).collect()))
-    assert a == b and len(a) == 500
+    res = oracle_equal(fused, "extract_web_classified", SF)
+    assert res["spark_rows"] == 500
+    row = fused.agg(F.sum("n_html_dropped"), F.sum("n_html_blocks")).first()
+    assert 0 < row[0] < row[1]
 
 
 def test_fused_plans_have_one_arrow_python_stage(spark):

@@ -121,10 +121,7 @@ def test_html_dense_fuzz_vs_python(spark, rng):
     block structures (word/link counts, whitespace noise, attributes,
     self-closing tags, boiler wrappers) rendered to HTML, expected
     output derived from the structure — never from parsing."""
-    from cloud_ocr_summarizer_spark.operators.dom import (
-        extract_html_dense,
-        extract_html_dense_simple,
-    )
+    from cloud_ocr_summarizer_spark.operators.dom import extract_html_dense
 
     words = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
     rows, expected = [], {}
@@ -159,14 +156,11 @@ def test_html_dense_fuzz_vs_python(spark, rng):
         )
 
     df = spark.createDataFrame(rows, "doc_id long, html string")
-    for fn in (extract_html_dense, extract_html_dense_simple):
-        got = {
-            r["doc_id"]: (
-                r["main_text"], r["n_tokens"], r["n_blocks"], r["n_dropped"]
-            )
-            for r in fn(df).collect()
-        }
-        assert got == expected, fn.__name__
+    got = {
+        r["doc_id"]: (r["main_text"], r["n_tokens"], r["n_blocks"], r["n_dropped"])
+        for r in extract_html_dense(df).collect()
+    }
+    assert got == expected
 
 
 def test_pdf_stream_fuzz_vs_python(spark, rng):
@@ -225,10 +219,7 @@ def test_html_classified_fuzz_vs_python(spark, rng):
     the same random block structures as the dense fuzz, but the model
     applies BOTH integer rules (2*link > total; wc < 7*ceil(nc/80))
     to decide each block's fate — never by parsing."""
-    from cloud_ocr_summarizer_spark.operators.dom import (
-        extract_html_classified,
-        extract_html_classified_simple,
-    )
+    from cloud_ocr_summarizer_spark.operators.dom import extract_html_classified
 
     # mixed word lengths so the wrapped-line arithmetic is exercised
     words = ["alpha", "beta", "gamma", "supercalifragilistic", "eps", "zz"]
@@ -267,14 +258,11 @@ def test_html_classified_fuzz_vs_python(spark, rng):
         )
 
     df = spark.createDataFrame(rows, "doc_id long, html string")
-    for fn in (extract_html_classified, extract_html_classified_simple):
-        got = {
-            r["doc_id"]: (
-                r["main_text"], r["n_tokens"], r["n_blocks"], r["n_dropped"]
-            )
-            for r in fn(df).collect()
-        }
-        assert got == expected, fn.__name__
+    got = {
+        r["doc_id"]: (r["main_text"], r["n_tokens"], r["n_blocks"], r["n_dropped"])
+        for r in extract_html_classified(df).collect()
+    }
+    assert got == expected
     # both rules must actually fire somewhere in the corpus
     assert any(v[3] for v in expected.values())
     assert any(v[1] for v in expected.values())

@@ -68,3 +68,28 @@ def test_every_query_has_oracle_or_is_known_rows_only():
         f"{sorted(missing - rows_only_by_design)}"
     )
     assert not (oracles - queries), f"orphan oracles: {sorted(oracles - queries)}"
+
+
+# retired twins whose query names stay registered as aliases of the
+# surviving plan (registry name -> canonical registry name)
+ALIASES = {
+    "html_main_content_simple": "html_main_content",
+    "html_main_dense_simple": "html_main_dense",
+    "html_main_density_simple": "html_main_density",
+    "html_main_classified_simple": "html_main_classified",
+    "extract_web": "extract_web_fused",
+    "extract_web_classified": "extract_web_classified_fused",
+}
+
+
+def test_retired_twin_names_alias_the_survivors():
+    """Each alias keeps its ``queries()`` and ``oracle_sql()`` entries
+    (so its banked CORRECTNESS rows stay valid), runs the canonical
+    query's function, and the registry still has 195 names."""
+    queries = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    for alias, canonical in ALIASES.items():
+        assert alias in queries and alias in oracles, alias
+        assert queries[alias].__name__ == queries[canonical].__name__, alias
+        assert oracles[alias] == oracles[canonical], alias
+    assert len(queries) == 195
