@@ -54,9 +54,10 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from cloud_ocr_summarizer_spark.operators.extract import extract_spans
-    from cloud_ocr_summarizer_spark.operators.extract_arrow import (
-        extract_and_classify_arrow,
+    from cloud_ocr_summarizer_spark.operators.classify import main_content_rows
+    from cloud_ocr_summarizer_spark.operators.extract import (
+        extract_span_rows,
+        extract_spans,
     )
     from cloud_ocr_summarizer_spark.operators.extract_arrow_native import (
         extract_span_rows_arrow_native,
@@ -84,14 +85,10 @@ def main() -> int:
     )
     # q1b: the row-local expression twin (JVM-only reference point)
     timed("q1b_extract_expression", lambda: _force(extract_spans(bench_docs)))
-    # q1c: explode+window reassembly variant (the 1-shuffle path)
-    from cloud_ocr_summarizer_spark.operators.extract import extract_spans_exploded
-
-    timed("q1c_extract_window", lambda: _force(extract_spans_exploded(bench_docs)))
-    # q2: fused extraction + vectorized pandas classification (one Arrow pass)
+    # q2: JVM extraction + the vectorized pandas classifier (Arrow batches)
     timed(
-        "q2_main_content_detailed",
-        lambda: _force(extract_and_classify_arrow(bench_docs, content_only=True)),
+        "q2_main_content",
+        lambda: _force(main_content_rows(extract_span_rows(bench_docs))),
     )
     # q3: TPC-H Q1-shape aggregation on lineitem (sf tier)
     timed("q3_pricing_summary", lambda: _force(Q.q_pricing_summary(spark, sf_dir)))
@@ -132,10 +129,6 @@ def main() -> int:
         derive_spans_from_documents,
     )
     from cloud_ocr_summarizer_spark.operators.dom import extract_html_main
-    from cloud_ocr_summarizer_spark.operators.extract import (
-        extract_spans as _extract_spans_op,
-        extract_span_rows,
-    )
     from cloud_ocr_summarizer_spark.operators.layout import (
         assemble_reading_order,
         block_rollup,
@@ -178,7 +171,7 @@ def main() -> int:
         "q11b_layout_rowlocal",
         lambda: _force(
             reading_order_rowlocal(
-                _extract_spans_op(
+                extract_spans(
                     derive_spans_from_documents(docs120), with_stats=False
                 )
             )

@@ -2,18 +2,13 @@
 (Readability-style boilerplate stripping), the engine's replacement for the
 reference's per-page remote summarization calls (U2, gemini.py:118-133).
 
-Two physical strategies, same semantics (mirrors the reference's
-simple/detailed output-mode duality, vision_processor.py:119-122):
+One physical path: ``classify_spans`` scores Arrow batches with
+``mapInPandas``.  Whole documents arrive as pandas batches; scoring is
+vectorized pandas string ops (NO per-row Python).  The same scoring as
+JVM column expressions measured 1.6x slower (ROADMAP.md item 3).
 
-* ``content_score_col`` / ``classify_spans_simple`` — pure column
-  expressions, JVM-side, zero Python.  Default.
-* ``classify_spans_detailed`` — Arrow-batched ``mapInPandas``: whole
-  documents arrive as pandas batches; scoring is vectorized numpy/pandas
-  string ops (NO per-row Python).  This is the slot where heavier
-  DOM/layout parsing plugs in at 100 TB; the batch shape, schema and
-  partitioning are what matter.
-
-Scoring contract (pinned by oracle_content_score in tests):
+Scoring contract (pinned against the DuckDB ``main_content`` oracle in
+tests/test_pipeline.py; every class below is ASCII, like the oracle's):
   text_density  = min(n_tokens / 40, 1)
   link_density  = link_tokens / n_tokens          (tokens containing '://'
                                                    or starting 'http')
@@ -26,73 +21,20 @@ Scoring contract (pinned by oracle_content_score in tests):
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from cloud_ocr_summarizer_spark import config
-from cloud_ocr_summarizer_spark.functions.text import whitespace_tokens_col
 
 CONTENT_THRESHOLD_BP = 5000
 MIN_CONTENT_TOKENS = 3
 
 
-# ---------------------------------------------------------------------------
-# simple mode: column expressions
-# ---------------------------------------------------------------------------
-def content_score_col(kind: Column, text: Column) -> Column:
-    """Content score in basis points, JVM-side."""
-    words = whitespace_tokens_col(text)
-    n_tokens = F.size(words)
-    link_tokens = F.size(
-        F.filter(words, lambda w: w.contains("://") | w.startswith("http"))
-    )
-    n_chars = F.length(F.coalesce(text, F.lit("")))
-    # punct count = residue after deleting alnum/ws RUNS (the + matters:
-    # single-char classes make the regex engine iterate one replacement
-    # per character — measured 17x slower; see textstats.quality_score_col)
-    n_punct = F.length(
-        F.regexp_replace(F.coalesce(text, F.lit("")), r"[A-Za-z0-9\s]+", "")
-    )
-    text_density = F.least(n_tokens / F.lit(40.0), F.lit(1.0))
-    link_density = F.when(n_tokens > 0, link_tokens / n_tokens).otherwise(F.lit(0.0))
-    punct_density = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
-    score = (
-        0.5 * text_density + 0.3 * (1 - link_density) + 0.2 * (1 - punct_density)
-    )
-    bp = F.floor(score * 10000).cast("int")
-    return (
-        F.when(kind.isin(*config.MEDIA_KINDS), F.lit(10000))
-        .when(kind.isin(*config.TEXT_KINDS), bp)
-        .otherwise(F.lit(0))
-    )
-
-
-def is_content_col(kind: Column, text: Column) -> Column:
-    n_tokens = F.size(whitespace_tokens_col(text))
-    return (
-        F.when(kind.isin(*config.MEDIA_KINDS), F.lit(True))
-        .when(
-            kind.isin(*config.TEXT_KINDS),
-            (content_score_col(kind, text) >= CONTENT_THRESHOLD_BP)
-            & (n_tokens >= MIN_CONTENT_TOKENS),
-        )
-        .otherwise(F.lit(False))
-    )
-
-
-def classify_spans_simple(span_rows: DataFrame) -> DataFrame:
-    """Append (content_score, is_content) to flat span rows — simple mode."""
-    return span_rows.withColumn(
-        "content_score", content_score_col(F.col("kind"), F.col("text"))
-    ).withColumn("is_content", is_content_col(F.col("kind"), F.col("text")))
-
-
-# ---------------------------------------------------------------------------
-# detailed mode: vectorized pandas over Arrow batches
-# ---------------------------------------------------------------------------
 def _classified_schema(input_schema: T.StructType) -> T.StructType:
     """Input columns passed through + the two score columns appended —
     works for any doc_id type (string at corpus scale, long in testdata)."""
@@ -106,16 +48,18 @@ def _classified_schema(input_schema: T.StructType) -> T.StructType:
 
 
 def _score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized scoring of one Arrow batch of span rows."""
-    import numpy as np
-
+    """Vectorized scoring of one Arrow batch of span rows.  ``re.ASCII``
+    keeps ``\\s`` ASCII like the oracle's: Unicode ``\\s`` would also split
+    on ``\\xa0``, ``\\u2003`` or ``\\x1c``."""
     text = pdf["text"].fillna("")
-    n_tokens = text.str.count(r"\S+").astype("int64")
+    n_tokens = text.str.count(r"\S+", flags=re.ASCII).astype("int64")
     # one match per token starting-position: token starts with 'http' OR
-    # contains '://' — same predicate as the JVM/SQL twins, fully vectorized
-    link_tokens = text.str.count(r"(?<!\S)(?:http|\S*://)").astype("int64")
+    # contains '://' — same predicate as the SQL oracle, fully vectorized
+    link_tokens = text.str.count(
+        r"(?<!\S)(?:http|\S*://)", flags=re.ASCII
+    ).astype("int64")
     n_chars = text.str.len().astype("int64")
-    n_punct = text.str.count(r"[^A-Za-z0-9\s]").astype("int64")
+    n_punct = text.str.count(r"[^A-Za-z0-9\s]", flags=re.ASCII).astype("int64")
     with np.errstate(divide="ignore", invalid="ignore"):
         text_density = np.minimum(n_tokens / 40.0, 1.0)
         link_density = np.where(n_tokens > 0, link_tokens / n_tokens, 0.0)
@@ -139,12 +83,12 @@ def _score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def classify_spans_detailed(span_rows: DataFrame) -> DataFrame:
-    """Detailed mode: same contract via mapInPandas (Arrow batches).
+def classify_spans(span_rows: DataFrame) -> DataFrame:
+    """Append (content_score, is_content) to flat span rows via
+    mapInPandas (Arrow batches).
 
     Spans of one document may be split across batches/partitions — the
-    scoring is span-local so that's safe; reassembly stays with the
-    window path downstream.
+    scoring is span-local so that's safe.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -154,9 +98,6 @@ def classify_spans_detailed(span_rows: DataFrame) -> DataFrame:
     return span_rows.mapInPandas(run, schema=_classified_schema(span_rows.schema))
 
 
-def main_content_rows(span_rows: DataFrame, *, detailed: bool = False) -> DataFrame:
+def main_content_rows(span_rows: DataFrame) -> DataFrame:
     """Main-content selection: classify then keep content spans only."""
-    classified = (
-        classify_spans_detailed(span_rows) if detailed else classify_spans_simple(span_rows)
-    )
-    return classified.filter(F.col("is_content"))
+    return classify_spans(span_rows).filter(F.col("is_content"))

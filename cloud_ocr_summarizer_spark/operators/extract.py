@@ -1,22 +1,22 @@
 """Flagship extraction: interleaved spans -> ordered, classified sequences.
 
-Two physical strategies for the same logical operator (SURVEY.md §2.3):
+One physical strategy per output shape (SURVEY.md §2.3):
 
-* ``extract_spans`` — ROW-LOCAL.  Spans never leave their row; filtering,
-  classification, text assembly and offset-ordering happen with higher-order
-  functions (filter/transform/sort_array) entirely inside WholeStageCodegen.
-  ZERO shuffles — at 100 TB this is a pure map stage whose cost scales
-  linearly with input splits, so it is the default.
+* ``extract_spans`` — nested ``spans_out`` per doc, ROW-LOCAL.  Spans never
+  leave their row; filtering, classification, text assembly and
+  offset-ordering happen with higher-order functions
+  (filter/transform/sort_array) entirely inside WholeStageCodegen.  ZERO
+  shuffles — at 100 TB this is a pure map stage whose cost scales
+  linearly with input splits.  (An explode + hash-agg reassembly adds
+  a doc_id shuffle and measured no faster, ROADMAP.md item 3; chunk
+  reassembly that genuinely crosses rows is skew.reassemble_chunks.)
 
-* ``extract_spans_exploded`` — EXPLODE + HASH-AGG.  explode -> per-span
-  ops -> deterministic reassembly via collect_list + per-doc array_sort
-  (SURVEY.md §4.3(2); the ordered-window collect_list form lives on in
-  skew.reassemble_chunks where chunk order genuinely crosses rows).  One
-  shuffle on doc_id.  Needed when per-span work must cross rows (e.g. a
-  batched pandas classifier that rebalances skewed media-heavy docs).
+* ``extract_span_rows`` — flat per-span rows with a ``seq`` column:
+  ``extract_spans`` then posexplode, still zero shuffles.  Its mapInArrow
+  twin, extract_arrow_native, is the fastest flat path measured.
 
 Both implement the same contract as oracle.extract_document; golden tests
-assert all three agree span-for-span.
+assert they agree span-for-span.
 
 Reference semantics: nested-loop flatten + bottom-up text assembly,
 src/processors/vision_processor.py:146-208 (simple) / :210-402 (detailed);
@@ -25,7 +25,7 @@ positional ordering :182,:241; confidence gate :261-264; size gate :43-48.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cloud_ocr_summarizer_spark import config
@@ -79,21 +79,6 @@ def _project_out(s: Column) -> Column:
     )
 
 
-def _confidence_filtered(
-    spans_col: str, min_confidence: float, has_confidence: bool
-) -> Column:
-    spans = F.col(spans_col)
-    if has_confidence:
-        # detailed-mode gate, vision_processor.py:261-264; null passes
-        # (simple mode carries confidence=None, :177)
-        spans = F.filter(
-            spans,
-            lambda s: s["confidence"].isNull()
-            | (s["confidence"] >= F.lit(min_confidence)),
-        )
-    return spans
-
-
 @memo_col
 def _size_gate(spans_col: str, max_text_bytes: int) -> Column:
     """A doc's raw text bytes are at most ``max_text_bytes`` (settings.py:66)."""
@@ -110,7 +95,15 @@ def _spans_out(spans_col: str, min_confidence: float, has_confidence: bool) -> C
     """The ordered canonical ``spans_out`` array.  ``has_confidence``
     (whether the span struct has a confidence field) comes from the
     caller's schema."""
-    spans = _confidence_filtered(spans_col, min_confidence, has_confidence)
+    spans = F.col(spans_col)
+    if has_confidence:
+        # detailed-mode gate, vision_processor.py:261-264; null passes
+        # (simple mode carries confidence=None, :177)
+        spans = F.filter(
+            spans,
+            lambda s: s["confidence"].isNull()
+            | (s["confidence"] >= F.lit(min_confidence)),
+        )
     ordered = F.sort_array(F.transform(spans, _canonical_struct))
     return F.transform(ordered, _project_out)
 
@@ -155,43 +148,6 @@ def extract_spans(
         "spans_out", spans_out
     )
     return out.select(*_extracted_cols(with_stats), *[F.col(c) for c in keep])
-
-
-def extract_spans_exploded(
-    df: DataFrame,
-    *,
-    spans_col: str = "spans",
-    min_confidence: float = config.MIN_CONFIDENCE_THRESHOLD,
-    max_text_bytes: int = config.MAX_DOC_TEXT_BYTES,
-) -> DataFrame:
-    """Explode/aggregate variant: same contract, one shuffle on doc_id.
-
-    Deterministic reassembly WITHOUT a window: hash-aggregate
-    collect_list of the canonical structs, then ``array_sort`` puts each
-    doc's spans in (offset, kind, text, media) order inside the array —
-    struct comparison is field-by-field with nulls first, identical to
-    the row-local path's sort (naive groupBy+collect_list alone is
-    nondeterministic post-shuffle — SURVEY.md §4.3(2); the per-doc
-    array_sort restores determinism).  Hash aggregation avoids the
-    whole-partition sort a row_number window needs — measured 1.7x faster
-    at 120k docs, and no sort spill at scale.  Docs whose every span was
-    filtered — and empty docs — still emit a row with an empty spans_out
-    (explode_outer + collect_list dropping nulls keep them).
-    """
-    gated = df.filter(_size_gate(spans_col, max_text_bytes))
-    spans = _confidence_filtered(
-        spans_col, min_confidence, _has_confidence(df, spans_col)
-    )
-    exploded = gated.select(
-        "doc_id", F.explode_outer(F.transform(spans, _canonical_struct)).alias("s")
-    )
-    agg = exploded.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list(F.col("s"))).alias("sorted_spans")
-    )
-    return agg.select(
-        "doc_id",
-        F.transform(F.col("sorted_spans"), _project_out).alias("spans_out"),
-    )
 
 
 # Detailed-mode layout geometry (normalized_vertices analogue, reference

@@ -1,15 +1,14 @@
 """Arrow-NATIVE extraction: mapInArrow over pyarrow RecordBatches.
 
-The strictest reading of "zero per-row Python": the pandas variant
-(extract_arrow.py) still pays a struct->dict conversion per span when
-Arrow data enters pandas.  Here the nested column never leaves Arrow —
-``ListArray.flatten()`` exposes the span StructArray, field vectors are
-zero-copy, text assembly runs in pyarrow.compute regex kernels, ordering
-is one numpy lexsort — Python executes O(batches) operations regardless
-of row count.
+The strictest reading of "zero per-row Python": the nested column never
+leaves Arrow — ``ListArray.flatten()`` exposes the span StructArray, field
+vectors are zero-copy, text assembly runs in pyarrow.compute regex
+kernels, ordering is one numpy lexsort — Python executes O(batches)
+operations regardless of row count.  (Converting the batch to pandas
+costs a struct->dict conversion per span: a mapInPandas form measured
+2.3x slower than the JVM path, ROADMAP.md item 3.)
 
-Same contract as extract_span_rows / extract_span_rows_arrow
-(golden-tested equal).
+Same contract as extract.extract_span_rows (golden-tested equal).
 """
 
 from __future__ import annotations
@@ -33,6 +32,9 @@ for _k, _v in config.RAW_KIND_MAP.items():
 
 _LOWER_CANON = {k.lower(): v for k, v in _CANON.items()}
 
+# ASCII whitespace except '\n' (Java's \s minus the paragraph break)
+_COLLAPSE_WS = r"[\t\x0b\f\r ][\t\x0b\f\r ]+|[\t\x0b\f\r]"
+
 
 def _classify(kind: pa.Array) -> np.ndarray:
     """Vectorized kind map: exact key, else lowercase key, else UNKNOWN.
@@ -53,17 +55,17 @@ def _classify(kind: pa.Array) -> np.ndarray:
 
 def _normalize(text: pa.Array) -> pa.Array:
     """Reference text assembly in pyarrow regex kernels (matches
-    oracle.normalize_block_text; see extract_arrow._normalize_series).
+    oracle.normalize_block_text on ASCII whitespace).
 
-    The collapse pattern skips lone spaces (runs of >= 2, or a single
-    non-space whitespace char): the naive ``[^\\S\\n]+`` matches EVERY
-    inter-word gap and rewrites the whole string — measured 2.35x slower
-    for identical output.  The final strip is the ascii_trim_whitespace
-    kernel (" \\t\\n\\r\\x0b\\f" — exactly Java's \\s class), ~9x the
+    The collapse class is spelled out: RE2's ``\\s`` lacks ``\\x0b``,
+    which Java's ``\\s`` (the row-local path) collapses.  The pattern
+    skips lone spaces (runs of >= 2, or a single non-space whitespace
+    char): the naive ``[^\\S\\n]+`` matches EVERY inter-word gap and
+    rewrites the whole string — measured 2.35x slower for identical
+    output.  The final strip is the ascii_trim_whitespace kernel
+    (" \\t\\n\\r\\x0b\\f" — exactly Java's \\s class), ~9x the
     anchored-regex trim."""
-    t = pc.replace_substring_regex(
-        text, pattern=r"[^\S\n][^\S\n]+|[^\S\n ]", replacement=" "
-    )
+    t = pc.replace_substring_regex(text, pattern=_COLLAPSE_WS, replacement=" ")
     t = pc.replace_substring_regex(t, pattern=r" ?\n ?", replacement="\n")
     return pc.ascii_trim_whitespace(t)
 

@@ -502,12 +502,13 @@ def q_extract_flagship_arrow_native(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U2 boilerplate classification via the DETAILED (mapInPandas) path:
-    the driver cross-check exercises the vectorized pandas UDF itself."""
+    """U2 boilerplate classification: the vectorized pandas (mapInPandas)
+    scorer over the flat span rows — the driver cross-check exercises the
+    UDF itself."""
     from cloud_ocr_summarizer_spark.operators.classify import main_content_rows
 
     rows = extract_span_rows(_documents_spans(spark, sf_dir))
-    return main_content_rows(rows, detailed=True)
+    return main_content_rows(rows)
 
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,28 +518,6 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = extract_span_rows(_documents_spans(spark, sf_dir))
     return media_features(rows)
-
-
-def q_extract_flagship_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U1 detailed-mode extraction: the mapInPandas/Arrow twin of the
-    flagship (same output contract, numpy-vectorized batch pipeline)."""
-    from cloud_ocr_summarizer_spark.operators.extract_arrow import (
-        extract_span_rows_arrow,
-    )
-
-    return extract_span_rows_arrow(_documents_spans(spark, sf_dir))
-
-
-def q_main_content_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fused single-Arrow-pass extract+classify (same contract/oracle as
-    main_content)."""
-    from cloud_ocr_summarizer_spark.operators.extract_arrow import (
-        extract_and_classify_arrow,
-    )
-
-    return extract_and_classify_arrow(
-        _documents_spans(spark, sf_dir), content_only=True
-    )
 
 
 def q_span_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -560,29 +539,6 @@ def q_span_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round((x1 - x0) * (y1 - y0), 6).alias("bbox_area"),
         F.round((x0 + x1) / 2, 6).alias("centroid_x"),
         F.round((y0 + y1) / 2, 6).alias("centroid_y"),
-    )
-
-
-def q_span_geometry_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow twin of span_geometry: the vectorized extractor emits flat
-    (x0, x1, y0, y1) geometry; same derived scalars, same oracle."""
-    from cloud_ocr_summarizer_spark.operators.extract_arrow import (
-        extract_span_rows_arrow,
-    )
-
-    rows = extract_span_rows_arrow(
-        _documents_spans(spark, sf_dir), include_bounding_boxes=True
-    )
-    return rows.select(
-        "doc_id",
-        "seq",
-        "kind",
-        "offset",
-        F.round(
-            (F.col("x1") - F.col("x0")) * (F.col("y1") - F.col("y0")), 6
-        ).alias("bbox_area"),
-        F.round((F.col("x0") + F.col("x1")) / 2, 6).alias("centroid_x"),
-        F.round((F.col("y0") + F.col("y1")) / 2, 6).alias("centroid_y"),
     )
 
 
@@ -869,14 +825,17 @@ BATCH_5 = {
 }
 
 
+# aliases: extract_flagship_arrow, main_content_fused and
+# span_geometry_arrow keep their registered names and banked CORRECTNESS
+# rows
 BATCH_UDF = {
-    "extract_flagship_arrow": q_extract_flagship_arrow,
+    "extract_flagship_arrow": q_extract_flagship_arrow_native,
     "extract_flagship_arrow_native": q_extract_flagship_arrow_native,
     "main_content": q_main_content,
-    "main_content_fused": q_main_content_fused,
+    "main_content_fused": q_main_content,
     "media_features": q_media_features,
     "span_geometry": q_span_geometry,
-    "span_geometry_arrow": q_span_geometry_arrow,
+    "span_geometry_arrow": q_span_geometry,
     "span_geometry_px": q_span_geometry_px,
     "lineage_metrics": q_lineage_metrics,
 }

@@ -11,7 +11,6 @@ from cloud_ocr_summarizer_spark.datagen import interleaved_docs
 from cloud_ocr_summarizer_spark.operators.extract import (
     extract_span_rows,
     extract_spans,
-    extract_spans_exploded,
 )
 
 SPAN_SCHEMA = T.StructType(
@@ -104,7 +103,7 @@ def spans_out_as_tuples(row):
     return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in row]
 
 
-@pytest.mark.parametrize("impl", [extract_spans, extract_spans_exploded])
+@pytest.mark.parametrize("impl", [extract_spans])
 def test_edge_docs_match_oracle(spark, impl):
     df = spark.createDataFrame(to_rows(EDGE_DOCS), docs_schema(SPAN_SCHEMA))
     got = {r["doc_id"]: spans_out_as_tuples(r["spans_out"]) for r in impl(df).collect()}
@@ -174,11 +173,11 @@ def test_generated_docs_match_oracle_both_impls(spark):
         for r in df.collect()
     }
     want = {d: oracle.extract_document(spans) for d, spans in local.items()}
-    for impl in (extract_spans, extract_spans_exploded):
-        got = {
-            r["doc_id"]: spans_out_as_tuples(r["spans_out"]) for r in impl(df).collect()
-        }
-        assert got == want, impl.__name__
+    got = {
+        r["doc_id"]: spans_out_as_tuples(r["spans_out"])
+        for r in extract_spans(df).collect()
+    }
+    assert got == want
     df.unpersist()
 
 
@@ -190,7 +189,7 @@ def test_generated_docs_partitioning_invariance(spark):
     ra = {r["doc_id"]: spans_out_as_tuples(r["spans_out"]) for r in extract_spans(a).collect()}
     rb = {
         r["doc_id"]: spans_out_as_tuples(r["spans_out"])
-        for r in extract_spans_exploded(b.repartition(7)).collect()
+        for r in extract_spans(b.repartition(7)).collect()
     }
     assert ra == rb
 

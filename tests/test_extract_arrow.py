@@ -1,12 +1,10 @@
-"""Arrow-vectorized extraction must match the expression path row-for-row
+"""Arrow-native extraction must match the expression path row-for-row
 (and therefore the oracle, by transitivity with test_extract)."""
-
-from pyspark.sql import functions as F
 
 from cloud_ocr_summarizer_spark.datagen import interleaved_docs
 from cloud_ocr_summarizer_spark.operators.extract import extract_span_rows
-from cloud_ocr_summarizer_spark.operators.extract_arrow import (
-    extract_span_rows_arrow,
+from cloud_ocr_summarizer_spark.operators.extract_arrow_native import (
+    extract_span_rows_arrow_native,
 )
 from tests.test_extract import EDGE_DOCS, SPAN_SCHEMA, docs_schema, to_rows
 
@@ -16,31 +14,6 @@ def rows_key(collected):
         (r["doc_id"], r["seq"], r["kind"], r["text"], r["media_ref"], r["offset"])
         for r in collected
     )
-
-
-def test_arrow_matches_expression_on_edge_docs(spark):
-    df = spark.createDataFrame(to_rows(EDGE_DOCS), docs_schema(SPAN_SCHEMA))
-    assert rows_key(extract_span_rows_arrow(df).collect()) == rows_key(
-        extract_span_rows(df).collect()
-    )
-
-
-def test_arrow_matches_expression_on_generated(spark):
-    df = interleaved_docs(spark, 300, seed=42).cache()
-    got = rows_key(extract_span_rows_arrow(df).collect())
-    want = rows_key(extract_span_rows(df).collect())
-    assert got == want
-    df.unpersist()
-
-
-def test_arrow_size_gate(spark):
-    rows = [
-        ("small", [{"kind": "TEXT", "text": "ok", "media_ref": None, "offset": 0}]),
-        ("big", [{"kind": "TEXT", "text": "x" * 2000, "media_ref": None, "offset": 0}]),
-    ]
-    df = spark.createDataFrame(rows, docs_schema(SPAN_SCHEMA))
-    out = extract_span_rows_arrow(df, max_text_bytes=1000).collect()
-    assert {r["doc_id"] for r in out} == {"small"}
 
 
 def test_arrow_confidence_gate(spark):
@@ -57,59 +30,38 @@ def test_arrow_confidence_gate(spark):
         )
     ]
     df = spark.createDataFrame(rows, docs_schema(SPAN_CONF_SCHEMA))
-    out = extract_span_rows_arrow(df, min_confidence=0.7).collect()
+    out = extract_span_rows_arrow_native(df, min_confidence=0.7).collect()
     assert [r["text"] for r in sorted(out, key=lambda r: r["seq"])] == ["hi", "nul"]
-
-def test_fused_matches_two_stage(spark):
-    from cloud_ocr_summarizer_spark.operators.classify import classify_spans_detailed
-    from cloud_ocr_summarizer_spark.operators.extract_arrow import (
-        extract_and_classify_arrow,
-    )
-
-    df = interleaved_docs(spark, 150, seed=42).cache()
-    fused = {
-        (r["doc_id"], r["seq"]): (r["kind"], r["text"], r["media_ref"], r["offset"],
-                                  r["content_score"], r["is_content"])
-        for r in extract_and_classify_arrow(df).collect()
-    }
-    staged = {
-        (r["doc_id"], r["seq"]): (r["kind"], r["text"], r["media_ref"], r["offset"],
-                                  r["content_score"], r["is_content"])
-        for r in classify_spans_detailed(extract_span_rows_arrow(df)).collect()
-    }
-    assert fused == staged
-    df.unpersist()
 
 
 def test_arrow_normalize_fuzz_matches_oracle():
-    """The pandas regex normalization must equal the pure-Python spec."""
+    """The pyarrow regex normalization must equal the pure-Python spec on
+    every ASCII whitespace character (RE2's \\s lacks \\x0b)."""
     import random
 
-    import pandas as pd
+    import pyarrow as pa
 
     from cloud_ocr_summarizer_spark import oracle
-    from cloud_ocr_summarizer_spark.operators.extract_arrow import _normalize_series
+    from cloud_ocr_summarizer_spark.operators.extract_arrow_native import _normalize
 
     rng = random.Random(7)
-    pieces = ["a", "bb", "x y", " ", "  ", "\t", "\n", "\n\n", "\r", "w\tw", ""]
+    pieces = ["a", "bb", "x y", " ", "  ", "\t", "\n", "\n\n", "\r", "w\tw", "",
+              "\x0b", "\x0c", "\r\n"]
     strings = [
         "".join(rng.choice(pieces) for _ in range(rng.randint(0, 12)))
         for _ in range(500)
     ]
-    got = _normalize_series(pd.Series(strings, dtype="string"))
+    got = _normalize(pa.array(strings, type=pa.string())).to_pylist()
     for s, g in zip(strings, got):
         assert g == oracle.normalize_block_text(s), repr(s)
 
 
 def test_arrow_native_matches_expression(spark):
-    from cloud_ocr_summarizer_spark.operators.extract_arrow_native import (
-        extract_span_rows_arrow_native,
-    )
-
-    df = spark.createDataFrame(to_rows(EDGE_DOCS), docs_schema(SPAN_SCHEMA))
-    assert rows_key(extract_span_rows_arrow_native(df).collect()) == rows_key(
-        extract_span_rows(df).collect()
-    )
+    docs = EDGE_DOCS + [("vt", [("TEXT", "x y\x0bbb\x0b", None, 0)])]
+    df = spark.createDataFrame(to_rows(docs), docs_schema(SPAN_SCHEMA))
+    got = rows_key(extract_span_rows_arrow_native(df).collect())
+    assert got == rows_key(extract_span_rows(df).collect())
+    assert ("vt", 1, "TEXT", "x y bb", None, 0) in got
     gen = interleaved_docs(spark, 300, seed=42).cache()
     assert rows_key(extract_span_rows_arrow_native(gen).collect()) == rows_key(
         extract_span_rows(gen).collect()
@@ -119,9 +71,6 @@ def test_arrow_native_matches_expression(spark):
 
 def test_arrow_native_gates(spark):
     from tests.test_extract import SPAN_CONF_SCHEMA
-    from cloud_ocr_summarizer_spark.operators.extract_arrow_native import (
-        extract_span_rows_arrow_native,
-    )
 
     rows = [
         ("big", [{"kind": "TEXT", "text": "x" * 2000, "media_ref": None, "offset": 0,
@@ -141,32 +90,37 @@ def test_arrow_native_gates(spark):
 
 
 def test_bbox_geometry_rowlocal_vs_arrow(spark):
-    """The nested bbox of the row-local path and the flat (x0,x1,y0,y1)
-    of the Arrow path must encode identical geometry for every span."""
-    from cloud_ocr_summarizer_spark.datagen import interleaved_docs
-    from cloud_ocr_summarizer_spark.operators.extract import extract_span_rows
-    from cloud_ocr_summarizer_spark.operators.extract_arrow import (
-        extract_span_rows_arrow,
+    """The row-local nested bbox encodes the layout model for every span:
+    span k of n occupies the band [(k-1)/n, k/n], media spans are the
+    narrower x range."""
+    from cloud_ocr_summarizer_spark.operators.extract import (
+        BBOX_X_MEDIA,
+        BBOX_X_TEXT,
     )
 
     docs = interleaved_docs(spark, 60, seed=5)
-    jvm = {
+    rows = extract_span_rows(docs, include_bounding_boxes=True).collect()
+    n = {}
+    for r in rows:
+        n[r["doc_id"]] = n.get(r["doc_id"], 0) + 1
+    got = {
         (r["doc_id"], r["seq"]): (
             r["bbox"][0]["x"], r["bbox"][2]["x"], r["bbox"][0]["y"], r["bbox"][2]["y"]
         )
-        for r in extract_span_rows(docs, include_bounding_boxes=True).collect()
+        for r in rows
     }
-    arrow = {
-        (r["doc_id"], r["seq"]): (r["x0"], r["x1"], r["y0"], r["y1"])
-        for r in extract_span_rows_arrow(
-            docs, include_bounding_boxes=True
-        ).collect()
+    want = {
+        (r["doc_id"], r["seq"]): (
+            *(BBOX_X_MEDIA if r["media_ref"] is not None else BBOX_X_TEXT),
+            (r["seq"] - 1) / n[r["doc_id"]],
+            r["seq"] / n[r["doc_id"]],
+        )
+        for r in rows
     }
-    assert jvm == arrow  # bit-identical doubles, same span set
+    assert got == want  # bit-identical doubles
     # vertices are a sane normalized box: 4 points, 0 <= coords <= 1,
     # media spans narrower than text spans
-    some = extract_span_rows(docs, include_bounding_boxes=True).collect()
-    for r in some:
+    for r in rows:
         assert len(r["bbox"]) == 4
         for v in r["bbox"]:
             assert 0.0 <= v["x"] <= 1.0 and 0.0 <= v["y"] <= 1.0
@@ -175,15 +129,8 @@ def test_bbox_geometry_rowlocal_vs_arrow(spark):
 
 
 def test_bbox_gated_off_by_default(spark):
-    from cloud_ocr_summarizer_spark.datagen import interleaved_docs
-    from cloud_ocr_summarizer_spark.operators.extract import extract_span_rows
-    from cloud_ocr_summarizer_spark.operators.extract_arrow import (
-        extract_span_rows_arrow,
-    )
-
     docs = interleaved_docs(spark, 5, seed=5)
     assert "bbox" not in extract_span_rows(docs).columns
-    assert "x0" not in extract_span_rows_arrow(docs).columns
 
 
 def test_select_primary_language_semantics(spark):
@@ -218,13 +165,8 @@ def test_select_primary_language_semantics(spark):
 
 def test_bbox_geometry_duplicate_doc_ids(spark):
     """Regression: adjacent input rows sharing a doc_id must keep their
-    OWN y-bands (per input row, like the JVM twin) — grouping on doc_id
-    values merged them into one band and broke the tiling invariant."""
-    from cloud_ocr_summarizer_spark.operators.extract import extract_span_rows
-    from cloud_ocr_summarizer_spark.operators.extract_arrow import (
-        extract_span_rows_arrow,
-    )
-
+    OWN y-bands (per input row) — grouping on doc_id values would merge
+    them into one band and break the tiling invariant."""
     span = lambda off, t: ("TEXT", t, None, off)  # noqa: E731
     rows = [
         (7, [span(0, "a"), span(1, "b")]),
@@ -235,15 +177,13 @@ def test_bbox_geometry_duplicate_doc_ids(spark):
         rows,
         "doc_id long, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
-    ).coalesce(1)  # one batch: adjacent rows
+    ).coalesce(1)  # one partition: adjacent rows
     jvm = sorted(
         (r["text"], r["bbox"][0]["y"], r["bbox"][2]["y"])
         for r in extract_span_rows(df, include_bounding_boxes=True).collect()
     )
-    arrow = sorted(
-        (r["text"], r["y0"], r["y1"])
-        for r in extract_span_rows_arrow(df, include_bounding_boxes=True).collect()
-    )
-    assert jvm == arrow
-    # per-row bands: the single-span second row spans the full page
-    assert ("c", 0.0, 1.0) in arrow
+    assert jvm == [
+        ("a", 0.0, 0.5), ("b", 0.5, 1.0),
+        ("c", 0.0, 1.0),  # per-row bands: the single-span row spans the page
+        ("d", 0.0, 1 / 3), ("e", 1 / 3, 2 / 3), ("f", 2 / 3, 1.0),
+    ]

@@ -79,6 +79,9 @@ ALIASES = {
     "html_main_classified_simple": "html_main_classified",
     "extract_web": "extract_web_fused",
     "extract_web_classified": "extract_web_classified_fused",
+    "extract_flagship_arrow": "extract_flagship_arrow_native",
+    "main_content_fused": "main_content",
+    "span_geometry_arrow": "span_geometry",
 }
 
 

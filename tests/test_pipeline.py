@@ -1,5 +1,5 @@
 """End-to-end flagship plan: resume idempotence, lineage completeness,
-skew split round-trip, classifier mode parity.
+skew split round-trip, classifier parity with its DuckDB oracle.
 """
 
 import pytest
@@ -10,8 +10,8 @@ from cloud_ocr_summarizer_spark.datagen import (
     interleaved_docs,
 )
 from cloud_ocr_summarizer_spark.operators.classify import (
-    classify_spans_detailed,
-    classify_spans_simple,
+    classify_spans,
+    main_content_rows,
 )
 from cloud_ocr_summarizer_spark.operators.extract import extract_span_rows, extract_spans
 from cloud_ocr_summarizer_spark.operators.skew import (
@@ -166,21 +166,40 @@ def test_split_heavy_docs_round_trip(spark):
     assert via_chunks == direct
 
 
-def test_classifier_modes_agree(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    rows = extract_span_rows(derive_spans_from_documents(docs)).limit(500)
-    simple = {
-        (r["doc_id"], r["seq"]): (r["content_score"], r["is_content"])
-        for r in classify_spans_simple(rows).collect()
+# (text, content_score, is_content) as the DuckDB main_content oracle
+# scores them: its \s is ASCII, so none of these separators split tokens
+UNICODE_WS_SCORES = [
+    ("alpha\xa0beta\xa0gamma\xa0delta", 4852, False),
+    ("alpha\u2003beta\u2003gamma", 4875, False),
+    ("a\x1cb\x1cc d", 4678, False),
+    ("visit\xa0http://x.y\xa0now ok", 3228, False),
+    ("x\u3000y\u3000z w", 4678, False),
+    ("one\u2028two three", 5096, False),
+    ("\x85next line here", 5241, True),
+    ("caf\xe9 na\xefve r\xe9sum\xe9 text", 5136, True),
+    ("plain words only here", 5500, True),
+]
+
+
+def test_classifier_matches_oracle_on_unicode_whitespace(spark):
+    rows = spark.createDataFrame(
+        [(i, 1, "TEXT", t, None, 0) for i, (t, _, _) in enumerate(UNICODE_WS_SCORES)],
+        "doc_id long, seq int, kind string, text string, media_ref string, offset int",
+    )
+    got = {
+        r["doc_id"]: (r["text"], r["content_score"], r["is_content"])
+        for r in classify_spans(rows).collect()
     }
-    detailed = {
-        (r["doc_id"], r["seq"]): (r["content_score"], r["is_content"])
-        for r in classify_spans_detailed(rows).collect()
-    }
-    assert simple == detailed
-    assert any(v[1] for v in simple.values())  # some content
-    scores = [v[0] for v in simple.values()]
-    assert min(scores) >= 0 and max(scores) <= 10000
+    assert [got[i] for i in range(len(UNICODE_WS_SCORES))] == UNICODE_WS_SCORES
+
+
+def test_main_content_rows_match_oracle(spark, oracle_equal):
+    from tests.test_plans import SF
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    out = main_content_rows(extract_span_rows(derive_spans_from_documents(docs)))
+    res = oracle_equal(out, "main_content", SF)
+    assert res["spark_rows"] > 0
 
 
 def test_scd2_apply(spark):

@@ -85,22 +85,6 @@ def test_part_small_quantity_single_fact_scan(spark, Q):
     assert p.count("lineitem.parquet") == 1
 
 
-def test_exploded_extract_uses_hash_agg_not_window_sort(spark):
-    """Reassembly is hash-agg collect_list + per-doc array_sort, not a
-    whole-partition window sort (spill hazard at scale)."""
-    from cloud_ocr_summarizer_spark.datagen import derive_spans_from_documents
-    from cloud_ocr_summarizer_spark.operators.extract import (
-        extract_spans_exploded,
-    )
-
-    docs = derive_spans_from_documents(
-        spark.read.parquet(f"{SF}/documents.parquet")
-    )
-    p = _plan(extract_spans_exploded(docs))
-    assert "ObjectHashAggregate" in p
-    assert "Window" not in p
-
-
 def test_knn_ivf_centroids_take_ordered_not_full_sort(spark, Q):
     """The fixed centroid budget uses a limit (per-partition top-k), and
     the corpus side of the candidate join is not broadcast (the QUERY

@@ -148,13 +148,19 @@ totals are NOT comparable to BENCH_r01/r02 without subtracting the new
 entries: q10_html_main_content (Arrow DOM tokenize + boilerplate strip),
 q11_layout_reading_order / q11b_layout_rowlocal (block segmentation +
 newspaper reading order, flat two-shuffle vs fused zero-shuffle),
-q12_chunk_documents (64/48 context windows), q13_extract_web (the
-north-rule pipeline composed as one job: DOM strip + span extraction +
-layout parse, single doc_id equi-join).  Reference local run
-(best-of-3, sf0.1, local[32]): legacy q1-q9 subtotal 10.433 s,
-consistent with the round-3 record (10.253 s); q10-q12 contribute
-4.932 s (q13 added after that run — see the driver's BENCH_r03.json
-for the full extended suite).
+q12_chunk_documents (64/48 context windows), and q13, the north-rule
+pipeline composed as one job (DOM strip + span extraction + layout
+parse).  Reference local run (best-of-3, sf0.1, local[32]): legacy
+q1-q9 subtotal 10.433 s, consistent with the round-3 record (10.253 s);
+q10-q12 contribute 4.932 s (q13 added after that run — see the
+driver's BENCH_r03.json for the full extended suite).
+
+Later suite changes: q13/q15 (flat doc_id-join web pipelines) were
+replaced by q13b_extract_web_fused / q15b_extract_web_classified_fused,
+q1c_extract_window (explode + hash-agg reassembly) was dropped, and
+q2_main_content_detailed (fused pandas extract+classify) became
+q2_main_content (JVM extraction + the pandas classifier) — suite totals
+across those changes are not comparable.
 """
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w", encoding="utf-8") as f:
         f.write(md + preserved)
