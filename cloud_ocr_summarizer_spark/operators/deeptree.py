@@ -21,9 +21,6 @@ tree (SURVEY §1.4); THIS module handles genuinely nested input:
                                 paragraph/word/symbol assembly done
                                 row-locally by JVM higher-order functions
                                 — zero Python, zero extra shuffles.
-* ``extract_deep_tree_arrow`` — mapInPandas twin: the whole tree walk in
-                                one Arrow batch pass (the shape a real
-                                OCR-response parser would take).
 * ``derive_deep_tree_from_documents`` — deterministic, SQL-mirrorable
                                 deep-tree builder over the flat driver
                                 ``documents`` table (words -> chars as
@@ -31,8 +28,11 @@ tree (SURVEY §1.4); THIS module handles genuinely nested input:
                                 block, 2 blocks/page), kept in lockstep
                                 with oracles.ORACLES["extract_deep_tree"].
 
-Both extractors emit identical rows, golden-checked against the
-pure-Python reference walk in ``oracle.deep_tree_blocks``.
+The extractor's rows are golden-checked against the pure-Python
+reference walk in ``oracle.deep_tree_blocks``.  It is the only walk: a
+per-row Python walk over Arrow batches measured 13x slower on the same
+rows, so the registry name ``extract_deep_tree_arrow`` is an alias of
+``extract_deep_tree``.
 """
 
 from __future__ import annotations
@@ -49,12 +49,6 @@ DEEP_TREE_SCHEMA = (
     "array<struct<blocks:array<struct<block_type:string,"
     "paragraphs:array<struct<words:array<struct<symbols:array<string>>>>>>>>>"
 )
-
-# The engine's whitespace contract is ASCII (Java \s = [ \t\n\x0b\f\r],
-# functions/text.py module caveat); every Python-side strip in this
-# module must use THIS set, not bare str.strip() (which also eats
-# Unicode whitespace and would desync from the JVM twin).
-_ASCII_WS = " \t\n\x0b\f\r"
 
 
 def _strip_ws(text: Column) -> Column:
@@ -103,94 +97,6 @@ def extract_deep_tree(tree: DataFrame) -> DataFrame:
         (F.col("block_idx") + 1).cast("int").alias("block_seq"),
         F.col("block.block_type").alias("kind"),
         assemble_block_text_col(F.col("block.paragraphs")).alias("text"),
-    )
-
-
-def extract_deep_tree_arrow(tree: DataFrame) -> DataFrame:
-    """mapInArrow twin of ``extract_deep_tree``: the full tree walk in
-    one Arrow pass (scan -> mapInArrow, no shuffle).  Per batch the walk
-    is plain nested iteration over ``to_pylist()`` values — the same
-    loops as the reference (:226-269), amortized over Arrow batches
-    instead of one process per document.
-
-    Deliberately Arrow-native, not mapInPandas: pyarrow's pandas
-    conversion of a 4-deep list<struct<list<struct<...>>>> column is
-    where the sibling pandas prototype corrupted rows and crashed
-    workers (zero-copy nested ndarray views); ``to_pylist`` is the
-    documented-safe materialization for deeply nested values."""
-    import pyarrow as pa
-
-    id_field = tree.schema["doc_id"].dataType.simpleString()
-    id_pa = {"string": pa.string(), "bigint": pa.int64(), "int": pa.int32()}[
-        id_field
-    ]
-
-    def run(batches):
-        for batch in batches:
-            ids = batch.column("doc_id").to_pylist()
-            trees = batch.column("pages").to_pylist()
-            out_doc, out_page, out_seq, out_kind, out_text = [], [], [], [], []
-            for doc_id, pages in zip(ids, trees):
-                for page_idx, page in enumerate(pages or []):
-                    if page is None:
-                        # JVM twin: page.blocks -> NULL, posexplode(NULL)
-                        # emits no rows
-                        continue
-                    for block_idx, block in enumerate(page["blocks"] or []):
-                        if block is None:
-                            # JVM twin EMITS the row: block.block_type
-                            # and the assembled text are both NULL
-                            out_doc.append(doc_id)
-                            out_page.append(page_idx + 1)
-                            out_seq.append(block_idx + 1)
-                            out_kind.append(None)
-                            out_text.append(None)
-                            continue
-                        if block["paragraphs"] is None:
-                            # array_join(transform(NULL,…)) -> NULL text
-                            text = None
-                        else:
-                            paras = []
-                            for para in block["paragraphs"]:
-                                if para is None or para["words"] is None:
-                                    # NULL para_text: array_join SKIPS it
-                                    continue
-                                words = [
-                                    "".join(
-                                        s for s in w["symbols"] if s is not None
-                                    )
-                                    for w in para["words"]
-                                    # NULL word_text: array_join skips
-                                    if w is not None and w["symbols"] is not None
-                                ]
-                                # ASCII strip, matching the JVM twin's
-                                # Java \s — bare str.strip() also eats
-                                # Unicode whitespace (NBSP, U+2028, ...)
-                                # and would desync the two extractors
-                                paras.append(" ".join(words).strip(_ASCII_WS))
-                            text = "\n".join(paras).strip(_ASCII_WS)
-                        out_doc.append(doc_id)
-                        out_page.append(page_idx + 1)
-                        out_seq.append(block_idx + 1)
-                        out_kind.append(block["block_type"])
-                        out_text.append(text)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_doc, type=id_pa),
-                    pa.array(out_page, type=pa.int32()),
-                    pa.array(out_seq, type=pa.int32()),
-                    pa.array(out_kind, type=pa.string()),
-                    pa.array(out_text, type=pa.string()),
-                ],
-                names=["doc_id", "page_number", "block_seq", "kind", "text"],
-            )
-
-    return tree.mapInArrow(
-        run,
-        schema=(
-            f"doc_id {id_field}, page_number int, block_seq int, "
-            "kind string, text string"
-        ),
     )
 
 

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 DAMP_NUM = 85  # damping 0.85 as integer percent
 TELEPORT_MICRO = 150_000  # (1 - 0.85) * 10^6
 INIT_MICRO = 1_000_000
+FAN_BUCKETS = 32  # buckets of the once-written PageRank fan table
 
 
 def derive_linkgraph_html_from_documents(
@@ -168,12 +169,12 @@ def _iterate_ranks(
     teleport_micro=None,
 ) -> DataFrame:
     """The ONE definition of the integer rank recurrence — shared by the
-    plain, bucketed, and personalized variants so they cannot de-sync
-    (the bucketed test asserts bit-identical output).  ``merge_hint``
-    forces the sort-merge join that reads a bucketed fan in place.
-    ``init_micro`` / ``teleport_micro`` are per-node Column expressions
-    over ``doc_id`` (default: the uniform constants) — personalized
-    PageRank concentrates both on a seed set."""
+    plain loop, the bucketed fan and personalized PageRank so they
+    cannot de-sync (the bucketed test asserts bit-identical output).
+    ``merge_hint`` forces the sort-merge join that reads a bucketed fan
+    in place.  ``init_micro`` / ``teleport_micro`` are per-node Column
+    expressions over ``doc_id`` (default: the uniform constants) —
+    personalized PageRank concentrates both on a seed set."""
     if init_micro is None:
         init_micro = F.lit(INIT_MICRO)
     if teleport_micro is None:
@@ -229,7 +230,6 @@ def pagerank_personalized(
     *,
     seed_mod: int = PPR_SEED_MOD,
     n_iter: int = 5,
-    bucketed: bool = True,
 ) -> DataFrame:
     """Personalized (seed-rooted) integer PageRank
     -> (doc_id, rank_micro, is_seed).
@@ -247,12 +247,11 @@ def pagerank_personalized(
     Seeds are a deterministic id-arithmetic set here; a deployment
     passes its own seed predicate.
 
-    ``bucketed=True`` (default) runs the iteration over the
-    once-written bucketed fan table — the same scale fix as
-    :func:`pagerank_over_documents` (per-iteration shuffle O(nodes),
-    not O(edges)); identical integer recurrence either way
-    (pytest-asserted), with the same audible plain-loop fallback when
-    the session has no writable warehouse.
+    Runs the iteration over the once-written bucketed fan table — the
+    same scale fix as :func:`pagerank_over_documents` (per-iteration
+    shuffle O(nodes), not O(edges)) — with the same audible plain-loop
+    fallback when the fan-table write fails; identical integer
+    recurrence either way (pytest-asserted).
     """
     d = F.col("doc_id")
     seed = d % seed_mod == 0
@@ -271,11 +270,7 @@ def pagerank_personalized(
             merge_hint=merge_hint,
         )
 
-    ranks = (
-        _ranks_on_bucketed_fan(edges, lambda fan: _it(fan, merge_hint=True))
-        if bucketed
-        else None
-    )
+    ranks = _ranks_on_bucketed_fan(edges, lambda fan: _it(fan, merge_hint=True))
     if ranks is None:
         ranks = _it(
             _fan_table(edges).localCheckpoint(eager=False), merge_hint=False
@@ -287,36 +282,30 @@ def pagerank_personalized(
     )
 
 
-def pagerank_over_documents(
-    docs: DataFrame, *, n_iter: int = 5, bucketed: bool = True
-) -> DataFrame:
+def pagerank_over_documents(docs: DataFrame, *, n_iter: int = 5) -> DataFrame:
     """documents -> (doc_id, rank_micro, in_degree): the composed job.
 
     synthesize HTML -> parse outlinks -> iterate rank, joined with the
     in-degree so the output is directly consumable as a curation signal
     ("rank high, few inlinks" = teleport-propped page).
 
-    Defaults to the bucketed fan table (:func:`pagerank_bucketed` with
-    a per-call unique table name) — the scale-correct plan: the
+    Iterates over the bucketed fan table (:func:`_ranks_on_bucketed_fan`
+    with a per-call unique table name) — the scale-correct plan: the
     edge-sized iteration-invariant side is written once and never
     re-shuffles, so per-iteration shuffle is O(nodes).  The node-sized
     result is eagerly checkpointed and the fan table dropped before
     return (no per-call warehouse leak).  Falls back to the plain loop
     (bit-identical recurrence, with a ``RuntimeWarning`` naming the
-    cause) when the session has no writable warehouse (e.g. read-only
-    deployments); pass ``bucketed=False`` to skip the attempt.
+    cause) only when the fan-table write fails (e.g. no writable
+    warehouse in a read-only deployment).
     """
     html = derive_linkgraph_html_from_documents(docs)
     edges = extract_outlinks(html)
-    ranks = (
-        _ranks_on_bucketed_fan(
-            edges,
-            lambda fan: _iterate_ranks(
-                docs.select("doc_id"), fan, n_iter=n_iter, merge_hint=True
-            ),
-        )
-        if bucketed
-        else None
+    ranks = _ranks_on_bucketed_fan(
+        edges,
+        lambda fan: _iterate_ranks(
+            docs.select("doc_id"), fan, n_iter=n_iter, merge_hint=True
+        ),
     )
     if ranks is None:
         ranks = pagerank(docs, edges, n_iter=n_iter)
@@ -465,93 +454,24 @@ def anchor_text_cap_audit(
     )
 
 
-def pagerank_bucketed(
-    nodes: DataFrame,
-    edges: DataFrame,
-    *,
-    table: str,
-    n_iter: int = 5,
-    n_buckets: int = 32,
-    path: str | None = None,
-    overwrite_path: bool = False,
-) -> DataFrame:
-    """:func:`pagerank` with the edge-side iteration shuffle removed.
-
-    The (src, dst, outdeg) fan table is iteration-INVARIANT but edge-
-    sized — in the plain loop it re-shuffles into the join every round,
-    so per-iteration shuffled bytes are O(edges + nodes).  Here it is
-    written ONCE as a bucketed+sorted table on the join key; each
-    round's sort-merge join then reads the buckets in place and only
-    the node-sized ranks side shuffles (plus the dst aggregate) —
-    per-iteration shuffle drops to O(nodes), which at web scale (edges
-    >> nodes, 5-50 iterations) is the difference that matters.  Same
-    integer recurrence, bit-identical output (pytest-asserted).
-
-    The caller owns the table lifecycle (it must outlive consumption of
-    the returned ranks, and the caller DROPs it when done — which is
-    why ``table`` is required: a generated name the caller never sees
-    would leak one edge-sized table per call).  Use a per-call unique
-    name (e.g. :func:`_unique_fan_name`'s uuid pattern, which
-    :func:`pagerank_over_documents` composes with automatic cleanup) so
-    two concurrent runs can never clobber each other's fan table; pass
-    ``path`` to place it outside the default warehouse — an existing
-    ``path`` is refused unless ``overwrite_path=True``
-    (mode('overwrite') would otherwise silently delete whatever lives
-    there).  This is the repeated-fact-join bucketing strategy of
-    SURVEY.md §4.3, applied to an iterative graph job.
-    """
-    spark = nodes.sparkSession
-    _write_fan_table(
-        edges,
-        table=table,
-        n_buckets=n_buckets,
-        path=path,
-        overwrite_path=overwrite_path,
-    )
-    fan_t = spark.table(table)
-    return _iterate_ranks(
-        nodes.select("doc_id"), fan_t, n_iter=n_iter, merge_hint=True
-    )
-
-
-def _unique_fan_name() -> str:
-    import uuid
-
-    return f"pagerank_fan_{uuid.uuid4().hex[:12]}"
-
-
-def _write_fan_table(
-    edges: DataFrame,
-    *,
-    table: str,
-    n_buckets: int = 32,
-    path: str | None = None,
-    overwrite_path: bool = False,
-) -> None:
+def _write_fan_table(edges: DataFrame, *, table: str) -> None:
     """Write the iteration-invariant (src, dst, outdeg) fan table ONCE,
-    bucketed+sorted on the join key.
+    bucketed+sorted on the join key, into the session's warehouse.
+
+    The fan is edge-sized: in the plain loop it re-shuffles into the
+    join every round (per-iteration shuffle O(edges + nodes)); read
+    from the buckets in place, only the node-sized ranks side shuffles
+    (O(nodes)) — the repeated-fact-join bucketing strategy of
+    SURVEY.md §4.3, applied to an iterative graph job.
 
     This is the only step that needs a writable warehouse/catalog —
     callers that want a plain-loop fallback scope their try/except to
     THIS call alone, so a failure inside the rank iteration itself is
     never mislabeled "warehouse unavailable" (and never silently
     recomputed on the slower plan)."""
-    spark = edges.sparkSession
-    if path is not None and not overwrite_path:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(hpath):
-            raise FileExistsError(
-                f"pagerank_bucketed: path {path!r} exists; pass "
-                "overwrite_path=True to let mode('overwrite') replace it"
-            )
-    writer = _fan_table(edges).write.mode("overwrite")
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.bucketBy(n_buckets, "src_doc_id").sortBy("src_doc_id").saveAsTable(
-        table
-    )
+    _fan_table(edges).write.mode("overwrite").bucketBy(
+        FAN_BUCKETS, "src_doc_id"
+    ).sortBy("src_doc_id").saveAsTable(table)
 
 
 def _ranks_on_bucketed_fan(edges: DataFrame, iterate) -> DataFrame | None:
@@ -566,10 +486,11 @@ def _ranks_on_bucketed_fan(edges: DataFrame, iterate) -> DataFrame | None:
     reference to the fan table so it can drop before return (no
     per-call warehouse leak); a DROP failure downgrades to a warning —
     an audible leak — rather than masking the computed ranks."""
+    import uuid
     import warnings
 
     spark = edges.sparkSession
-    table = _unique_fan_name()
+    table = f"pagerank_fan_{uuid.uuid4().hex[:12]}"
     try:
         _write_fan_table(edges, table=table)
     except Exception as exc:  # noqa: BLE001 — fallback must be audible

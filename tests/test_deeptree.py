@@ -1,7 +1,7 @@
 """Deep-tree flatten (VERDICT r2 item 5): the 4-level nested walk
-(pages -> blocks -> paragraphs -> words -> symbols) golden-checked
-against the pure-Python reference walk, for both the chained-explode
-and the Arrow twins."""
+(pages -> blocks -> paragraphs -> words -> symbols) of the
+chained-explode extractor, golden-checked against the pure-Python
+reference walk."""
 
 import pytest
 
@@ -9,7 +9,6 @@ from cloud_ocr_summarizer_spark.operators.deeptree import (
     DEEP_TREE_SCHEMA,
     derive_deep_tree_from_documents,
     extract_deep_tree,
-    extract_deep_tree_arrow,
 )
 from cloud_ocr_summarizer_spark.oracle import deep_tree_blocks
 
@@ -79,10 +78,6 @@ def test_extract_deep_tree_matches_oracle_walk(spark, tree):
     assert _got(extract_deep_tree(tree)) == expected_rows()
 
 
-def test_extract_deep_tree_arrow_matches_oracle_walk(spark, tree):
-    assert _got(extract_deep_tree_arrow(tree)) == expected_rows()
-
-
 def test_deep_tree_strip_points():
     # the three separator/strip rules straight from the reference walk
     rows = deep_tree_blocks(
@@ -106,9 +101,9 @@ def test_deep_tree_strip_points():
 
 def test_unicode_whitespace_symbols_stay(spark):
     """The engine's whitespace contract is ASCII (Java \\s): a NBSP
-    symbol at a paragraph edge must survive the strip in BOTH extractors
+    symbol at a paragraph edge must survive the strip in the extractor
     AND the Python oracle walk — bare str.strip() would eat it in the
-    Python paths only, silently desyncing the twins."""
+    oracle only, silently desyncing the two."""
     doc = [
         {
             "blocks": [
@@ -121,7 +116,6 @@ def test_unicode_whitespace_symbols_stay(spark):
     )
     want = [("u1", 1, 1, "TEXT", " x")]
     assert _got(extract_deep_tree(tree)) == want
-    assert _got(extract_deep_tree_arrow(tree)) == want
     assert deep_tree_blocks("u1", doc) == want
 
 
@@ -139,8 +133,6 @@ def test_derived_tree_twins_agree(spark):
     )
     tree = derive_deep_tree_from_documents(docs)
     a = _got(extract_deep_tree(tree))
-    b = _got(extract_deep_tree_arrow(tree))
-    assert a == b
     # 18 words -> 5 paragraphs -> 2 blocks -> 1 page; doc 2: 1 block
     d1 = [r for r in a if r[0] == 1]
     assert [(r[1], r[2]) for r in d1] == [(1, 1), (1, 2)]
@@ -167,16 +159,11 @@ def test_derived_tree_twins_agree(spark):
 
 
 def test_null_elements_match_jvm_twin(spark):
-    """NULL pages vanish (posexplode of NULL blocks), NULL blocks emit a
-    (NULL kind, NULL text) row, NULL paragraphs arrays give NULL text,
-    and NULL paras/words/symbols are skipped exactly like array_join
-    skips NULL elements — the two extractors must agree on ALL of it."""
-    from cloud_ocr_summarizer_spark.operators.deeptree import (
-        DEEP_TREE_SCHEMA,
-        extract_deep_tree,
-        extract_deep_tree_arrow,
-    )
-
+    """NULL handling of the JVM walk, pinned row for row: NULL pages
+    vanish (posexplode of NULL blocks), NULL blocks emit a (NULL kind,
+    NULL text) row, NULL paragraphs arrays give NULL text, and NULL
+    paras/words/symbols are skipped exactly like array_join skips NULL
+    elements (the empty paragraph's '' joins, then the block strips)."""
     sym = lambda *s: {"symbols": list(s)}  # noqa: E731
     word_rows = [
         (
@@ -205,12 +192,12 @@ def test_null_elements_match_jvm_twin(spark):
     df = spark.createDataFrame(
         word_rows, f"doc_id long, pages {DEEP_TREE_SCHEMA}"
     )
-    a = sorted(map(tuple, extract_deep_tree(df).collect()))
-    b = sorted(map(tuple, extract_deep_tree_arrow(df).collect()))
-    assert a == b, (a, b)
-    assert (1, 2, 1, None, None) in a          # the null block row
-    assert any(r[3] == "TEXT" and r[4] is None for r in a)  # null paragraphs
-    assert any(r[4] == "ab" for r in a)        # null word/symbols skipped
+    got = sorted(map(tuple, extract_deep_tree(df).collect()))
+    assert got == [
+        (1, 2, 1, None, None),  # the null block row
+        (1, 2, 2, "TEXT", None),  # null paragraphs array
+        (1, 2, 3, "TEXT", "ab"),  # null para/word/symbols skipped
+    ]
 
 
 # --------------------------------------------------------------------------

@@ -6,8 +6,10 @@ the Spark plan shares nothing with (the DuckDB chained-CTE twin is the
 cross-engine check; this is the cross-IMPLEMENTATION check).
 """
 
+import pytest
 from pyspark.sql import functions as F
 
+from cloud_ocr_summarizer_spark.operators import linkgraph
 from cloud_ocr_summarizer_spark.operators.linkgraph import (
     DAMP_NUM,
     INIT_MICRO,
@@ -25,6 +27,10 @@ def _docs(spark, n=12):
         [(i, f"word{i} common text") for i in range(n)],
         "doc_id long, text string",
     )
+
+
+def _fail_fan_write(edges, *, table):
+    raise RuntimeError("warehouse is read-only")
 
 
 def _expected_edges(n):
@@ -230,31 +236,21 @@ def test_harmonic_centrality_merge_is_two_level(spark):
     assert "Aggregate [doc_id" in plan  # level 2: per-dst merge
 
 
-def test_pagerank_bucketed_matches_plain_and_skips_fan_shuffle(
-    spark, tmp_path
-):
-    from cloud_ocr_summarizer_spark.operators.linkgraph import (
-        pagerank_bucketed,
-    )
-
+def test_pagerank_bucketed_matches_plain_and_skips_fan_shuffle(spark):
     n = 12
     docs = _docs(spark, n)
     edges = extract_outlinks(derive_linkgraph_html_from_documents(docs))
     plain = {r.doc_id: r.rank_micro for r in pagerank(docs, edges, n_iter=3).collect()}
-    bucketed_df = pagerank_bucketed(
-        docs,
-        edges,
-        n_iter=3,
-        n_buckets=4,
-        table="pagerank_fan_test",
-        path=str(tmp_path / "fan_b"),
-    )
+    linkgraph._write_fan_table(edges, table="pagerank_fan_test")
     try:
+        fan_t = spark.table("pagerank_fan_test")
+        bucketed_df = linkgraph._iterate_ranks(
+            docs.select("doc_id"), fan_t, n_iter=3, merge_hint=True
+        )
         got = {r.doc_id: r.rank_micro for r in bucketed_df.collect()}
         assert got == plain  # bit-identical recurrence
         # plan property: the per-iteration join reads the bucketed fan
         # in place (no Exchange between the bucketed scan and the join)
-        fan_t = spark.table("pagerank_fan_test")
         ranks0 = docs.select(
             "doc_id", F.lit(1_000_000).cast("bigint").alias("rank_micro")
         )
@@ -307,7 +303,9 @@ def test_harmonic_centrality_matches_pure_python(spark):
     assert got == {d: (est[d], harm[d]) for d in range(n)}
 
 
-def test_pagerank_over_documents_bucketed_default_matches_plain(spark):
+def test_pagerank_over_documents_bucketed_default_matches_plain(
+    spark, monkeypatch
+):
     import warnings
 
     docs = _docs(spark, 10)
@@ -323,41 +321,15 @@ def test_pagerank_over_documents_bucketed_default_matches_plain(spark):
     fans = [t.name for t in spark.catalog.listTables()
             if t.name.startswith("pagerank_fan_")]
     assert fans == []
-    plain = {
-        (r.doc_id, r.rank_micro, r.in_degree)
-        for r in pagerank_over_documents(docs, n_iter=2, bucketed=False).collect()
-    }
+    # a failed fan-table write is the one fallback to the plain loop: it
+    # warns and returns the same rows
+    monkeypatch.setattr(linkgraph, "_write_fan_table", _fail_fan_write)
+    with pytest.warns(RuntimeWarning, match="bucketed fan table unavailable"):
+        plain = {
+            (r.doc_id, r.rank_micro, r.in_degree)
+            for r in pagerank_over_documents(docs, n_iter=2).collect()
+        }
     assert buck == plain
-
-
-def test_pagerank_bucketed_refuses_existing_path(spark, tmp_path):
-    import pytest
-
-    from cloud_ocr_summarizer_spark.operators.linkgraph import (
-        pagerank_bucketed,
-    )
-
-    docs = _docs(spark, 6)
-    edges = extract_outlinks(derive_linkgraph_html_from_documents(docs))
-    target = tmp_path / "occupied"
-    target.mkdir()
-    (target / "keep.txt").write_text("precious")
-    with pytest.raises(FileExistsError):
-        pagerank_bucketed(
-            docs, edges, n_iter=1, n_buckets=2,
-            table="pagerank_fan_guard_test", path=str(target),
-        )
-    assert (target / "keep.txt").read_text() == "precious"  # untouched
-    # explicit opt-in proceeds
-    df = pagerank_bucketed(
-        docs, edges, n_iter=1, n_buckets=2,
-        table="pagerank_fan_guard_test", path=str(target),
-        overwrite_path=True,
-    )
-    try:
-        assert df.count() == 6
-    finally:
-        spark.sql("DROP TABLE IF EXISTS pagerank_fan_guard_test")
 
 
 def test_hot_dst_synthesis_concentrates_edges_on_doc0(spark):
@@ -432,7 +404,9 @@ def test_pagerank_personalized_matches_pure_python(spark):
     )
 
 
-def test_pagerank_personalized_bucketed_default_matches_plain(spark):
+def test_pagerank_personalized_bucketed_default_matches_plain(
+    spark, monkeypatch
+):
     import warnings
 
     from cloud_ocr_summarizer_spark.operators.linkgraph import (
@@ -454,12 +428,15 @@ def test_pagerank_personalized_bucketed_default_matches_plain(spark):
     fans = [t.name for t in spark.catalog.listTables()
             if t.name.startswith("pagerank_fan_")]
     assert fans == []
-    plain = {
-        (r.doc_id, r.rank_micro, r.is_seed)
-        for r in pagerank_personalized(
-            docs, edges_df, seed_mod=4, n_iter=2, bucketed=False
-        ).collect()
-    }
+    # a failed fan-table write falls back to the plain loop, audibly
+    monkeypatch.setattr(linkgraph, "_write_fan_table", _fail_fan_write)
+    with pytest.warns(RuntimeWarning, match="bucketed fan table unavailable"):
+        plain = {
+            (r.doc_id, r.rank_micro, r.is_seed)
+            for r in pagerank_personalized(
+                docs, edges_df, seed_mod=4, n_iter=2
+            ).collect()
+        }
     assert buck == plain
 
 

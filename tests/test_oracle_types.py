@@ -82,6 +82,7 @@ ALIASES = {
     "extract_flagship_arrow": "extract_flagship_arrow_native",
     "main_content_fused": "main_content",
     "span_geometry_arrow": "span_geometry",
+    "extract_deep_tree_arrow": "extract_deep_tree",
 }
 
 

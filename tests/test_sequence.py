@@ -1,4 +1,4 @@
-"""Grouped-map applyInPandas: recursive integer EWMA hand-case."""
+"""Grouped-map applyInArrow: recursive integer EWMA hand-case."""
 
 import datetime as dt
 
@@ -50,17 +50,23 @@ def test_ewma_order_is_event_time_not_arrival(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_ewma_arrow_twin_matches_pandas(spark):
-    """applyInArrow twin: identical rows to the pandas grouped-map on
+def test_events_ewma_matches_oracle(spark, oracle_equal):
+    """The registered query equals the DuckDB WITH RECURSIVE replay on
     real data."""
-    from cloud_ocr_summarizer_spark.operators.sequence import (
-        ewma_per_user_arrow,
-    )
+    from cloud_ocr_summarizer_spark.plans.queries import q_events_ewma
+    from tests.test_plans import SF
 
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    a = sorted(map(tuple, ewma_per_user(events).collect()))
-    b = sorted(map(tuple, ewma_per_user_arrow(events).collect()))
-    assert a == b and len(a) > 0
+    res = oracle_equal(q_events_ewma(spark, SF), "events_ewma", SF)
+    assert res["spark_rows"] > 0, res
+
+
+def test_ewma_runs_as_arrow_grouped_map(spark):
+    """The fold is an applyInArrow grouped map: no pandas layer."""
+    t0 = dt.datetime(2024, 1, 1)
+    df = ewma_per_user(spark.createDataFrame([(1, t0, 1, 1.0)], SCHEMA))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInArrow" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
 
 
 def test_ewma_empty_input(spark):
