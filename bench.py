@@ -16,34 +16,22 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from cloud_ocr_summarizer_spark.session import get_spark  # noqa: E402
-
-
-def _force(df) -> None:
-    """Force full computation without a real sink."""
-    df.write.mode("overwrite").format("noop").save()
-
-
-def materialize_bench_docs(spark, n_docs: int, base: str) -> str:
-    from cloud_ocr_summarizer_spark.datagen import interleaved_docs
-
-    path = os.path.join(base, f"bench_docs_{n_docs}.parquet")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        interleaved_docs(spark, n_docs, seed=42).write.mode("overwrite").parquet(path)
-    return path
+from tools.harness import (  # noqa: E402
+    bench_docs,
+    best_of,
+    build_corpus,
+    with_synthetic_lang,
+)
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "120000"))
-    cache_base = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/spark_graft_bench")
-    os.makedirs(cache_base, exist_ok=True)
 
     # no console progress bars: the last stdout line must be the JSON
     spark = get_spark(
@@ -51,8 +39,6 @@ def main() -> int:
         cores=cpus,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-
-    from pyspark.sql import functions as F
 
     from cloud_ocr_summarizer_spark.operators.classify import main_content_rows
     from cloud_ocr_summarizer_spark.operators.extract import (
@@ -64,48 +50,43 @@ def main() -> int:
     )
     from cloud_ocr_summarizer_spark.plans import queries as Q
 
-    docs_path = materialize_bench_docs(spark, n_docs, cache_base)
-    bench_docs = spark.read.parquet(docs_path)
+    docs = spark.read.parquet(bench_docs(spark, n_docs))
 
     timings: dict[str, float] = {}
 
-    def timed(name: str, fn) -> None:
-        fn()  # warm-up: codegen + JIT; report steady-state throughput
-        best = float("inf")
-        for _ in range(3):  # best-of-3: the host VM has noisy neighbors
-            t0 = time.monotonic()
-            fn()
-            best = min(best, time.monotonic() - t0)
-        timings[name] = round(best, 3)
+    def timed(name: str, make_df) -> None:
+        # warm-up (codegen + JIT), then best-of-3 into the noop sink: the
+        # host VM has noisy neighbors
+        timings[name] = round(best_of(make_df, 3), 3)
 
     # q1: flagship extraction (mapInArrow — fastest measured path)
     timed(
         "q1_extract_flagship",
-        lambda: _force(extract_span_rows_arrow_native(bench_docs)),
+        lambda: extract_span_rows_arrow_native(docs),
     )
     # q1b: the row-local expression twin (JVM-only reference point)
-    timed("q1b_extract_expression", lambda: _force(extract_spans(bench_docs)))
+    timed("q1b_extract_expression", lambda: extract_spans(docs))
     # q2: JVM extraction + the vectorized pandas classifier (Arrow batches)
     timed(
         "q2_main_content",
-        lambda: _force(main_content_rows(extract_span_rows(bench_docs))),
+        lambda: main_content_rows(extract_span_rows(docs)),
     )
     # q3: TPC-H Q1-shape aggregation on lineitem (sf tier)
-    timed("q3_pricing_summary", lambda: _force(Q.q_pricing_summary(spark, sf_dir)))
+    timed("q3_pricing_summary", lambda: Q.q_pricing_summary(spark, sf_dir))
     # q4: broadcast join + agg
-    timed("q4_revenue_by_nation", lambda: _force(Q.q_revenue_by_nation(spark, sf_dir)))
+    timed("q4_revenue_by_nation", lambda: Q.q_revenue_by_nation(spark, sf_dir))
     # q5: window sessionization on events
-    timed("q5_events_sessionize", lambda: _force(Q.q_events_sessionize(spark, sf_dir)))
+    timed("q5_events_sessionize", lambda: Q.q_events_sessionize(spark, sf_dir))
     # q6: MinHash LSH dedup on the documents table
-    timed("q6_dedup_minhash", lambda: _force(Q.q_dedup_minhash_lsh(spark, sf_dir)))
+    timed("q6_dedup_minhash", lambda: Q.q_dedup_minhash_lsh(spark, sf_dir))
     # q7: brute-force kNN over embeddings
-    timed("q7_knn_bruteforce", lambda: _force(Q.q_knn_bruteforce(spark, sf_dir)))
+    timed("q7_knn_bruteforce", lambda: Q.q_knn_bruteforce(spark, sf_dir))
     # q8: composed curation pipeline (dedup -> gates -> split) on documents
     from cloud_ocr_summarizer_spark.plans.curate import curate_documents
 
     timed(
         "q8_curation_pipeline",
-        lambda: _force(
+        lambda: (
             curate_documents(
                 spark.read.parquet(f"{sf_dir}/documents.parquet"),
                 parallelism=spark.sparkContext.defaultParallelism,
@@ -113,7 +94,7 @@ def main() -> int:
         ),
     )
     # q9: text analysis battery (trigram language ID + profile) on documents
-    timed("q9_language_id", lambda: _force(Q.q_language_id_ngram(spark, sf_dir)))
+    timed("q9_language_id", lambda: Q.q_language_id_ngram(spark, sf_dir))
     # q10-q15b measure the 120k-doc documents-shaped derived corpus
     # (VERDICT r3 item 6: the sf documents table is 5k rows — fixed
     # overhead dominated and scale-dishonest for composed jobs).  NOT
@@ -121,8 +102,6 @@ def main() -> int:
     # Corpus per row: q1-q2 and q10-q26 (except q16/q17) use the derived
     # n_docs corpus; q6, q8, q9, q16, q17 the sf documents table (~5k
     # rows at sf0.1); q3, q4, q5, q7 the sf relational tables.
-    from tools.bench_html_layout import build_corpus
-
     from cloud_ocr_summarizer_spark.datagen import (
         derive_html_from_documents,
         derive_pdf_streams_from_documents,
@@ -149,12 +128,12 @@ def main() -> int:
     # "HTML boilerplate strip" path; Arrow-batched tokenizer)
     timed(
         "q10_html_main_content",
-        lambda: _force(extract_html_main(derive_html_from_documents(docs120))),
+        lambda: extract_html_main(derive_html_from_documents(docs120)),
     )
     # q11: layout parse — block segmentation + newspaper reading order
     timed(
         "q11_layout_reading_order",
-        lambda: _force(
+        lambda: (
             assemble_reading_order(
                 block_rollup(
                     segment_blocks(
@@ -169,7 +148,7 @@ def main() -> int:
     # q11b: zero-shuffle fused row-local twin of q11
     timed(
         "q11b_layout_rowlocal",
-        lambda: _force(
+        lambda: (
             reading_order_rowlocal(
                 extract_spans(
                     derive_spans_from_documents(docs120), with_stats=False
@@ -178,7 +157,7 @@ def main() -> int:
         ),
     )
     # q12: context-window chunking (64/48 overlapping training windows)
-    timed("q12_chunk_documents", lambda: _force(chunk_documents(docs120)))
+    timed("q12_chunk_documents", lambda: chunk_documents(docs120))
     # q13b: the north-rule pipeline composed as ONE job — DOM strip +
     # span extraction + layout parse, the span/layout stats carried
     # through the DOM Arrow stage (one documents scan, zero Exchanges).
@@ -187,12 +166,12 @@ def main() -> int:
     # comparable with later ones.
     timed(
         "q13b_extract_web_fused",
-        lambda: _force(extract_web_documents_fused(docs120)),
+        lambda: extract_web_documents_fused(docs120),
     )
     # q14: PDF content-stream byte tokenizer (Tm/Td state machine)
     timed(
         "q14_pdf_text_spans",
-        lambda: _force(
+        lambda: (
             parse_pdf_text_spans(derive_pdf_streams_from_documents(docs120))
         ),
     )
@@ -200,17 +179,17 @@ def main() -> int:
     # stats carried through the classifier's Arrow stage
     timed(
         "q15b_extract_web_classified_fused",
-        lambda: _force(extract_web_documents_classified_fused(docs120)),
+        lambda: extract_web_documents_classified_fused(docs120),
     )
     # q16: the stateless curation gate chain as one zero-Exchange plan
     # (quality + row-local repetition + PII redaction + split — the
     # streaming gates' batch twin)
     timed(
         "q16_curation_gates",
-        lambda: _force(Q.q_curation_gates_rowlocal(spark, sf_dir)),
+        lambda: Q.q_curation_gates_rowlocal(spark, sf_dir),
     )
     # q17: cross-document passage dedup (C4-style first-occurrence-wins)
-    timed("q17_dedup_cross_doc", lambda: _force(Q.q_dedup_cross_doc(spark, sf_dir)))
+    timed("q17_dedup_cross_doc", lambda: Q.q_dedup_cross_doc(spark, sf_dir))
     # q18-q20: the round-4 families over the 120k derived corpus —
     # link-graph PageRank (iterative shuffle), the BoW classifier
     # (vocab-broadcast + one corpus shuffle; labels synthesized, the
@@ -222,18 +201,10 @@ def main() -> int:
     )
     from cloud_ocr_summarizer_spark.operators.warc import warc_main_text
 
-    labeled120 = docs120.withColumn(
-        "lang",
-        F.element_at(
-            F.array(*[F.lit(x) for x in ("en", "de", "es", "fr", "zh")]),
-            (F.pmod(F.xxhash64("doc_id", F.lit("lang")), F.lit(5)) + 1).cast(
-                "int"
-            ),
-        ),
-    )
-    timed("q18_pagerank", lambda: _force(pagerank_over_documents(docs120, n_iter=5)))
-    timed("q19_bow_classify", lambda: _force(classify_bow(labeled120)))
-    timed("q20_warc_extract", lambda: _force(warc_main_text(docs120)))
+    labeled120 = with_synthetic_lang(docs120)
+    timed("q18_pagerank", lambda: pagerank_over_documents(docs120, n_iter=5))
+    timed("q19_bow_classify", lambda: classify_bow(labeled120))
+    timed("q20_warc_extract", lambda: warc_main_text(docs120))
     # q21 (round 5): the composed crawl-planning pipeline — URL parse,
     # blocklist anti-join, RFC 9309 robots longest-match, per-host
     # budget; every exchange host-keyed (plan-asserted in tests)
@@ -253,7 +224,7 @@ def main() -> int:
             derive_robots_txt_from_documents(labeled120, parsed_urls=parsed),
         )
 
-    timed("q21_crawl_frontier", lambda: _force(_frontier()))
+    timed("q21_crawl_frontier", lambda: _frontier())
     # q22-q24 (round 5): structured table-grid extraction (map-only,
     # three-level regexp scan), rarity-weighted keywords (wordcount +
     # frequency-split df join + per-doc window), and integer HITS (the
@@ -273,17 +244,17 @@ def main() -> int:
 
     timed(
         "q22_html_tables",
-        lambda: _force(
+        lambda: (
             extract_tables(derive_tables_html_from_documents(docs120))
         ),
     )
-    timed("q23_top_terms", lambda: _force(top_terms_per_doc(docs120, k=5)))
+    timed("q23_top_terms", lambda: top_terms_per_doc(docs120, k=5))
 
     def _hits():
         edges = extract_outlinks(derive_linkgraph_html_from_documents(docs120))
         return hits_scores(docs120, edges, n_iter=3)
 
-    timed("q24_hits_scores", lambda: _force(_hits()))
+    timed("q24_hits_scores", lambda: _hits())
     # q25-q26 (round 5, third window): redirect-chain resolution (the
     # bounded iterative unique-key join) and C4 line cleaning (pure
     # map), both over the 120k derived corpus
@@ -298,13 +269,13 @@ def main() -> int:
 
     timed(
         "q25_redirect_resolve",
-        lambda: _force(
+        lambda: (
             resolve_redirects(derive_redirects_from_documents(docs120))
         ),
     )
     timed(
         "q26_c4_lines",
-        lambda: _force(
+        lambda: (
             c4_line_filter(derive_noisy_lines_from_documents(docs120))
         ),
     )
@@ -321,7 +292,7 @@ def main() -> int:
         "cpus": cpus,
         "docs_per_sec_extraction": docs_per_sec,
     }
-    # include the last recorded N->4N scaling run (tools/bench_scaling.py)
+    # include the last recorded N->4N scaling run (tools/harness.py scaling)
     scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                 "BENCH", "scaling.json")
     if os.path.exists(scaling_path):

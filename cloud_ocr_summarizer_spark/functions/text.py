@@ -4,9 +4,11 @@ Every function here returns a pyspark Column built ONLY from built-in
 functions (JVM-side, WholeStageCodegen-friendly) — no Python UDFs.  Each
 mirrors a rule in oracle.py; golden tests assert the two agree.
 
-Caveat vs the pure-Python oracle: Java regex ``\\s`` is ASCII whitespace
-while Python ``str.split()``/``strip()`` handle Unicode whitespace.  The
-engine's contract (and the fixtures) use ASCII whitespace only.
+Whitespace is Java regex ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]``, ASCII only; the
+oracle splits and strips on the same class.  Trailing strips anchor on
+``\\z``, not ``$``: Java's ``$`` also matches before a final line
+terminator (``\\u2028``, ``\\u0085``), which would strip the space in
+``"x \\u2028"``.
 """
 
 from __future__ import annotations
@@ -40,7 +42,7 @@ def normalize_block_text_col(text: Column) -> Column:
     """
     paragraphs = F.transform(F.split(text, "\n"), _collapse_ws)
     joined = F.array_join(paragraphs, "\n")
-    return F.regexp_replace(joined, r"^\s+|\s+$", "")
+    return F.regexp_replace(joined, r"^\s+|\s+\z", "")
 
 
 def memo_col(builder):

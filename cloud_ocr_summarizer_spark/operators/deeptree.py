@@ -54,7 +54,7 @@ DEEP_TREE_SCHEMA = (
 def _strip_ws(text: Column) -> Column:
     """Python ``str.strip()`` twin for the ASCII-whitespace contract
     (functions/text.py module caveat)."""
-    return F.regexp_replace(text, r"^\s+|\s+$", "")
+    return F.regexp_replace(text, r"^\s+|\s+\z", "")
 
 
 def assemble_block_text_col(paragraphs: Column) -> Column:

@@ -196,8 +196,8 @@ def repetition_profile(
     identical to the earlier explode + two-hash-aggregation plan but
     1.3-2.0x faster at every measured tier and — the part that matters
     at 100 TB — free of the exchange that carried one row per
-    (doc, word) (BENCH/repetition.json; interleaved A/B in
-    tools/bench_repetition.py).
+    (doc, word) (BENCH/repetition.json; interleaved A/B:
+    ``python tools/harness.py repetition``).
     """
     n, top, uniq = _repetition_signals(F.col(text_col))
     bp = lambda num: (  # noqa: E731

@@ -38,6 +38,7 @@ Rules encoded
 
 from __future__ import annotations
 
+import re
 from typing import Any
 
 from cloud_ocr_summarizer_spark import config
@@ -46,20 +47,30 @@ from cloud_ocr_summarizer_spark import config
 # --------------------------------------------------------------------------
 # text assembly (E2-E4)
 # --------------------------------------------------------------------------
+# Java's \s, the class both engine paths collapse and strip: ASCII only,
+# so NBSP, U+2028, U+3000 and the \x1c-\x1f separators are word text.
+_WS_CHARS = " \t\n\x0b\f\r"
+_WS_RUN = re.compile("[" + _WS_CHARS + "]+")
+
+
 def normalize_block_text(text: str | None) -> str | None:
     """Assemble span text with the reference's concat/strip semantics.
 
-    Within each newline-delimited paragraph, words are whatever
-    ``str.split()`` yields (any whitespace run separates) and are re-joined
-    with single spaces (words+' ' then strip, vision_processor.py:361-363).
-    Paragraphs are re-joined with '\\n' and the whole block stripped
-    (vision_processor.py:323-325).  Interior empty paragraphs survive as
-    empty lines (the reference appends para_text + '\\n' unconditionally).
+    Within each newline-delimited paragraph, words are separated by runs
+    of ASCII whitespace (``[ \\t\\n\\x0b\\f\\r]``, Java's ``\\s``) and are
+    re-joined with single spaces (words+' ' then strip,
+    vision_processor.py:361-363).  Paragraphs are re-joined with '\\n' and
+    the whole block stripped of the same class (vision_processor.py:
+    323-325).  Interior empty paragraphs survive as empty lines (the
+    reference appends para_text + '\\n' unconditionally).  Non-ASCII
+    whitespace (NBSP, U+2028, U+3000, U+001C) is kept as word text.
     """
     if text is None:
         return None
-    paragraphs = [" ".join(p.split()) for p in text.split("\n")]
-    return "\n".join(paragraphs).strip()
+    paragraphs = [
+        " ".join(w for w in _WS_RUN.split(p) if w) for p in text.split("\n")
+    ]
+    return "\n".join(paragraphs).strip(_WS_CHARS)
 
 
 # --------------------------------------------------------------------------

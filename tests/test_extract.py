@@ -218,7 +218,8 @@ def test_normalize_fuzz_engine_matches_oracle(spark):
     from cloud_ocr_summarizer_spark.functions.text import normalize_block_text_col
 
     rng = random.Random(42)
-    pieces = ["a", "bb", "x y", " ", "  ", "\t", "\n", "\n\n", "\r", "w\tw", ""]
+    pieces = ["a", "bb", "x y", " ", "  ", "\t", "\n", "\n\n", "\r", "w\tw", "",
+              "\xa0", "\u2028", "\u3000", "\x1c"]
     strings = [
         "".join(rng.choice(pieces) for _ in range(rng.randint(0, 12)))
         for _ in range(500)

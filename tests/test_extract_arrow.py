@@ -36,7 +36,8 @@ def test_arrow_confidence_gate(spark):
 
 def test_arrow_normalize_fuzz_matches_oracle():
     """The pyarrow regex normalization must equal the pure-Python spec on
-    every ASCII whitespace character (RE2's \\s lacks \\x0b)."""
+    every ASCII whitespace character (RE2's \\s lacks \\x0b) and keep
+    non-ASCII whitespace as word text."""
     import random
 
     import pyarrow as pa
@@ -46,7 +47,7 @@ def test_arrow_normalize_fuzz_matches_oracle():
 
     rng = random.Random(7)
     pieces = ["a", "bb", "x y", " ", "  ", "\t", "\n", "\n\n", "\r", "w\tw", "",
-              "\x0b", "\x0c", "\r\n"]
+              "\x0b", "\x0c", "\r\n", "\xa0", "\u2028", "\u3000", "\x1c"]
     strings = [
         "".join(rng.choice(pieces) for _ in range(rng.randint(0, 12)))
         for _ in range(500)
