@@ -929,85 +929,26 @@ def duplicate_clusters(
 
     Pair mining alone under-deduplicates chains: A~B and B~C pairs make
     {A,B,C} one duplicate cluster even when (A,C) never co-bucketed.
-    Spark-first iterative min-label propagation (the simplified
-    small-star step of Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC 2014): each round every node takes the
-    min label among itself and its neighbors — labels converge to the
-    component minimum in at most graph-diameter rounds (near-dup
-    components are shallow; 20 rounds covers diameter-20 chains, far
-    beyond real dup clusters).  Per round: one join edges x labels + one
-    min-aggregate, both shuffling on node ids; the driver-side loop only
-    reads a scalar convergence count (the standard iterative-fixpoint
-    pattern — no row data ever reaches the driver).  Early-exits when a
-    round changes nothing.
-
-    Each round's labels are localCheckpoint()ed: an iterative plan that
-    references its own previous iteration doubles in size every round
-    (labels feeds both the join and the convergence check), and by round
-    ~8 merely FORMATTING the logical plan OOMs the driver — lineage must
-    be truncated, not just cached.
+    This is ``linkgraph.min_labels`` (the min-label function behind
+    ``link_components``) run to convergence: it stops at the first round
+    that changes no label, and raises ``RuntimeError`` if labels still
+    move after ``max_iterations`` rounds — returning them would silently
+    under-merge clusters (tail docs keep non-minimal labels and survive
+    keep-one-per-cluster dedup).  Near-dup components are shallow; 20
+    rounds cover diameter-20 chains, far beyond real dup clusters.  The
+    driver only reads one changed-row count per round; no row data ever
+    reaches it.
     """
+    from cloud_ocr_summarizer_spark.operators.linkgraph import min_labels
+
     if max_iterations < 1:
         raise ValueError("max_iterations must be >= 1")
     edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+        F.col("id_a").alias("src_doc_id"), F.col("id_b").alias("dst_doc_id")
     )
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().persist()
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("label"))
-        .localCheckpoint()
+    return min_labels(edges, rounds=max_iterations, converge=True).select(
+        "doc_id", F.col("label").alias("cluster_id")
     )
-    try:
-        for _ in range(max_iterations):
-            neighbor_min = (
-                edges.join(labels, edges.dst == labels.id)
-                .groupBy("src")
-                .agg(F.min("label").alias("nlabel"))
-            )
-            new_labels = (
-                labels.join(
-                    neighbor_min, labels.id == neighbor_min.src, "left"
-                )
-                .select(
-                    "id",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                    ).alias("label"),
-                )
-                .localCheckpoint()  # truncate lineage, see docstring
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-            # free the superseded round's checkpointed blocks NOW —
-            # waiting for the JVM ContextCleaner would accumulate up to
-            # max_iterations full (node,label) copies in executor storage
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            # exhausted max_iterations with labels still moving: returning
-            # them would silently under-merge clusters (tail docs keep
-            # non-minimal labels and survive keep-one-per-cluster dedup)
-            raise RuntimeError(
-                f"duplicate_clusters did not converge in {max_iterations} "
-                f"iterations ({changed} labels still changing) — the edge "
-                "graph has a component with diameter > max_iterations; "
-                "raise max_iterations"
-            )
-        return labels.select(
-            F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
-        )
-    finally:
-        edges.unpersist()
 
 
 def dedup_cross_doc_passages(

@@ -30,23 +30,26 @@ Three stages, each independently checkable:
   term) — documented deviation from normalized PageRank; rankings are
   what curation consumes and those are preserved.
 
-Scale: one iteration is edges⋈ranks (shuffle on src) + groupBy dst
-(shuffle on dst) + a node-sized left join — all key-partitioned, no
-broadcast of anything corpus-sized, no driver-side state.  The iterative
-plan self-references, so each round is cut with ``localCheckpoint()``
-(plan-doubling trap, see operators/dedup.duplicate_clusters).  Per-edge
-contributions are ≤ rank ≤ total corpus mass ≈ N·10^6, so BIGINT holds
-through N = 10^12 docs (max ~8.5·10^17 < 2^63).
+Scale: every iterative operator here runs through :func:`iterate_rounds`.
+Its iteration-invariant edge side is hash-partitioned and sorted on the
+join key and persisted ONCE, so a round's sort-merge join shuffles only
+the node-sized state (HITS, whose two pulls join on different keys,
+pins nothing: see :func:`hits_scores`); each round is cut with
+``localCheckpoint()`` (plan-doubling trap).  No broadcast of anything corpus-sized, no
+driver-side state.  Per-edge contributions are ≤ rank ≤ total corpus
+mass ≈ N·10^6, so BIGINT holds through N = 10^12 docs (max ~8.5·10^17 <
+2^63).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from typing import Callable, Sequence
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 DAMP_NUM = 85  # damping 0.85 as integer percent
 TELEPORT_MICRO = 150_000  # (1 - 0.85) * 10^6
 INIT_MICRO = 1_000_000
-FAN_BUCKETS = 32  # buckets of the once-written PageRank fan table
 
 
 def derive_linkgraph_html_from_documents(
@@ -149,8 +152,67 @@ def degree_stats(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
+def _pin(df: DataFrame, key: str) -> DataFrame:
+    """``df`` hash-partitioned and sorted on ``key``, then persisted.  Once
+    its cache is built, a sort-merge join on ``key`` reads it in place:
+    no Exchange and no Sort on this side.  Under AQE a ``localCheckpoint``
+    drops the partitioning, so every round would re-shuffle the side.
+    The merge hint stops the planner from broadcasting a pinned side that
+    fits under the broadcast threshold, which would rebuild its hash
+    table every round."""
+    return df.repartition(key).sortWithinPartitions(key).persist().hint("merge")
+
+
+def iterate_rounds(
+    pin: Sequence[tuple[DataFrame, str]],
+    init: Callable[..., DataFrame],
+    step: Callable[..., DataFrame],
+    *,
+    rounds: int,
+    converge: bool = False,
+) -> DataFrame:
+    """The one round loop of the graph operators.
+
+    Each ``(frame, key)`` of ``pin`` is an iteration-invariant side, pinned
+    once by :func:`_pin`.  ``init(*pinned)`` is the start state and
+    ``step(i, state, *pinned)`` round ``i`` (from 0); each round is cut
+    with ``localCheckpoint``, since a plan that references its previous
+    round doubles every round.  Fixed mode runs ``rounds`` rounds.
+    ``converge=True`` stops at the first round that changes no row and
+    raises ``RuntimeError`` when ``rounds`` run out first, rather than
+    return a moving state as final.  The result is materialized before
+    the pinned sides are unpersisted: a lazy checkpoint over an
+    unpersisted side would silently recompute it.
+    """
+    pinned = []
+    try:
+        for df, key in pin:
+            pinned.append(_pin(df, key))
+            pinned[-1].count()  # a plan made before the cache exists sees no partitioning
+        state = init(*pinned)
+        if converge or not rounds:
+            state = state.localCheckpoint()
+        for i in range(rounds):
+            new = step(i, state, *pinned).localCheckpoint(
+                eager=converge or i == rounds - 1
+            )
+            changed = new.subtract(state).count() if converge else None
+            state = new
+            if changed == 0:
+                return state
+        if converge:
+            raise RuntimeError(
+                f"no fixpoint in {rounds} rounds ({changed} rows still "
+                "changing): the graph is deeper than the round cap"
+            )
+        return state
+    finally:
+        for df in pinned:
+            df.unpersist()
+
+
 def _fan_table(edges: DataFrame) -> DataFrame:
-    """(src, dst, outdeg): the iteration-invariant join input."""
+    """(src, dst, outdeg): PageRank's iteration-invariant join input."""
     outdeg = edges.groupBy(F.col("src_doc_id").alias("doc_id")).agg(
         F.count("*").alias("outdeg")
     )
@@ -159,54 +221,45 @@ def _fan_table(edges: DataFrame) -> DataFrame:
     )
 
 
-def _iterate_ranks(
-    node_ids: DataFrame,
-    fan: DataFrame,
-    *,
-    n_iter: int,
-    merge_hint: bool = False,
-    init_micro=None,
-    teleport_micro=None,
+def _rank_round(
+    node_ids: DataFrame, teleport: Column, ranks: DataFrame, fan: DataFrame
 ) -> DataFrame:
-    """The ONE definition of the integer rank recurrence — shared by the
-    plain loop, the bucketed fan and personalized PageRank so they
-    cannot de-sync (the bucketed test asserts bit-identical output).
-    ``merge_hint`` forces the sort-merge join that reads a bucketed fan
-    in place.  ``init_micro`` / ``teleport_micro`` are per-node Column
-    expressions over ``doc_id`` (default: the uniform constants) —
-    personalized PageRank concentrates both on a seed set."""
-    if init_micro is None:
-        init_micro = F.lit(INIT_MICRO)
-    if teleport_micro is None:
-        teleport_micro = F.lit(TELEPORT_MICRO)
-    ranks = node_ids.select(
-        "doc_id", init_micro.cast("bigint").alias("rank_micro")
+    """One round of the integer rank recurrence (module docstring)."""
+    contrib = (
+        fan.join(ranks, fan.src_doc_id == ranks.doc_id)
+        .select(
+            F.col("dst_doc_id").alias("doc_id"),
+            F.expr(f"((rank_micro div outdeg) * {DAMP_NUM}) div 100").alias("c"),
+        )
+        .groupBy("doc_id")
+        .agg(F.sum("c").alias("inflow"))
     )
-    for _ in range(n_iter):
-        left = fan.hint("merge") if merge_hint else fan
-        contrib = (
-            left.join(ranks, left.src_doc_id == ranks.doc_id)
-            .select(
-                F.col("dst_doc_id").alias("doc_id"),
-                F.expr(
-                    f"((rank_micro div outdeg) * {DAMP_NUM}) div 100"
-                ).alias("c"),
-            )
-            .groupBy("doc_id")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            node_ids.join(contrib, "doc_id", "left")
-            .select(
-                "doc_id",
-                (
-                    teleport_micro.cast("bigint")
-                    + F.coalesce(F.col("inflow"), F.lit(0))
-                ).alias("rank_micro"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    return node_ids.join(contrib, "doc_id", "left").select(
+        "doc_id",
+        (teleport + F.coalesce(F.col("inflow"), F.lit(0))).alias("rank_micro"),
+    )
+
+
+def _pagerank(
+    nodes: DataFrame, edges: DataFrame, *, n_iter: int, seed: Column | None
+) -> DataFrame:
+    """:func:`pagerank` with initial mass and teleport either uniform
+    (``seed`` None) or concentrated on the rows where the boolean
+    ``seed`` Column over ``doc_id`` holds (:func:`pagerank_personalized`).
+    The (src, dst, outdeg) fan is pinned on src once, so a round
+    shuffles only the node-sized ranks."""
+    node_ids = nodes.select("doc_id")
+
+    def per_node(micro: int) -> Column:
+        m = F.lit(micro).cast("bigint")
+        return m if seed is None else F.when(seed, m).otherwise(F.lit(0).cast("bigint"))
+
+    return iterate_rounds(
+        [(_fan_table(edges), "src_doc_id")],
+        lambda fan: node_ids.select("doc_id", per_node(INIT_MICRO).alias("rank_micro")),
+        lambda i, ranks, fan: _rank_round(node_ids, per_node(TELEPORT_MICRO), ranks, fan),
+        rounds=n_iter,
+    )
 
 
 def pagerank(nodes: DataFrame, edges: DataFrame, *, n_iter: int = 5) -> DataFrame:
@@ -214,11 +267,9 @@ def pagerank(nodes: DataFrame, edges: DataFrame, *, n_iter: int = 5) -> DataFram
 
     See the module docstring for the exact recurrence and why it is
     integer.  ``nodes`` must carry ``doc_id``; ``edges`` carries
-    (src_doc_id, dst_doc_id).  Each iteration's result is cut with
-    ``localCheckpoint`` so the self-referencing plan stays flat.
+    (src_doc_id, dst_doc_id).
     """
-    fan = _fan_table(edges).localCheckpoint(eager=False)
-    return _iterate_ranks(nodes.select("doc_id"), fan, n_iter=n_iter)
+    return _pagerank(nodes, edges, n_iter=n_iter, seed=None)
 
 
 PPR_SEED_MOD = 20  # doc_id % 20 == 0 -> trusted seed (5% of the corpus)
@@ -234,87 +285,38 @@ def pagerank_personalized(
     """Personalized (seed-rooted) integer PageRank
     -> (doc_id, rank_micro, is_seed).
 
-    Same recurrence as :func:`pagerank` (shared ``_iterate_ranks`` body,
-    so the two cannot de-sync) but initial mass AND the teleport term
-    are concentrated on the seed set ``doc_id % seed_mod == 0`` — the
-    TrustRank/seeded-quality-prior shape: rank flows outward from
-    trusted pages, a non-seed page scores only by (transitive) inbound
-    proximity to seeds.  Per-seed teleport stays the uniform
-    ``TELEPORT_MICRO`` integer rather than mass-normalizing by
-    ``N/|seeds|`` — same documented deviation policy as the dangling-
-    mass decay (rankings, which curation consumes, are preserved;
-    BIGINT headroom is unchanged since per-node teleport never grows).
-    Seeds are a deterministic id-arithmetic set here; a deployment
-    passes its own seed predicate.
-
-    Runs the iteration over the once-written bucketed fan table — the
-    same scale fix as :func:`pagerank_over_documents` (per-iteration
-    shuffle O(nodes), not O(edges)) — with the same audible plain-loop
-    fallback when the fan-table write fails; identical integer
-    recurrence either way (pytest-asserted).
+    :func:`pagerank` (same loop and round body, so the two cannot
+    de-sync) with initial mass AND the teleport term concentrated on the
+    seed set ``doc_id % seed_mod == 0`` — the TrustRank/seeded-quality-
+    prior shape: rank flows outward from trusted pages, a non-seed page
+    scores only by (transitive) inbound proximity to seeds.  Per-seed teleport
+    stays the uniform ``TELEPORT_MICRO`` integer rather than
+    mass-normalizing by ``N/|seeds|`` — same documented deviation policy
+    as the dangling-mass decay (rankings, which curation consumes, are
+    preserved; BIGINT headroom is unchanged since per-node teleport
+    never grows).  Seeds are a deterministic id-arithmetic set here; a
+    deployment passes its own seed predicate.
     """
-    d = F.col("doc_id")
-    seed = d % seed_mod == 0
-    zero = F.lit(0)
-    node_ids = nodes.select("doc_id")
-
-    def _it(fan: DataFrame, *, merge_hint: bool) -> DataFrame:
-        return _iterate_ranks(
-            node_ids,
-            fan,
-            n_iter=n_iter,
-            init_micro=F.when(seed, F.lit(INIT_MICRO)).otherwise(zero),
-            teleport_micro=F.when(seed, F.lit(TELEPORT_MICRO)).otherwise(
-                zero
-            ),
-            merge_hint=merge_hint,
-        )
-
-    ranks = _ranks_on_bucketed_fan(edges, lambda fan: _it(fan, merge_hint=True))
-    if ranks is None:
-        ranks = _it(
-            _fan_table(edges).localCheckpoint(eager=False), merge_hint=False
-        )
-    return ranks.select(
-        "doc_id",
-        "rank_micro",
-        (d % seed_mod == 0).cast("int").alias("is_seed"),
+    is_seed = F.col("doc_id") % seed_mod == 0
+    return _pagerank(nodes, edges, n_iter=n_iter, seed=is_seed).select(
+        "doc_id", "rank_micro", is_seed.cast("int").alias("is_seed")
     )
 
 
 def pagerank_over_documents(docs: DataFrame, *, n_iter: int = 5) -> DataFrame:
     """documents -> (doc_id, rank_micro, in_degree): the composed job.
 
-    synthesize HTML -> parse outlinks -> iterate rank, joined with the
-    in-degree so the output is directly consumable as a curation signal
-    ("rank high, few inlinks" = teleport-propped page).
-
-    Iterates over the bucketed fan table (:func:`_ranks_on_bucketed_fan`
-    with a per-call unique table name) — the scale-correct plan: the
-    edge-sized iteration-invariant side is written once and never
-    re-shuffles, so per-iteration shuffle is O(nodes).  The node-sized
-    result is eagerly checkpointed and the fan table dropped before
-    return (no per-call warehouse leak).  Falls back to the plain loop
-    (bit-identical recurrence, with a ``RuntimeWarning`` naming the
-    cause) only when the fan-table write fails (e.g. no writable
-    warehouse in a read-only deployment).
+    synthesize HTML -> parse outlinks -> :func:`pagerank`, joined with
+    the in-degree so the output is directly consumable as a curation
+    signal ("rank high, few inlinks" = teleport-propped page).
     """
-    html = derive_linkgraph_html_from_documents(docs)
-    edges = extract_outlinks(html)
-    ranks = _ranks_on_bucketed_fan(
-        edges,
-        lambda fan: _iterate_ranks(
-            docs.select("doc_id"), fan, n_iter=n_iter, merge_hint=True
-        ),
-    )
-    if ranks is None:
-        ranks = pagerank(docs, edges, n_iter=n_iter)
+    edges = extract_outlinks(derive_linkgraph_html_from_documents(docs))
     # in-degree directly from the edges: degree_stats would redundantly
     # re-aggregate the out-degree pagerank already computed and discard it
     ind = edges.groupBy(F.col("dst_doc_id").alias("doc_id")).agg(
         F.count("*").alias("in_degree")
     )
-    return ranks.join(ind, "doc_id", "left").select(
+    return pagerank(docs, edges, n_iter=n_iter).join(ind, "doc_id", "left").select(
         "doc_id",
         "rank_micro",
         F.coalesce("in_degree", F.lit(0)).alias("in_degree"),
@@ -454,69 +456,6 @@ def anchor_text_cap_audit(
     )
 
 
-def _write_fan_table(edges: DataFrame, *, table: str) -> None:
-    """Write the iteration-invariant (src, dst, outdeg) fan table ONCE,
-    bucketed+sorted on the join key, into the session's warehouse.
-
-    The fan is edge-sized: in the plain loop it re-shuffles into the
-    join every round (per-iteration shuffle O(edges + nodes)); read
-    from the buckets in place, only the node-sized ranks side shuffles
-    (O(nodes)) — the repeated-fact-join bucketing strategy of
-    SURVEY.md §4.3, applied to an iterative graph job.
-
-    This is the only step that needs a writable warehouse/catalog —
-    callers that want a plain-loop fallback scope their try/except to
-    THIS call alone, so a failure inside the rank iteration itself is
-    never mislabeled "warehouse unavailable" (and never silently
-    recomputed on the slower plan)."""
-    _fan_table(edges).write.mode("overwrite").bucketBy(
-        FAN_BUCKETS, "src_doc_id"
-    ).sortBy("src_doc_id").saveAsTable(table)
-
-
-def _ranks_on_bucketed_fan(edges: DataFrame, iterate) -> DataFrame | None:
-    """write -> iterate(fan) -> drop lifecycle of a per-call fan table.
-
-    Returns ``None`` iff the fan-table WRITE failed (no writable
-    warehouse — the only condition a plain-loop fallback is for),
-    after a ``RuntimeWarning`` naming the cause so a bench never
-    silently times the re-shuffling plan under the bucketed label.
-    Failures inside the rank iteration itself propagate untouched.
-    The node-sized result is eagerly checkpointed, severing the plan's
-    reference to the fan table so it can drop before return (no
-    per-call warehouse leak); a DROP failure downgrades to a warning —
-    an audible leak — rather than masking the computed ranks."""
-    import uuid
-    import warnings
-
-    spark = edges.sparkSession
-    table = f"pagerank_fan_{uuid.uuid4().hex[:12]}"
-    try:
-        _write_fan_table(edges, table=table)
-    except Exception as exc:  # noqa: BLE001 — fallback must be audible
-        warnings.warn(
-            "bucketed fan table unavailable "
-            f"({type(exc).__name__}: {exc}); falling back to the plain "
-            "per-iteration edge-shuffle loop",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-        return None
-    try:
-        return iterate(spark.table(table)).localCheckpoint()
-    finally:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-        except Exception as exc:  # noqa: BLE001 — never mask the ranks
-            warnings.warn(
-                f"fan table {table} could not be dropped "
-                f"({type(exc).__name__}: {exc}); it leaks in the "
-                "warehouse",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-
-
 # KMV-ball harmonic centrality (HyperBall structure, Boldi & Vigna
 # "In-Core Computation of Geometric Centralities with HyperBall", with
 # the HLL counter swapped for a k-minimum-values sketch so every state
@@ -654,23 +593,17 @@ def harmonic_centrality_kmv(
         md5_hash31_col,
     )
 
-    cur = nodes.select(
-        "doc_id",
-        F.array(md5_hash31_col(F.col("doc_id"))).alias("sketch"),
-        F.lit(1).cast("bigint").alias("est"),
-        F.lit(0).cast("bigint").alias("harmonic_milli"),
-    )
-    for t in range(1, n_iter + 1):
-        merged = _merge_ball_sketches(
+    # single precomputed BIGINT literal: (k-1) * M31 written as an
+    # int-literal product would multiply as INT and THROW under ANSI
+    num = (k - 1) * M31
+    est_t = F.when(
+        F.size("sketch") < k, F.size("sketch").cast("bigint")
+    ).otherwise(F.expr(f"{num} div element_at(sketch, {k})"))
+
+    def step(i, cur, edges):
+        stepped = _merge_ball_sketches(
             cur, edges, k=k, n_salts=n_salts, merge=merge
-        )
-        # single precomputed BIGINT literal: (k-1) * M31 written as an
-        # int-literal product would multiply as INT and THROW under ANSI
-        num = (k - 1) * M31
-        est_t = F.when(
-            F.size("sketch") < k, F.size("sketch").cast("bigint")
-        ).otherwise(F.expr(f"{num} div element_at(sketch, {k})"))
-        stepped = merged.select(
+        ).select(
             "doc_id",
             "sketch",
             "harmonic_milli",
@@ -678,46 +611,61 @@ def harmonic_centrality_kmv(
             (F.greatest(F.lit(0).cast("bigint"), est_t - F.col("est")) * 1000)
             .alias("_gain_milli"),
         )
-        cur = stepped.select(
+        return stepped.select(
             "doc_id",
             "sketch",
             F.col("_est_t").alias("est"),
             (
-                F.col("harmonic_milli") + F.expr(f"_gain_milli div {t}")
+                F.col("harmonic_milli") + F.expr(f"_gain_milli div {i + 1}")
             ).alias("harmonic_milli"),
-        ).localCheckpoint(eager=False)
+        )
+
+    cur = iterate_rounds(
+        [(edges, "src_doc_id")],
+        lambda edges: nodes.select(
+            "doc_id",
+            F.array(md5_hash31_col(F.col("doc_id"))).alias("sketch"),
+            F.lit(1).cast("bigint").alias("est"),
+            F.lit(0).cast("bigint").alias("harmonic_milli"),
+        ),
+        step,
+        rounds=n_iter,
+    )
     return cur.select("doc_id", F.col("est").alias("n_reached_est"), "harmonic_milli")
 
 
 def _half_step(
-    node_ids: DataFrame,
+    state: DataFrame,
     edges: DataFrame,
-    scores: DataFrame,
     *,
+    pull: str,
+    into: str,
     join_on: str,
     group_on: str,
 ) -> DataFrame:
-    """One HITS half-step: pull ``scores`` across the edges from
-    ``join_on`` to ``group_on``, sum per target, then rescale so the
-    max lands in (500_000, 1_000_000] — integer division by
-    ``max_raw div 10^6 + 1``, so no multiplication ever happens and the
-    raw sums (<= E * 10^6, < 2^63 through 10^12 edges) are the largest
-    values in the job.  Returns every node (absent = 0)."""
+    """One HITS half-step over the (doc_id, auth_micro, hub_micro) state:
+    pull column ``pull`` across the edges from ``join_on`` to
+    ``group_on``, sum per target, then rescale so the max lands in
+    (500_000, 1_000_000] — integer division by ``max_raw div 10^6 + 1``,
+    so no multiplication ever happens and the raw sums (<= E * 10^6,
+    < 2^63 through 10^12 edges) are the largest values in the job.  The
+    result replaces column ``into`` for every node (absent = 0)."""
     raw = (
-        edges.join(scores, edges[join_on] == scores.doc_id)
-        .select(F.col(group_on).alias("doc_id"), F.col("score"))
+        edges.join(state, edges[join_on] == state.doc_id)
+        .select(F.col(group_on).alias("doc_id"), F.col(pull).alias("score"))
         .groupBy("doc_id")
         .agg(F.sum("score").alias("raw"))
     )
     scale = raw.agg(
         F.coalesce(F.max("raw"), F.lit(0).cast("bigint")).alias("_mx")
     ).select((F.expr("_mx div 1000000") + 1).alias("_s"))
+    new = F.expr("coalesce(raw, 0) div _s")
     return (
-        node_ids.join(raw, "doc_id", "left")
+        state.join(raw, "doc_id", "left")
         .crossJoin(F.broadcast(scale))
         .select(
             "doc_id",
-            F.expr("coalesce(raw, 0) div _s").alias("score"),
+            *(new.alias(c) if c == into else c for c in ("auth_micro", "hub_micro")),
         )
     )
 
@@ -743,59 +691,77 @@ def hits_scores(
     (high hub) from canonical content (high auth) — the classic pair of
     crawl-quality priors.
 
-    Scale: one half-step is edges⋈scores (key-partitioned shuffle) +
-    groupBy target (constant-size SUM buffers — no hot-key state, unlike
-    a collect_list) + a node-sized left join + a 1-row broadcast for the
-    normalizer.  Raw sums <= E * 10^6 hold in BIGINT through 10^12
-    edges; each round is cut with localCheckpoint (plan-doubling trap,
-    see pagerank).  DuckDB twin: generated MATERIALIZED-CTE chain
-    (ORACLES["hits_scores"]).
+    Scale: each half-step is one :func:`iterate_rounds` round:
+    edges⋈state (key-partitioned shuffle, or a broadcast of the
+    node-sized state where AQE picks one) + groupBy target
+    (constant-size SUM buffers — no hot-key state, unlike a
+    collect_list) + a node-sized left join + a 1-row broadcast for the
+    normalizer.  The edges are not pinned: the two pulls join on
+    different keys, and two pinned copies (one per key) measured slower
+    than the per-round edge shuffle at 300k docs on local[4].  Raw sums
+    <= E * 10^6 hold in BIGINT through 10^12 edges.  n_iter=0 returns
+    the init vector (both scores 10^6).  DuckDB twin: generated
+    MATERIALIZED-CTE chain (ORACLES["hits_scores"]).
     """
-    node_ids = nodes.select("doc_id")
-    hubs = node_ids.select(
-        "doc_id", F.lit(INIT_MICRO).cast("bigint").alias("score")
+    halves = (
+        dict(pull="hub_micro", into="auth_micro", join_on="src_doc_id",
+             group_on="dst_doc_id"),
+        dict(pull="auth_micro", into="hub_micro", join_on="dst_doc_id",
+             group_on="src_doc_id"),
     )
-    # n_iter=0 would leave auths unbound below (AttributeError, an
-    # unrelated-looking crash); the zero-iteration HITS baseline is the
-    # init vector, same graceful degradation as pagerank's _iterate_ranks
-    auths = hubs
-    for _ in range(n_iter):
-        auths = _half_step(
-            node_ids, edges, hubs, join_on="src_doc_id", group_on="dst_doc_id"
-        ).localCheckpoint(eager=False)
-        hubs = _half_step(
-            node_ids, edges, auths, join_on="dst_doc_id", group_on="src_doc_id"
-        ).localCheckpoint(eager=False)
-    return (
-        auths.withColumnRenamed("score", "auth_micro")
-        .join(hubs.withColumnRenamed("score", "hub_micro"), "doc_id")
-        .select("doc_id", "auth_micro", "hub_micro")
+    init = F.lit(INIT_MICRO).cast("bigint")
+    return iterate_rounds(
+        [],
+        # a fresh doc_id attribute: edges derived from ``nodes`` share its
+        # doc_id, and the self-join rewrite then differs between the two
+        # reads of a half-step's sums, so their shuffle is not reused and
+        # the edges are derived twice per half-step
+        lambda: nodes.select(
+            F.col("doc_id").alias("doc_id"),
+            init.alias("auth_micro"),
+            init.alias("hub_micro"),
+        ),
+        lambda i, state: _half_step(state, edges, **halves[i % 2]),
+        rounds=2 * n_iter,
     )
 
 
-def link_components(
-    nodes: DataFrame, edges: DataFrame, *, n_iter: int = 4
+def _min_label_round(labels: DataFrame, und: DataFrame) -> DataFrame:
+    """label'(v) = min(label(v), min over neighbors u of label(u))."""
+    nmin = (
+        und.join(labels, und.src_doc_id == labels.doc_id)
+        .select(F.col("dst_doc_id").alias("doc_id"), F.col("label").alias("nl"))
+        .groupBy("doc_id")
+        .agg(F.min("nl").alias("nmin"))
+    )
+    return labels.join(nmin, "doc_id", "left").select(
+        "doc_id",
+        F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
+            "label"
+        ),
+    )
+
+
+def min_labels(
+    edges: DataFrame,
+    node_ids: DataFrame | None = None,
+    *,
+    rounds: int,
+    converge: bool = False,
 ) -> DataFrame:
-    """Fixed-iteration weakly-connected components by min-label.
+    """Weakly-connected components by min-label -> (doc_id, label).
 
-    -> (doc_id, component_id): after ``n_iter`` rounds of
-    ``label'(v) = min(label(v), min over undirected neighbors u of
-    label(u))`` with labels initialized to doc_id.  The crawl-side
-    twin of ``dedup.duplicate_clusters`` (which converges on near-dup
-    pair edges): component structure drives crawl sharding and
-    mirror/site-family detection.  Fixed rounds instead of a
-    convergence loop make the intermediate state a pure function of
-    the input, so the DuckDB chained-CTE twin matches BIT-EXACTLY even
-    on graphs whose diameter exceeds ``n_iter`` (labels are then not
-    yet fully propagated on both sides alike — documented semantics,
-    not an approximation mismatch).
-
-    Scale: the undirected edge set is edges ∪ reverse(edges) distinct
-    (one symmetrization shuffle, done once); each round is a
-    key-partitioned join + a constant-buffer MIN agg + a node-sized
-    left join, cut with localCheckpoint (plan-doubling trap).  Labels
-    only decrease, so values stay in the doc_id domain — no overflow
-    concern at any scale.
+    Labels start at doc_id; each round every node takes the min label
+    among itself and its undirected neighbors (the simplified small-star
+    step of Kiveris et al., "Connected Components in MapReduce and
+    Beyond", SoCC 2014), so labels reach the component minimum in at
+    most diameter rounds.  ``edges`` (src_doc_id, dst_doc_id) is read as
+    undirected: edges ∪ reverse(edges) distinct, pinned on src once.
+    ``node_ids`` (doc_id) defaults to the nodes the edges touch.  Fixed
+    mode runs ``rounds`` rounds; ``converge=True`` stops at a round that
+    changes no label and raises when ``rounds`` run out first
+    (:func:`iterate_rounds`).  Labels only decrease, so values stay in
+    the doc_id domain — no overflow concern at any scale.
     """
     und = (
         edges.select("src_doc_id", "dst_doc_id")
@@ -806,30 +772,39 @@ def link_components(
             )
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    node_ids = nodes.select("doc_id")
-    labels = node_ids.select("doc_id", F.col("doc_id").alias("component_id"))
-    for _ in range(n_iter):
-        neigh_min = (
-            und.join(labels, und.src_doc_id == labels.doc_id)
-            .select(
-                F.col("dst_doc_id").alias("doc_id"),
-                F.col("component_id").alias("nl"),
-            )
-            .groupBy("doc_id")
-            .agg(F.min("nl").alias("nmin"))
-        )
-        labels = (
-            node_ids.join(neigh_min, "doc_id", "left")
-            .join(labels, "doc_id")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("component_id"),
-                    F.coalesce(F.col("nmin"), F.col("component_id")),
-                ).alias("component_id"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return labels
+
+    def init(und: DataFrame) -> DataFrame:
+        ids = node_ids
+        if ids is None:
+            ids = und.select(F.col("src_doc_id").alias("doc_id")).distinct()
+        return ids.select("doc_id", F.col("doc_id").alias("label"))
+
+    return iterate_rounds(
+        [(und, "src_doc_id")],
+        init,
+        lambda i, labels, und: _min_label_round(labels, und),
+        rounds=rounds,
+        converge=converge,
+    )
+
+
+def link_components(
+    nodes: DataFrame, edges: DataFrame, *, n_iter: int = 4
+) -> DataFrame:
+    """Fixed-iteration weakly-connected components by min-label.
+
+    -> (doc_id, component_id): :func:`min_labels` after ``n_iter``
+    rounds, labels initialized to doc_id.  The crawl-side twin of
+    ``dedup.duplicate_clusters`` (the same function run to convergence
+    on near-dup pair edges): component structure drives crawl sharding
+    and mirror/site-family detection.  Fixed rounds instead of a
+    convergence loop make the intermediate state a pure function of the
+    input, so the DuckDB chained-CTE twin matches BIT-EXACTLY even on
+    graphs whose diameter exceeds ``n_iter`` (labels are then not yet
+    fully propagated on both sides alike — documented semantics, not an
+    approximation mismatch).
+    """
+    return min_labels(edges, nodes.select("doc_id"), rounds=n_iter).select(
+        "doc_id", F.col("label").alias("component_id")
+    )

@@ -23,11 +23,11 @@ Scale design:
     sources 301-ing into one URL — fans in on the VALUE side only; no
     join key ever multiplies.  The power-law fan-in that hot-keys
     anchor aggregation is a non-event here.
-  - ``edges`` is iteration-invariant, so PageRank's bucketed-fan
-    trick (``linkgraph._write_fan_table``: write the fan side once,
-    bucketed+sorted on the join key) applies verbatim when ``max_hops`` is large; at the
-    default 4 hops the plain loop shuffles the state side only after
-    AQE reuses the first edge exchange.
+  - ``edges`` is iteration-invariant, so the graph loops' pinning
+    (``linkgraph._pin``: partition and sort the side on its join key
+    and persist it once) applies verbatim when ``max_hops`` is large;
+    at the default 4 hops the plain loop shuffles the state side only
+    after AQE reuses the first edge exchange.
   - No ``collect``; loops/truncations surface as ``status`` values and
     are COUNTED by :func:`redirect_audit`, never silently dropped
     (the ``warc_malformed_audit`` policy).

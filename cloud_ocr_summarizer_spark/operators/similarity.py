@@ -444,8 +444,36 @@ def pq_topk(
     n_codebook: int = 16,
     rerank: int = 4,
 ) -> DataFrame:
-    """Product-quantization ANN (Jegou et al., TPAMI 2011): ADC candidate
-    scoring over 8-byte codes + exact re-rank of the top ``rerank*k``.
+    """Product-quantization ANN (Jegou et al., TPAMI 2011): the index
+    build (:func:`pq_codebook` + :func:`pq_encode` over the corpus), then
+    :func:`pq_search`.  Output: (query_id, rank, neighbor_id, cosine) —
+    rank <= k.
+    """
+    kw = {"id_col": id_col, "emb_col": emb_col}
+    codebook_row = pq_codebook(corpus, n_codebook=n_codebook, **kw)
+    codes = pq_encode(corpus, codebook_row, dims=dims, m=m, **kw)
+    return pq_search(
+        queries, corpus, codebook_row, codes, k=k, dims=dims, m=m,
+        rerank=rerank, **kw,
+    )
+
+
+def pq_search(
+    queries: DataFrame,
+    corpus: DataFrame,
+    codebook_row: DataFrame,
+    codes: DataFrame,
+    *,
+    k: int,
+    id_col: str,
+    emb_col: str,
+    dims: int,
+    m: int,
+    rerank: int,
+) -> DataFrame:
+    """The PQ query phase over a built index: ADC candidate scoring over
+    the (id, codes) of :func:`pq_encode` + exact re-rank of the top
+    ``rerank*k`` against ``corpus``'s raw vectors.
 
     The 100 TB memory path: the scan side holds ``m`` small ints per
     vector (codes) instead of ``dims`` floats — a 32x shrink at
@@ -464,12 +492,7 @@ def pq_topk(
             "dimensions would be silently ignored by encode and ADC"
         )
     sub = dims // m
-    codebook_row = pq_codebook(
-        corpus, id_col=id_col, emb_col=emb_col, n_codebook=n_codebook
-    )
-    codes = pq_encode(
-        corpus, codebook_row, id_col=id_col, emb_col=emb_col, dims=dims, m=m
-    ).select(F.col("id").alias("neighbor_id"), "codes")
+    codes = codes.select(F.col("id").alias("neighbor_id"), "codes")
 
     q = (
         queries.select(

@@ -3060,8 +3060,8 @@ def q_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/linkgraph.pagerank_personalized): initial mass and the
     teleport term live only on the seed set doc_id % 20 == 0, so rank
     flows outward from trusted pages — the TrustRank-style quality
-    prior.  Same integer recurrence body as `pagerank` (shared
-    _iterate_ranks); DuckDB twin is the same generated MATERIALIZED-CTE
+    prior.  It is `pagerank` with a seed predicate (one shared round
+    body, _rank_round); DuckDB twin is the same generated MATERIALIZED-CTE
     chain with the seed-cased init/teleport expressions."""
     from cloud_ocr_summarizer_spark.operators.linkgraph import (
         derive_linkgraph_html_from_documents,

@@ -458,6 +458,30 @@ def test_duplicate_clusters_transitive_chains(spark):
     assert len(got) == 16  # every node labeled exactly once
 
 
+def test_duplicate_clusters_raises_when_rounds_run_out(spark):
+    """A chain deeper than max_iterations still moves labels when the
+    cap runs out: raise, and unpersist the pinned edges anyway."""
+    import pytest
+
+    from cloud_ocr_summarizer_spark.operators.dedup import duplicate_clusters
+
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "id_a long, id_b long"
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(RuntimeError, match="no fixpoint in 3 rounds"):
+        duplicate_clusters(df, max_iterations=3)
+    after = jsc.getPersistentRDDs()
+    assert [
+        i for i in after.keySet()
+        if i not in before and not after.get(i).rdd().isLocallyCheckpointed()
+    ] == []
+    # the same chain converges once the cap covers its diameter
+    got = {r["cluster_id"] for r in duplicate_clusters(df, max_iterations=13).collect()}
+    assert got == {0}
+
+
 def test_simhash_blank_docs_emit_no_pairs(spark):
     """Zero-token docs all hash to the identical zero fingerprint; they
     must be excluded, not emitted as k^2/2 bogus hamming-0 pairs."""

@@ -29,10 +29,6 @@ def _docs(spark, n=12):
     )
 
 
-def _fail_fan_write(edges, *, table):
-    raise RuntimeError("warehouse is read-only")
-
-
 def _expected_edges(n):
     edges = set()
     for d in range(n):
@@ -236,34 +232,66 @@ def test_harmonic_centrality_merge_is_two_level(spark):
     assert "Aggregate [doc_id" in plan  # level 2: per-dst merge
 
 
-def test_pagerank_bucketed_matches_plain_and_skips_fan_shuffle(spark):
-    n = 12
-    docs = _docs(spark, n)
-    edges = extract_outlinks(derive_linkgraph_html_from_documents(docs))
-    plain = {r.doc_id: r.rank_micro for r in pagerank(docs, edges, n_iter=3).collect()}
-    linkgraph._write_fan_table(edges, table="pagerank_fan_test")
-    try:
-        fan_t = spark.table("pagerank_fan_test")
-        bucketed_df = linkgraph._iterate_ranks(
-            docs.select("doc_id"), fan_t, n_iter=3, merge_hint=True
-        )
-        got = {r.doc_id: r.rank_micro for r in bucketed_df.collect()}
-        assert got == plain  # bit-identical recurrence
-        # plan property: the per-iteration join reads the bucketed fan
-        # in place (no Exchange between the bucketed scan and the join)
-        ranks0 = docs.select(
-            "doc_id", F.lit(1_000_000).cast("bigint").alias("rank_micro")
-        )
-        j = fan_t.hint("merge").join(ranks0, fan_t.src_doc_id == ranks0.doc_id)
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan
-        fan_branch = plan[plan.index("pagerank_fan_test"):]
-        assert "Exchange" not in fan_branch.splitlines()[0]
-        # exactly ONE exchange feeds the join: the node-sized ranks side
-        join_part = plan[plan.index("SortMergeJoin"):]
-        assert join_part.count("Exchange hashpartitioning") == 1
-    finally:
-        spark.sql("DROP TABLE IF EXISTS pagerank_fan_test")
+@pytest.fixture
+def no_broadcast(spark):
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
+def _pinned_round_ops(spark):
+    """The operators whose rounds read a pinned edge side (all but
+    HITS), each as it runs in the library, at one round where that is a
+    parameter."""
+    from cloud_ocr_summarizer_spark.operators.dedup import duplicate_clusters
+
+    docs = _docs(spark, 12)
+    edges = extract_outlinks(derive_linkgraph_html_from_documents(docs)).localCheckpoint()
+    pairs = edges.select(F.col("src_doc_id").alias("id_a"),
+                         F.col("dst_doc_id").alias("id_b"))
+    return {
+        "pagerank": lambda: pagerank(docs, edges, n_iter=1),
+        "pagerank_personalized": lambda: linkgraph.pagerank_personalized(
+            docs, edges, seed_mod=4, n_iter=1),
+        "harmonic_salted": lambda: linkgraph.harmonic_centrality_kmv(
+            docs, edges, k=4, n_iter=1, n_salts=8, merge="salted"),
+        "harmonic_window": lambda: linkgraph.harmonic_centrality_kmv(
+            docs, edges, k=4, n_iter=1, merge="window"),
+        "components": lambda: linkgraph.link_components(docs, edges, n_iter=1),
+        "dedup_clusters": lambda: duplicate_clusters(pairs),
+    }
+
+
+def _assert_rounds_read_pinned_edges(graph_rounds, name):
+    assert graph_rounds, name
+    for r in graph_rounds:
+        assert r.pin_keys == ["src_doc_id"], (name, r.pin_keys)
+        assert len(r.pinned_joins) == 1, (name, r.pinned_joins)
+        on_edges, on_state = r.pinned_joins[0]
+        assert on_edges == 0, name  # the pinned edge side is read in place
+        assert on_state >= 1, name  # only the node-sized state shuffles
+
+
+def test_graph_rounds_read_pinned_edges_without_exchange(
+    spark, no_broadcast, graph_rounds
+):
+    """Every round of PageRank, personalized PageRank, a salted and a
+    window harmonic merge, link_components and duplicate_clusters, as
+    the operators run them: the state⋈edges join has no Exchange and no
+    Sort on the pinned edge side; only the node-sized state side
+    shuffles."""
+    for name, op in _pinned_round_ops(spark).items():
+        graph_rounds.clear()
+        op()
+        _assert_rounds_read_pinned_edges(graph_rounds, name)
+
+
+def test_pinned_edges_are_not_broadcast(spark, graph_rounds):
+    """Under the default broadcast threshold a pinned side small enough
+    to broadcast is still read in place by a sort-merge join, not
+    rebuilt into a broadcast hash table every round."""
+    _pinned_round_ops(spark)["pagerank"]()
+    _assert_rounds_read_pinned_edges(graph_rounds, "pagerank")
 
 
 def test_harmonic_centrality_matches_pure_python(spark):
@@ -303,33 +331,86 @@ def test_harmonic_centrality_matches_pure_python(spark):
     assert got == {d: (est[d], harm[d]) for d in range(n)}
 
 
-def test_pagerank_over_documents_bucketed_default_matches_plain(
-    spark, monkeypatch
-):
-    import warnings
+def test_graph_ops_unpersist_what_they_pin(spark):
+    """After each graph op's result is collected, no RDD the call
+    persisted is still registered: the only new persistent RDDs are the
+    rounds' local checkpoints."""
+    from cloud_ocr_summarizer_spark.operators.dedup import duplicate_clusters
 
     docs = _docs(spark, 10)
+    edges = extract_outlinks(derive_linkgraph_html_from_documents(docs))
+    pairs = edges.select(F.col("src_doc_id").alias("id_a"),
+                         F.col("dst_doc_id").alias("id_b"))
+    jsc = spark.sparkContext._jsc
+    ops = {
+        "pagerank": lambda: pagerank(docs, edges, n_iter=2),
+        "pagerank_personalized": lambda: linkgraph.pagerank_personalized(
+            docs, edges, seed_mod=4, n_iter=2),
+        "pagerank_over_documents": lambda: pagerank_over_documents(docs, n_iter=2),
+        "hits": lambda: linkgraph.hits_scores(docs, edges, n_iter=2),
+        "harmonic": lambda: linkgraph.harmonic_centrality_kmv(docs, edges, k=4, n_iter=2),
+        "components": lambda: linkgraph.link_components(docs, edges, n_iter=2),
+        "dedup_clusters": lambda: duplicate_clusters(pairs),
+    }
+    for name, op in ops.items():
+        before = set(jsc.getPersistentRDDs().keySet())
+        assert op().collect(), name
+        after = jsc.getPersistentRDDs()
+        leaked = [
+            i for i in after.keySet()
+            if i not in before and not after.get(i).rdd().isLocallyCheckpointed()
+        ]
+        assert leaked == [], name
+
+
+def test_pagerank_over_documents_bucketed_default_matches_plain(spark):
+    """The default composed job (the pinned-edge loop that replaced the
+    bucketed fan table) runs without a fallback warning and returns the
+    plain recurrence's ranks with the edge set's in-degrees."""
+    import warnings
+
+    n = 10
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        buck = {
-            (r.doc_id, r.rank_micro, r.in_degree)
-            for r in pagerank_over_documents(docs, n_iter=2).collect()
+        got = {
+            r.doc_id: (r.rank_micro, r.in_degree)
+            for r in pagerank_over_documents(_docs(spark, n), n_iter=2).collect()
         }
-    # the bucketed path ran (no fallback warning) ...
     assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
-    # ... and its per-call fan table was dropped, not leaked
-    fans = [t.name for t in spark.catalog.listTables()
-            if t.name.startswith("pagerank_fan_")]
-    assert fans == []
-    # a failed fan-table write is the one fallback to the plain loop: it
-    # warns and returns the same rows
-    monkeypatch.setattr(linkgraph, "_write_fan_table", _fail_fan_write)
-    with pytest.warns(RuntimeWarning, match="bucketed fan table unavailable"):
-        plain = {
-            (r.doc_id, r.rank_micro, r.in_degree)
-            for r in pagerank_over_documents(docs, n_iter=2).collect()
+    ranks = _python_pagerank(n, n_iter=2)
+    edges = _expected_edges(n)
+    assert got == {
+        d: (ranks[d], sum(1 for _, t in edges if t == d)) for d in range(n)
+    }
+
+
+def test_pagerank_personalized_bucketed_default_matches_plain(spark):
+    """Personalized PageRank on the default path runs without a fallback
+    warning, and with every node a seed it is exactly plain PageRank."""
+    import warnings
+
+    from cloud_ocr_summarizer_spark.operators.linkgraph import (
+        pagerank_personalized,
+    )
+
+    docs = _docs(spark, 10)
+    edges_df = extract_outlinks(derive_linkgraph_html_from_documents(docs))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        seeded = pagerank_personalized(docs, edges_df, seed_mod=4, n_iter=2)
+        assert seeded.count() == 10
+        every = {
+            (r.doc_id, r.rank_micro, r.is_seed)
+            for r in pagerank_personalized(
+                docs, edges_df, seed_mod=1, n_iter=2
+            ).collect()
         }
-    assert buck == plain
+    assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
+    plain = {
+        (r.doc_id, r.rank_micro, 1)
+        for r in pagerank(docs, edges_df, n_iter=2).collect()
+    }
+    assert every == plain
 
 
 def test_hot_dst_synthesis_concentrates_edges_on_doc0(spark):
@@ -402,42 +483,6 @@ def test_pagerank_personalized_matches_pure_python(spark):
     assert all(
         rm == 0 for d, (rm, s) in got.items() if s == 0 and ranks[d] == 0
     )
-
-
-def test_pagerank_personalized_bucketed_default_matches_plain(
-    spark, monkeypatch
-):
-    import warnings
-
-    from cloud_ocr_summarizer_spark.operators.linkgraph import (
-        pagerank_personalized,
-    )
-
-    docs = _docs(spark, 10)
-    edges_df = extract_outlinks(derive_linkgraph_html_from_documents(docs))
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        buck = {
-            (r.doc_id, r.rank_micro, r.is_seed)
-            for r in pagerank_personalized(
-                docs, edges_df, seed_mod=4, n_iter=2
-            ).collect()
-        }
-    # the bucketed path ran (no fallback warning) and dropped its fan
-    assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
-    fans = [t.name for t in spark.catalog.listTables()
-            if t.name.startswith("pagerank_fan_")]
-    assert fans == []
-    # a failed fan-table write falls back to the plain loop, audibly
-    monkeypatch.setattr(linkgraph, "_write_fan_table", _fail_fan_write)
-    with pytest.warns(RuntimeWarning, match="bucketed fan table unavailable"):
-        plain = {
-            (r.doc_id, r.rank_micro, r.is_seed)
-            for r in pagerank_personalized(
-                docs, edges_df, seed_mod=4, n_iter=2
-            ).collect()
-        }
-    assert buck == plain
 
 
 def test_window_merge_variants_bit_identical(spark):
@@ -533,6 +578,20 @@ def test_hits_sink_node_has_zero_hub(spark):
     assert rows[0].auth_micro == 0 and rows[0].hub_micro > 0
     # the three identical hubs tie exactly (partitioning-independent)
     assert rows[0].hub_micro == rows[1].hub_micro == rows[2].hub_micro
+
+
+def test_hits_half_step_derives_edges_once(spark, graph_rounds, tmp_path):
+    """A half-step reads its per-node sums twice (the new scores and
+    their max).  With the edges derived from the same documents table as
+    the nodes, the second read must reuse the first one's shuffle: the
+    executed last round derives the edges once, not once per read."""
+    _docs(spark, 12).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    edges = extract_outlinks(derive_linkgraph_html_from_documents(docs))
+    linkgraph.hits_scores(docs, edges, n_iter=1)
+    final = graph_rounds[-1].executed.toString().split("Initial Plan")[0]
+    assert "Final Plan" in final
+    assert final.count("Generate") == 1, final
 
 
 def test_hits_partitioning_invariant(spark):

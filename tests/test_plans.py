@@ -274,40 +274,34 @@ def test_sitemap_parse_stage_is_rowlocal(spark, Q):
         assert "Join" not in p, q.__name__
 
 
-def test_hits_half_step_shuffles_are_key_partitioned(spark):
-    """One HITS half-step (the composed job checkpoints each round, so
-    the final plan shows only the last join): the edge⋈scores pull and
-    the node-sized left join are key-partitioned — the ONLY broadcast
-    is the 1-row normalizer scalar (a BroadcastNestedLoopJoin by
-    construction; nothing corpus-sized ever broadcasts)."""
-    from pyspark.sql import functions as F
-
+def test_hits_half_step_shuffles_are_key_partitioned(spark, graph_rounds):
+    """Each HITS half-step as hits_scores runs it (one round each, the
+    authority pull joining on src, then the hub pull on dst): HITS pins
+    no edge copy, the edge⋈state pull and the node-sized left join are
+    key-partitioned, and the ONLY broadcast is the 1-row normalizer
+    scalar (a BroadcastNestedLoopJoin by construction; nothing
+    corpus-sized ever broadcasts)."""
     from cloud_ocr_summarizer_spark.operators import linkgraph as lg
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         docs = spark.read.parquet(SF + "/documents.parquet")
-        nodes = docs.select("doc_id")
         # plain edges (not the HTML derive, whose own 1-row synthesis
         # broadcast would appear in the lineage and muddy the count)
         edges = spark.createDataFrame(
             [(0, 1), (1, 2)], "src_doc_id long, dst_doc_id long"
         )
-        scores = nodes.select(
-            "doc_id", F.lit(1000000).cast("bigint").alias("score")
-        )
-        p = _plan(
-            lg._half_step(
-                nodes, edges, scores,
-                join_on="src_doc_id", group_on="dst_doc_id",
-            )
-        )
+        lg.hits_scores(docs, edges, n_iter=1)
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    assert p.count("BroadcastNestedLoopJoin") == 1, p
-    assert "SortMergeJoin" in p or "ShuffledHashJoin" in p
-    # exactly one broadcast: the 1-row scalar
-    assert p.count("BroadcastExchange") == 1, p.count("BroadcastExchange")
+    assert len(graph_rounds) == 2
+    for r, join_on in zip(graph_rounds, ("src_doc_id", "dst_doc_id")):
+        p = r.plan
+        assert r.pin_keys == [] and r.pinned_joins == []
+        assert f"SortMergeJoin [{join_on}" in p, p
+        assert p.count("BroadcastNestedLoopJoin") == 1, p
+        # exactly one broadcast: the 1-row scalar
+        assert p.count("BroadcastExchange") == 1, p.count("BroadcastExchange")
 
 
 def test_c4_line_filter_is_zero_shuffle(spark, Q):
